@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from textextract_spark.io.source import fingerprint, source
 from textextract_spark.operators import (
     learned, multimodal, ranking, relational, releases, similarity,
     sketch, textdata, urls)
@@ -42,18 +43,6 @@ def _num_parts(spark: SparkSession) -> int:
     return max(16, spark.sparkContext.defaultParallelism)
 
 
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan spread to defaultParallelism (r7, guide §2.5): the
-    local test corpus is one parquet row group, which would pin the
-    chrome-synthesis / payload-hash scan stage of every extraction and
-    curation driver row to ONE core; a multi-split production scan makes
-    this a no-op. Output-identical: every driver row here ends in an
-    explicit orderBy and the extraction winner agg is payload-free
-    max(struct) — order-independent."""
-    from textextract_spark.operators.sketch import _spread
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 # The fixed chrome wrapping documents.text into an HTML page: extraction
 # strips every part of it and returns exactly trim(text) as one <p> span,
 # which is what makes the extraction driver rows fully SQL-oracle-able.
@@ -67,7 +56,7 @@ _CHROME_POST = ("</p></article><footer><a href=\"/tos\">terms</a>"
 def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize a pages table (input_hint schema) from the driver's
     documents table — deterministic, no external data."""
-    docs = _docs_spread(spark, sf_dir)
+    docs = source(spark, sf_dir, "documents", spread=True)
     html = F.encode(
         F.concat(F.lit(_CHROME_PRE), F.col("text"), F.lit(_CHROME_POST)),
         "UTF-8")
@@ -136,7 +125,7 @@ def _extract_mixed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return doc_id.map(lambda i: build_pdf(
             [f"Document {i}", "flate stream body"], compress=True))
 
-    docs = _docs_spread(spark, sf_dir)
+    docs = source(spark, sf_dir, "documents", spread=True)
     pages = docs.select(
         F.concat(F.lit("docm://"), F.col("doc_id").cast("string"))
          .alias("url"),
@@ -192,7 +181,7 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "digest": pd.Series(digests, dtype="object"),
             })
 
-    docs = (_docs_spread(spark, sf_dir)
+    docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text"))
     out = docs.repartition(8, "doc_id").mapInPandas(
         rt, schema="doc_id long, url string, warc_ts timestamp, "
@@ -220,9 +209,9 @@ def _warc_docs_dir(sf_dir: str) -> str:
     # miss the cache, or this query would read stale archives while the
     # oracle reads the fresh table — an untraceable false red
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
+    mtime_ns, size = fingerprint(src)
     tag = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()).hexdigest()[:12]
+        f"{sf_dir}|{mtime_ns}|{size}".encode()).hexdigest()[:12]
     d = os.path.join(tempfile.gettempdir(), f"textx_warcdocs_v2_{tag}")
     if os.path.isdir(d):
         return d
@@ -321,7 +310,7 @@ def _simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GRAY_K = 8  # a 64-bit sign-stable collision needs every vote sum
     #             within symdiff of a sign boundary, all shifting one
     #             way — astronomically unlikely past a few occurrences
-    docs = (_docs_spread(spark, sf_dir)
+    docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text"))
     eligible = (F.length(F.trim("text")) > 0) & ~sketch._is_spaceless(
         F.trim(F.lower(F.col("text"))))
@@ -377,7 +366,7 @@ def _curate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (md5, min(url)) only, map-side combinable, then an
     AQE-splittable hash-key join back. decisions: drop:extract |
     drop:quality | drop:dup | keep."""
-    docs = (_docs_spread(spark, sf_dir)
+    docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text", "lang"))
     plants = docs.filter(F.col("doc_id") < 10).select(
         (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
@@ -441,7 +430,7 @@ def _curate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE cluster closure."""
     from textextract_spark.pipeline import curation_decisions_neardup
 
-    docs = (_docs_spread(spark, sf_dir)
+    docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text", "lang"))
     exact_plants = docs.filter(F.col("doc_id") < 10).select(
         (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
@@ -484,7 +473,7 @@ def _curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, the add-one char-bigram LM, and the md5 split buckets."""
     from textextract_spark.pipeline import curation_decisions_full
 
-    docs = (_docs_spread(spark, sf_dir)
+    docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text", "lang"))
     exact_plants = docs.filter(F.col("doc_id") < 10).select(
         (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
@@ -529,7 +518,7 @@ def _trainset_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_sequences, pack_sequences_text)
     from textextract_spark.pipeline import curation_decisions_full
 
-    docs = (_docs_spread(spark, sf_dir)
+    docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text", "lang"))
     exact_plants = docs.filter(F.col("doc_id") < 10).select(
         (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")

@@ -3,6 +3,7 @@ oracle_sql() twin matches (row count, columns, order-insensitive values) —
 the same comparison the driver performs at sf0.01."""
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -2468,3 +2469,67 @@ def test_media_memo_dedups_decode_work(monkeypatch):
     f = real(payloads[0], "image")
     assert out.iloc[0]["width"] == f["width"]
     assert out.iloc[0]["height"] == f["height"]
+
+
+# -- io.source.memo: the one fingerprinted, FIFO-bounded model memo -----------
+
+@pytest.fixture
+def fresh_memo(monkeypatch):
+    """memo over an empty store, so these checks neither see nor evict
+    the models other tests in the session memoized."""
+    from textextract_spark.io import source as source_mod
+    monkeypatch.setattr(source_mod, "_MEMO", {})
+    return source_mod.memo
+
+
+def _counting():
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+    return calls, build
+
+
+def test_memo_builds_once_per_fingerprint(spark, tmp_path, fresh_memo):
+    f = tmp_path / "documents.parquet"
+    f.write_bytes(b"v1")
+    calls, build = _counting()
+    assert fresh_memo(("m", str(tmp_path)), str(f), build) == 1
+    assert fresh_memo(("m", str(tmp_path)), str(f), build) == 1
+    assert len(calls) == 1
+
+
+def test_memo_rebuilds_when_file_rewritten(spark, tmp_path, fresh_memo):
+    f = tmp_path / "documents.parquet"
+    f.write_bytes(b"v1")
+    calls, build = _counting()
+    assert fresh_memo(("m",), str(f), build) == 1
+    old_ns = f.stat().st_mtime_ns
+    f.write_bytes(b"v2, regenerated")
+    os.utime(f, ns=(old_ns + 10**9, old_ns + 10**9))
+    assert fresh_memo(("m",), str(f), build) == 2
+    assert fresh_memo(("m",), str(f), build) == 2
+
+
+def test_memo_ninth_key_evicts_oldest(spark, tmp_path, fresh_memo):
+    from textextract_spark.io.source import MEMO_MAX
+    f = tmp_path / "documents.parquet"
+    f.write_bytes(b"v1")
+    for i in range(MEMO_MAX + 1):
+        fresh_memo(("m", i), str(f), lambda i=i: i)
+
+    def unexpected():
+        raise AssertionError("cached key rebuilt")
+    assert [fresh_memo(("m", i), str(f), unexpected)
+            for i in range(1, MEMO_MAX + 1)] == list(range(1, MEMO_MAX + 1))
+    calls, build = _counting()
+    assert fresh_memo(("m", 0), str(f), build) == 1
+    assert len(calls) == 1
+
+
+def test_memo_non_local_path_builds_uncached(spark, fresh_memo):
+    calls, build = _counting()
+    path = "s3://bucket/sf/documents.parquet"
+    assert fresh_memo(("m", "s3://bucket/sf"), path, build) == 1
+    assert fresh_memo(("m", "s3://bucket/sf"), path, build) == 2

@@ -357,8 +357,9 @@ def test_lr_scoring_model_rides_closure_not_join(spark, sf_dir):
     """The LR model is a literal map in the plan (MLlib-style driver-
     held state re-broadcast per iteration) — scoring needs NO join
     against a weights table and no window."""
+    from textextract_spark.io.source import source
     from textextract_spark.operators import learned
-    docs = learned._docs(spark, sf_dir)
+    docs = source(spark, sf_dir, "documents", spread=True)
     labels, feats_i = learned._lr_features(docs, 8)
     w6 = {bk: 1000 * bk for bk in range(-1, 8)}
     p = _plan(spark, learned._scores6(w6, labels, feats_i))
@@ -466,3 +467,28 @@ def test_embed_dedup_pairs_join_on_cluster_key(spark, sf_dir):
     for ln in joins:
         assert "__k" in ln or "doc_id" in ln or "src" in ln \
             or "cluster_id" in ln, f"join off the expected keys:\n{ln}"
+
+
+def test_one_source_reader_and_one_model_memo():
+    """Structural guard: the {sf_dir}/<table>.parquet layout, the spread
+    rule and the fingerprinted model memo live in io/source.py only —
+    no operator module re-implements them."""
+    import pathlib
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [*(root / "textextract_spark").rglob("*.py"),
+             root / "__spark_entry__.py"]
+    text = {p.relative_to(root).as_posix(): p.read_text() for p in files}
+
+    def holders(pattern):
+        return sorted(k for k, t in text.items() if re.search(pattern, t))
+
+    owner = ["textextract_spark/io/source.py"]
+    assert holders(r'spark\.read\.parquet\(f"\{sf_dir\}') == owner
+    assert holders(r"\bos\.stat\(") == owner
+    assert holders(r"sketch import _spread|sketch\._spread") == []
+    caches = sorted(
+        (k, m) for k, t in text.items()
+        for m in re.findall(r"^(_\w*_CACHE)\s*(?::[^=\n]*)?=\s*\{", t,
+                            re.M))
+    assert caches == [("textextract_spark/operators/releases.py",
+                       "_FEED_CACHE")]

@@ -32,11 +32,11 @@ iteration plan never recomputes the token pass per round.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..io.source import memo, source
 
 WORD_RE = "[a-z]+"
 HASH_MOD = 1000003  # prime; keeps the Horner fold exact in int64
@@ -52,15 +52,6 @@ LR_POS_WORDS = ("dup",)  # the corpus's planted boilerplate marker
 LR_SCALE = 1_000_000  # fixed-point micro-units for the GD loop
 
 _HEX = "0123456789abcdef"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread the one-row-group local scan so the token hash / LR
-    # feature / embedding fold stages parallelize (guide §2.5); no-op on
-    # any multi-split production scan. All cross-row sums downstream are
-    # exact int64 micro-units (order-independent by design).
-    from .sketch import _spread
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _words(col):
@@ -206,7 +197,7 @@ def dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     English docs score avg_log_ratio > 0 and survive at ~up-weighted
     rates; off-target docs are down-weighted, exactly the DSIR
     behavior, with zero rand() so reruns keep identical docs."""
-    docs = _docs(spark, sf_dir)
+    docs = source(spark, sf_dir, "documents", spread=True)
     w = dsir_doc_weights(docs, F.col("lang") == F.lit(DSIR_TARGET_LANG))
     keep = (_md5_bucket().cast("double")
             < 256.0 * F.least(F.lit(1.0),
@@ -320,29 +311,15 @@ def lr_train(docs: DataFrame, buckets: int = LR_BUCKETS,
     return w6, labels, feats_i, n
 
 
-# Trained-model memo, the label_centroids pattern: both driver rows
-# (weights + eval) need the SAME model, and the driver runs every query
-# in one session — retraining twice doubles the only expensive stage.
-# The key carries a CONTENT fingerprint (mtime_ns+size of the parquet,
-# the ADVICE-r5 centroid-cache lesson): a regenerated documents.parquet
-# at the same path must miss. Values hold (w6, labels, feats_i, n) with
-# the two feature tables localCheckpoint-materialized; FIFO-bounded.
-_MODEL_CACHE: dict[tuple, tuple] = {}
-_MODEL_CACHE_MAX = 8
-
-
 def _trained_model(spark: SparkSession, sf_dir: str):
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           st.st_mtime_ns, st.st_size)
-    got = _MODEL_CACHE.get(key)
-    if got is None:
-        got = lr_train(_docs(spark, sf_dir))
-        if len(_MODEL_CACHE) >= _MODEL_CACHE_MAX:
-            _MODEL_CACHE.pop(next(iter(_MODEL_CACHE)))
-        _MODEL_CACHE[key] = got
-    return got
+    """Memoized lr_train: both driver rows (weights + eval) need the
+    SAME model, and the driver runs every query in one session —
+    retraining twice doubles the only expensive stage. Values hold
+    (w6, labels, feats_i, n) with the two feature tables
+    localCheckpoint-materialized."""
+    return memo(("lr_model", sf_dir), f"{sf_dir}/documents.parquet",
+                lambda: lr_train(
+                    source(spark, sf_dir, "documents", spread=True)))
 
 
 def lr_train_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,8 +387,7 @@ def _quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, q): embedding components in exact micro-units. The
     float32 -> double promotion is exact and identical in both engines,
     so the quantization is portable."""
-    from .sketch import _spread
-    return (_spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return (source(spark, sf_dir, "embeddings", spread=True)
             .select("vec_id", F.expr(
                 f"transform(embedding, x -> CAST(round("
                 f"CAST(x AS DOUBLE) * {KMEANS_SCALE}, 0) AS BIGINT))")
@@ -516,24 +492,11 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMEANS_DIMS = 64  # embeddings.parquet vector width (TESTDATA.md)
 
 
-# Fitted-centroid memo (the _MODEL_CACHE pattern): kmeans_clusters and
-# cluster_balanced_sample share one fit per (application, table state).
-_KMEANS_CACHE: dict[tuple, tuple] = {}
-_KMEANS_CACHE_MAX = 8
-
-
 def _fitted_kmeans(spark: SparkSession, sf_dir: str):
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           st.st_mtime_ns, st.st_size)
-    got = _KMEANS_CACHE.get(key)
-    if got is None:
-        got = kmeans_fit(spark, sf_dir)
-        if len(_KMEANS_CACHE) >= _KMEANS_CACHE_MAX:
-            _KMEANS_CACHE.pop(next(iter(_KMEANS_CACHE)))
-        _KMEANS_CACHE[key] = got
-    return got
+    """Memoized kmeans_fit: kmeans_clusters and cluster_balanced_sample
+    share one fit per (application, table state)."""
+    return memo(("kmeans", sf_dir), f"{sf_dir}/embeddings.parquet",
+                lambda: kmeans_fit(spark, sf_dir))
 
 
 BALANCE_TARGET = 40  # per-cluster kept-vector target
@@ -671,7 +634,7 @@ def embed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf1.0). The array is always exactly `dim` long, so outer emits the
     # same rows; the coalesces restore the generated columns' original
     # non-nullable schema (outer marks them nullable).
-    return (embed_documents(_docs(spark, sf_dir))
+    return (embed_documents(source(spark, sf_dir, "documents", spread=True))
             .select("doc_id", "n_tokens",
                     F.posexplode_outer("embedding").alias("dim", "v"))
             .select("doc_id", "n_tokens",
@@ -697,28 +660,16 @@ EMBED_DEDUP_DEN = 400
 
 
 def _doc_qv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (embed_documents(_docs(spark, sf_dir))
+    return (embed_documents(source(spark, sf_dir, "documents", spread=True))
             .select(F.col("doc_id").alias("vec_id"),
                     F.col("embedding").alias("q")))
 
 
-_EMBED_KMEANS_CACHE: dict[tuple, tuple] = {}
-
-
 def _fitted_embed_kmeans(spark: SparkSession, sf_dir: str):
-    """Shared doc-embedding k-means fit (the _fitted_kmeans memo
-    pattern, keyed on the documents table state)."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           st.st_mtime_ns, st.st_size)
-    got = _EMBED_KMEANS_CACHE.get(key)
-    if got is None:
-        got = kmeans_fit_qv(_doc_qv(spark, sf_dir))
-        if len(_EMBED_KMEANS_CACHE) >= _KMEANS_CACHE_MAX:
-            _EMBED_KMEANS_CACHE.pop(next(iter(_EMBED_KMEANS_CACHE)))
-        _EMBED_KMEANS_CACHE[key] = got
-    return got
+    """Shared doc-embedding k-means fit (the _fitted_kmeans memo,
+    keyed on the documents table state)."""
+    return memo(("embed_kmeans", sf_dir), f"{sf_dir}/documents.parquet",
+                lambda: kmeans_fit_qv(_doc_qv(spark, sf_dir)))
 
 
 def embed_kmeans_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

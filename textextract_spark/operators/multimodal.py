@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from ..io.source import source
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("media_type", StringType()),
@@ -282,7 +284,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the opaque blob (the pipeline never inspects them as text). Returns
     one typed feature row per blob.
     """
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (source(spark, sf_dir, "documents", spread=False)
             .select(F.col("doc_id").alias("media_id"),
                     F.encode("text", "UTF-8").alias("media"),
                     F.when(F.col("doc_id") % 3 == 0, "image")
@@ -340,7 +342,7 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     length) so the DuckDB oracle can reconstruct the byte slices with
     character substr + sha256 — the operator itself is byte-based and
     works on any binary payload (pytest covers non-ASCII)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (source(spark, sf_dir, "documents", spread=False)
             .filter(F.octet_length("text") == F.length("text"))
             .filter(F.octet_length("text") >= N_FRAMES)
             .select(F.col("doc_id").alias("media_id"),
@@ -440,7 +442,7 @@ def media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle recomputes the full round trip (synth params -> binary
     container -> parsed values) from id arithmetic alone; pixel-level
     fidelity is pytest-asserted (tests/test_operators.py)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (source(spark, sf_dir, "documents", spread=False)
             .select(F.col("doc_id").alias("media_id")))
     media = docs.repartition(_n_parts(spark), "media_id").mapInPandas(
         _synth_media_batches,
@@ -509,7 +511,7 @@ def resize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDAT inflate / unfilter / index mapping / channel order shifts the
     weighted sum and turns the row red. One Arrow stage, zero shuffle;
     with PIL present only the decode call changes."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (source(spark, sf_dir, "documents", spread=False)
             .select(F.col("doc_id").alias("media_id")))
     out = docs.repartition(_n_parts(spark), "media_id").mapInPandas(
         _resize_batches,
@@ -596,7 +598,7 @@ def audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes RMS/ZCR/peak from id arithmetic + generate_series alone —
     the decode, the signed-int16 reconstruction, and the feature math
     are all independently re-derived in SQL."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (source(spark, sf_dir, "documents", spread=False)
             .select(F.col("doc_id").alias("media_id")))
     out = docs.repartition(_n_parts(spark), "media_id").mapInPandas(
         _audio_feature_batches,

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.source import source
+
 WORD_RE = "[a-z]+"
 
 BM25_K1 = 1.2
@@ -32,14 +34,6 @@ BM25_QUERY = ("spark", "merge", "vector", "stream")
 BM25_TOP_K = 20
 
 TFIDF_PER_DOC = 3
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread the one-row-group local scan so tokenize/explode runs
-    # on every core (guide §2.5); no-op on a multi-split production
-    # scan. BM25/TF-IDF sums are exact ints or int64 micro-units.
-    from .sketch import _spread
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _words(col):
@@ -110,7 +104,8 @@ def bm25_search(docs: DataFrame, query: tuple[str, ...],
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row: BM25 top-20 for the fixed analytics query."""
-    return bm25_search(_docs(spark, sf_dir), BM25_QUERY)
+    docs = source(spark, sf_dir, "documents", spread=True)
+    return bm25_search(docs, BM25_QUERY)
 
 
 def tfidf_doc_keywords(docs: DataFrame, per_doc: int = TFIDF_PER_DOC,
@@ -133,8 +128,9 @@ def tfidf_doc_keywords(docs: DataFrame, per_doc: int = TFIDF_PER_DOC,
     # frequency aggregation and the scoring join, so the tokenize runs
     # twice — but materializing the corpus-sized (doc, word) table cost
     # MORE than the duplicated codegen pass it saves (1.3s -> 2.5s at a
-    # 50k-doc replica; contrast bm25_search, where the same diamond IS
-    # checkpointed because its tf is pre-filtered to the query terms)
+    # 50k-doc replica). bm25_search leaves the same diamond
+    # unmaterialized too: there a checkpoint of the query-filtered tf
+    # measured flat and was reverted (see its comment).
     tf = toks.groupBy("doc_id", "w").agg(F.count("*").alias("__tf"))
     dfreq = tf.groupBy("w").agg(F.count("*").alias("__df"))
     n = docs.agg(F.count("*").alias("__n"))
@@ -162,4 +158,4 @@ def tfidf_doc_keywords(docs: DataFrame, per_doc: int = TFIDF_PER_DOC,
 
 def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row: top-3 TF-IDF keywords per document."""
-    return tfidf_doc_keywords(_docs(spark, sf_dir))
+    return tfidf_doc_keywords(source(spark, sf_dir, "documents", spread=True))

@@ -15,15 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..io.source import source
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # NB deliberately NOT _spread here (r7): these aggregations are
-    # count/min/max-shaped with light map-side work, and an A/B at
-    # sf1.0 measured the spread's round-robin repartition (which pays a
-    # local sort per evaluation) as a net LOSS — approx_stats 2.2 s ->
-    # 6.8 s, daily_counters 1.5 s -> 1.9 s. The heavy text operators
-    # spread in their own modules where compute dominates the exchange.
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+# Every scan here is deliberately unspread (r7): these aggregations are
+# count/min/max-shaped with light map-side work, and an A/B at sf1.0
+# measured the spread's round-robin repartition (which pays a local sort
+# per evaluation) as a net LOSS — approx_stats 2.2 s -> 6.8 s,
+# daily_counters 1.5 s -> 1.9 s. The heavy text operators spread in
+# their own modules where compute dominates the exchange.
 
 
 # -- scans / filters / projections ------------------------------------------
@@ -31,7 +31,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def filter_eq_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 equality filter + P8 narrow projection (models.py:71,83;
     column pruning reaches the parquet scan)."""
-    return (_t(spark, sf_dir, "customer")
+    return (source(spark, sf_dir, "customer", spread=False)
             .filter(F.col("c_mktsegment") == "BUILDING")
             .select("c_custkey", "c_name", "c_acctbal")
             .orderBy("c_custkey"))
@@ -40,7 +40,7 @@ def filter_eq_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4 range predicate (gte/lte date window, models.py:145-150) —
     pushed down to the parquet scan / Iceberg partition pruning."""
-    return (_t(spark, sf_dir, "orders")
+    return (source(spark, sf_dir, "orders", spread=False)
             .filter(F.col("o_orderdate").between("1996-01-01", "1996-06-30"))
             .filter(F.col("o_orderstatus") == "F")
             .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -50,8 +50,8 @@ def range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quota_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 compound quota predicate (models.py:247-288): plan limit vs usage
     vs credit fallback as one CASE expression over a join."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = source(spark, sf_dir, "orders", spread=False)
+    cust = source(spark, sf_dir, "customer", spread=False)
     usage = orders.groupBy("o_custkey").agg(
         F.count("*").alias("order_count"))
     return (cust.join(usage, cust.c_custkey == usage.o_custkey, "left")
@@ -71,7 +71,7 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14/F15 JSON parse (JSONB device_info analog, backend/auth.py:
     181-218; create_tables.sql:29): extract a typed field from the JSON
     props column with a schema'd from_json, then aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     k = F.from_json(F.col("props"), "k INT").getField("k")
     return (ev.withColumn("k", k)
             .groupBy("event_type")
@@ -87,9 +87,9 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fk_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/J2 FK lookups (models.py:614-637) as broadcast hash joins —
     nation/region are tiny dims, so no shuffle of the fact side."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    cust = source(spark, sf_dir, "customer", spread=False)
+    nation = source(spark, sf_dir, "nation", spread=False)
+    region = source(spark, sf_dir, "region", spread=False)
     return (cust
             .join(F.broadcast(nation),
                   cust.c_nationkey == nation.n_nationkey)
@@ -105,8 +105,8 @@ def anti_join_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 correctness anti-join (clipboard verify analog,
     src/clipboard.py:32-34): customers with no high-value order — the
     missing-urls regression-diff shape."""
-    cust = _t(spark, sf_dir, "customer")
-    hi = (_t(spark, sf_dir, "orders")
+    cust = source(spark, sf_dir, "customer", spread=False)
+    hi = (source(spark, sf_dir, "orders", spread=False)
           .filter(F.col("o_totalprice") > 300000))
     return (cust.join(hi, cust.c_custkey == hi.o_custkey, "left_anti")
             .select("c_custkey", "c_name")
@@ -115,8 +115,8 @@ def anti_join_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def semi_join_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_semi: suppliers that shipped at least one line item."""
-    supp = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
+    supp = source(spark, sf_dir, "supplier", spread=False)
+    li = source(spark, sf_dir, "lineitem", spread=False)
     return (supp.join(li, supp.s_suppkey == li.l_suppkey, "left_semi")
             .select("s_suppkey", "s_name")
             .orderBy("s_suppkey"))
@@ -127,7 +127,7 @@ def semi_join_active(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Headline hash-agg (TPC-H Q1 shape) — map-side partials + AQE;
     A1/A6 period-sum + stats analogs (models.py:144-157)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = source(spark, sf_dir, "lineitem", spread=False)
     return (li.filter(F.col("l_shipdate") <= "2025-09-01")
             .groupBy("l_returnflag", "l_linestatus")
             .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -144,7 +144,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def period_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 period SUM (models.py:144-157): engine-side aggregation of the
     range-filtered window — the reference summed client-side; we don't."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     return (ev.filter(F.col("ts").between("2024-01-01", "2024-02-01"))
             .groupBy("user_id")
             .agg(F.round(F.sum("value"), 2).alias("period_value"),
@@ -156,7 +156,7 @@ def daily_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 daily counter upsert (models.py:397-425): the UNIQUE(user,date)
     increment becomes one groupBy feeding a MERGE (merge tested in
     operators.maintenance)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     return (ev.groupBy(F.col("user_id"),
                        F.to_date("ts").cast("string").alias("event_date"))
             .agg(F.count("*").alias("requests_count"),
@@ -170,7 +170,7 @@ def daily_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_ratelimit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 rate-limit window count (auth_routes.py:88-120): tumbling
     15-minute windows per user."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     return (ev.groupBy(
                 F.window("ts", "15 minutes").start.cast("string")
                  .alias("window_start"),
@@ -183,7 +183,7 @@ def window_ratelimit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def resp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 response-time stats (create_tables.sql:42-45): total/avg/error
     columns per event type."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     return (ev.groupBy("event_type")
             .agg(F.count("*").alias("n"),
                  F.round(F.sum("value"), 2).alias("total_value"),
@@ -196,7 +196,7 @@ def resp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9 calendar-month boundaries (models.py:134-143): month-bucketed
     totals via date truncation, not client-side boundary math."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = source(spark, sf_dir, "orders", spread=False)
     return (orders.groupBy(F.year("o_orderdate").alias("order_year"),
                            F.month("o_orderdate").alias("order_month"))
             .agg(F.count("*").alias("order_count"),
@@ -206,7 +206,7 @@ def month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 exact counts + distinct agg for metrics QA."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     return (ev.groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("distinct_users"),
                  F.count("*").alias("events"))
@@ -227,7 +227,7 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-codes the booleans TRUE, so a sketch drifting out of its
     advertised bound turns the row red.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     pct = F.expr("percentile_approx(value, array(0.5D, 0.95D), 10000)")
     agg = (ev.groupBy("event_type")
            .agg(F.countDistinct("user_id").alias("distinct_users"),
@@ -274,7 +274,7 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 latest-row-wins (models.py:571-583) — the same dedup-latest the
     extraction pipeline uses for crawled urls."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"),
                                               F.desc("event_id"))
     return (ev.withColumn("rn", F.row_number().over(w))
@@ -286,7 +286,7 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top1_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 top-1 selection (update_routes.py:222-230): highest-value event
     per type via row_number, deterministic tiebreak."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     w = Window.partitionBy("event_type").orderBy(F.desc("value"),
                                                  F.asc("event_id"))
     return (ev.withColumn("rn", F.row_number().over(w))
@@ -299,7 +299,7 @@ def top1_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def version_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 version ordering (update_routes.py:167-183): parse 'Brand#N'
     into its numeric part and rank — split+cast, no Python."""
-    part = _t(spark, sf_dir, "part")
+    part = source(spark, sf_dir, "part", spread=False)
     parsed = (part.select("p_brand")
               .distinct()
               .withColumn("brand_num",
@@ -313,7 +313,7 @@ def version_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 order-by + limit (user_routes.py:132-146): top-10 with a
     deterministic tiebreak (TakeOrderedAndProject, no full sort)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = source(spark, sf_dir, "orders", spread=False)
     return (orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
             .select("o_orderkey",
                     F.round("o_totalprice", 2).alias("total_price"))
@@ -330,7 +330,7 @@ def pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject) or keyset_pagination below is the form that
     survives 100x; this window form is kept as the API-exact analog.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = source(spark, sf_dir, "orders", spread=False)
     w = Window.orderBy(F.desc("o_orderdate"), F.asc("o_orderkey"))
     return (orders.withColumn("rn", F.row_number().over(w))
             .filter((F.col("rn") > 40) & (F.col("rn") <= 60))
@@ -347,7 +347,7 @@ def keyset_pagination(spark: SparkSession, sf_dir: str,
     The predicate prunes at the scan and the limit is a
     TakeOrderedAndProject — no global row_number, no single-task funnel
     (plan asserted in tests/test_plans.py)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = source(spark, sf_dir, "orders", spread=False)
     d = F.lit(last_date).cast("timestamp")
     after = (F.col("o_orderdate") < d) | (
         (F.col("o_orderdate") == d) & (F.col("o_orderkey") > last_key))
@@ -364,7 +364,7 @@ def keyset_pagination(spark: SparkSession, sf_dir: str,
 def union_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 unionByName of format branches: high-value purchases vs errors,
     tagged and recombined (the html/pdf/text branch-union shape)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = source(spark, sf_dir, "events", spread=False)
     purchases = (ev.filter((F.col("event_type") == "purchase")
                            & (F.col("value") > 100))
                  .withColumn("branch", F.lit("purchase_hi")))
@@ -386,7 +386,7 @@ def normalize_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically from event ids, so the operator sees unordered
     corners in every quadrant; least()/greatest() normalize without a
     branch and the gate is a CASE — all whole-stage codegen."""
-    ev = _t(spark, sf_dir, "events").select("event_id")
+    ev = source(spark, sf_dir, "events", spread=False).select("event_id")
     rx1 = (F.col("event_id") * 131) % 1920
     ry1 = (F.col("event_id") * 173) % 1080
     rx2 = (F.col("event_id") * 197) % 1920
@@ -408,7 +408,7 @@ def asset_size_mb(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding (updater.py:589 `file_size / (1024*1024):.2f`): per-part
     synthetic asset sizes -> MB, plus a SUM rollup the dashboard shape
     needs. Sizes derive from p_retailprice so values span 0-200MB."""
-    part = _t(spark, sf_dir, "part")
+    part = source(spark, sf_dir, "part", spread=False)
     # explicit floor: Spark's cast-to-long truncates while DuckDB's CAST
     # rounds — floor() pins the same integer on both engines
     size_bytes = F.floor(F.col("p_retailprice") * 131072).cast("long")

@@ -14,7 +14,6 @@ LSH path, never a global cross join.
 
 from __future__ import annotations
 
-import os
 import random
 
 import numpy as np
@@ -22,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from ..io.source import memo, source
 
 TOPK = 20
 LSH_TABLES = 4
@@ -34,14 +35,6 @@ LSH_TABLES = 4
 PLANES_PER_TABLE = 16
 N_PLANES = LSH_TABLES * PLANES_PER_TABLE
 _PLANE_SEED = 1337
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread the one-row-group local scan so the LSH signature UDF
-    # and the per-pair cosine math run on every core (guide §2.5);
-    # no-op on a multi-split production scan.
-    from .sketch import _spread
-    return _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 def _dot(a, b):
@@ -61,7 +54,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle (TakeOrderedAndProject for the top-k). Oracle: DuckDB
     list_cosine_similarity.
     """
-    emb = _emb(spark, sf_dir).withColumn(
+    emb = source(spark, sf_dir, "embeddings", spread=True).withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double")))
     q = (emb.filter(F.col("vec_id") == 0)
          .select(F.col("embedding").alias("q_vec")))
@@ -77,14 +70,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CENTROID_SAMPLE_MOD = 4  # deterministic pseudo-sample: vec_id % MOD == 0
-# FIFO-bounded: a long session sweeping many sf_dirs (pytest tmp dirs,
-# bench scales) must not pin one checkpointed RDD per corpus forever.
-# Eviction only drops the CACHE's reference; a caller-held DataFrame
-# still strong-references the checkpointed RDD through its LogicalRDD
-# plan node, so ContextCleaner (weak-ref driven) reclaims the blocks
-# only after every caller reference is gone — never mid-use.
-_CENTROID_CACHE: dict[tuple, DataFrame] = {}
-_CENTROID_CACHE_MAX = 8
 
 
 def label_centroids(spark: SparkSession, sf_dir: str,
@@ -104,33 +89,26 @@ def label_centroids(spark: SparkSession, sf_dir: str,
     At 10^9 vectors this stage writes a real table instead; a production
     build would also sample stratified per cell rather than globally.
 
-    Cache key carries a CONTENT fingerprint (mtime_ns+size of the
-    parquet, mirroring __spark_entry__._warc_docs_dir): a regenerated
-    embeddings.parquet at the same path within one application must miss
-    the cache, or ivf_topk would quantize against stale centroids while
-    the oracle reads the fresh table."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, sf_dir, sample_mod,
-           st.st_mtime_ns, st.st_size)
-    got = _CENTROID_CACHE.get(key)
-    if got is not None:
-        return got
-    emb = _emb(spark, sf_dir).withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double")))
-    cents = (emb.filter(F.col("vec_id") % sample_mod == 0)
-             .select("label", F.posexplode("embedding").alias("dim", "val"))
-             .groupBy("label", "dim").agg(F.avg("val").alias("v"))
-             .groupBy("label")
-             .agg(F.array_sort(F.collect_list(F.struct("dim", "v")))
-                  .alias("dv"))
-             .select("label",
-                     F.transform("dv", lambda s: s.v).alias("centroid"))
-             .localCheckpoint(eager=True))
-    while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
-        _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
-    _CENTROID_CACHE[key] = cents
-    return cents
+    The memo key carries the embeddings table's content fingerprint
+    (io.source.memo): a regenerated embeddings.parquet at the same path
+    within one application must miss, or ivf_topk would quantize
+    against stale centroids while the oracle reads the fresh table."""
+    def build() -> DataFrame:
+        emb = source(spark, sf_dir, "embeddings", spread=True).withColumn(
+            "embedding",
+            F.transform("embedding", lambda x: x.cast("double")))
+        return (emb.filter(F.col("vec_id") % sample_mod == 0)
+                .select("label",
+                        F.posexplode("embedding").alias("dim", "val"))
+                .groupBy("label", "dim").agg(F.avg("val").alias("v"))
+                .groupBy("label")
+                .agg(F.array_sort(F.collect_list(F.struct("dim", "v")))
+                     .alias("dv"))
+                .select("label",
+                        F.transform("dv", lambda s: s.v).alias("centroid"))
+                .localCheckpoint(eager=True))
+    return memo(("label_centroids", sf_dir, sample_mod),
+                f"{sf_dir}/embeddings.parquet", build)
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str, probe_id: int = 0,
@@ -143,7 +121,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, probe_id: int = 0,
     to nprobe cells before any exact math. Here the coarse quantizer is
     the existing `label` clustering.
     """
-    emb = _emb(spark, sf_dir).withColumn(
+    emb = source(spark, sf_dir, "embeddings", spread=True).withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double")))
     cents = label_centroids(spark, sf_dir)
     q = (emb.filter(F.col("vec_id") == probe_id)
@@ -188,7 +166,7 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str, dim: int = 64,
     radius. Recall vs brute force is asserted on planted duplicates in
     tests/test_dedup.py.
     """
-    emb = _emb(spark, sf_dir).withColumn(
+    emb = source(spark, sf_dir, "embeddings", spread=True).withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double")))
     return _ann_lsh_over(emb, dim, min_cosine)
 
@@ -204,7 +182,7 @@ def ann_lsh_planted(spark: SparkSession, sf_dir: str, dim: int = 64,
     (at this threshold brute force and LSH agree: same-direction vectors
     share every hyperplane sign, so plant recall is 1).
     """
-    emb = _emb(spark, sf_dir).withColumn(
+    emb = source(spark, sf_dir, "embeddings", spread=True).withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double")))
     # negative-range plant ids: disjoint from any corpus vec_id at
     # every sf (a fixed positive offset collides past ~100k vectors)

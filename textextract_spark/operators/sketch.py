@@ -27,6 +27,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.source import source, spread_partitions
+
 K_HASHES = 64          # minhash permutations
 BANDS = 16             # LSH bands (K/BANDS rows per band)
 ROWS_PER_BAND = K_HASHES // BANDS
@@ -41,22 +43,6 @@ MAX_BUCKET = 50        # cap candidate fan-out per band bucket (skew guard)
 # per-bucket collect, bounding aggregation state (see _candidate_pairs)
 _PRESAMPLE_TARGET = 64 * MAX_BUCKET
 SIMHASH_BITS = 64
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure enough partitions to parallelize the CPU-heavy tokenize/
-    shingle stages: a small single-file parquet scan yields ONE partition
-    and would serialize the stage (measured: the whole minhash signature
-    job ran on 1 of 32 cores). At crawl scale the scan already has
-    thousands of splits and this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _is_spaceless(norm):
@@ -122,7 +108,7 @@ def with_shingles(df: DataFrame) -> DataFrame:
                 out.append(None)
         return pd.Series(out)
 
-    return _spread(df).withColumn(
+    return spread_partitions(df).withColumn(
         "shingles", shingles_of(F.trim(F.lower(F.col("text")))))
 
 
@@ -228,7 +214,7 @@ def minhash_signatures(df: DataFrame,
     schema = f"doc_id {id_type}, minhash array<long>"
     if emit_shingles:
         schema += ", shingles array<string>"
-    return (_spread(df)
+    return (spread_partitions(df)
             .select("doc_id",
                     F.trim(F.lower(F.col("text"))).alias("__norm"))
             .mapInPandas(sig_kernel, schema=schema))
@@ -358,8 +344,9 @@ def minhash_neardup(spark: SparkSession, sf_dir: str,
     ngram_jaccard shape) and the two signature join-backs touch only
     the pair survivors. The signature table is lazily checkpointed so
     the band branch and both join-backs share ONE materialization."""
-    mh = (minhash_signatures(_docs(spark, sf_dir))
-          .localCheckpoint(eager=False))
+    # unspread read: minhash_signatures spreads its own input
+    docs = source(spark, sf_dir, "documents", spread=False)
+    mh = minhash_signatures(docs).localCheckpoint(eager=False)
     pairs = _candidate_pairs(minhash_bands(mh), None)
     joined = (pairs
               .join(mh.select(F.col("doc_id").alias("a_id"),
@@ -390,7 +377,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
     pair set is orders of magnitude smaller than docs x 16 bands, so the
     shingle payload never rides the bucket shuffle (r1 carried it 16x).
     """
-    return (exact_jaccard_pairs(_docs(spark, sf_dir), threshold)
+    docs = source(spark, sf_dir, "documents", spread=False)
+    return (exact_jaccard_pairs(docs, threshold)
             .orderBy(F.desc("jaccard"), "a_id", "b_id"))
 
 
@@ -581,7 +569,7 @@ def with_simhash(df: DataFrame) -> DataFrame:
                 {"doc_id": pd.Series(ids, dtype="int64"),
                  "simhash": pd.Series(sims, dtype="int64")})
 
-    base = _spread(df).select(
+    base = spread_partitions(df).select(
         "doc_id", F.trim(F.lower(F.col("text"))).alias("__norm"))
     return base.mapInPandas(votes_kernel,
                             schema="doc_id long, simhash long")
@@ -653,7 +641,8 @@ def simhash_neardup(spark: SparkSession, sf_dir: str,
     Default radius 3 (16-bit chunk keys): the configuration whose recall
     guarantee survives crawl scale — wider radii shrink the key space
     below the MAX_BUCKET skew cap's saturation point (_simhash_chunks)."""
-    return simhash_pairs(with_simhash(_docs(spark, sf_dir)), max_hamming)
+    docs = source(spark, sf_dir, "documents", spread=False)
+    return simhash_pairs(with_simhash(docs), max_hamming)
 
 
 def connected_components(edges: DataFrame,

@@ -18,27 +18,11 @@ never row-at-a-time Python.
 
 from __future__ import annotations
 
-import functools as _functools
-import os
-
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7 (guide §2.5 "input skew: one huge unsplittable file ...
-    # repartition immediately after the read"): the local test corpus is
-    # ONE parquet row group, so every narrow compute stage downstream
-    # (regex scrubbing, tokenize/explode, embedding folds) would run on
-    # ONE core of local[32] without the spread. _spread is a no-op once
-    # the scan already has >= defaultParallelism splits — i.e. at any
-    # production multi-file scale. Row order is NOT part of any operator
-    # contract here: every driver row ends in an explicit orderBy, and
-    # cross-row aggregates in this module are exact-integer
-    # (order-independent) by the r6 micro-unit design.
-    from .sketch import _spread
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+from ..io.source import memo, source
 
 
 # -- exact dedup / fingerprints ---------------------------------------------
@@ -49,10 +33,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the cheap first pass — hash-shuffle on a 32-char key
     instead of the document body; the groupBy carries (hash -> min id,
     count) only. Unspread scan, deliberately (r7): one md5 per row
-    before the agg's own exchange — a _spread repartition here is a
+    before the agg's own exchange — a spread repartition here is a
     pure extra shuffle.
     """
-    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return (source(spark, sf_dir, "documents", spread=False)
             .withColumn("content_hash", F.md5(F.col("text")))
             .groupBy("content_hash")
             .agg(F.min("doc_id").alias("keeper_doc_id"),
@@ -64,7 +48,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized document fingerprint: md5 over lowercased,
     whitespace-collapsed text — catches trivial near-dupes (case/space)."""
     norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return (_docs(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id",
                     F.md5(F.trim(norm)).alias("fingerprint"),
                     F.length(F.trim(norm)).alias("norm_len"))
@@ -255,7 +239,8 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" ni QQ"), F.lpad((d % 1000000).cast("string"), 6, "0"),
         F.lit("C tel "), usphone,
         F.lit(" call +1555"), F.lpad(d.cast("string"), 7, "0"))
-    docs = _docs(spark, sf_dir).select("doc_id", planted.alias("__t"))
+    docs = (source(spark, sf_dir, "documents", spread=True)
+            .select("doc_id", planted.alias("__t")))
     return _pii_report_arrow(docs).orderBy("doc_id")
 
 
@@ -334,13 +319,10 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "fp_digest": pd.Series(digs, dtype="object"),
             })
 
-    from .sketch import _spread
-
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    docs = _spread(
-        _docs(spark, sf_dir)
-        .select("doc_id", norm.alias("__n"))
-        .filter(F.length("__n") >= WINNOW_K + WINNOW_W - 1))
+    docs = (source(spark, sf_dir, "documents", spread=True)
+            .select("doc_id", norm.alias("__n"))
+            .filter(F.length("__n") >= WINNOW_K + WINNOW_W - 1))
     return (docs.mapInPandas(
         winnow_kernel,
         schema="doc_id long, n_grams long, n_fingerprints long, "
@@ -357,7 +339,7 @@ def payload_base64(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-trip length equality is part of the oracle check."""
     blob = F.encode("text", "UTF-8")
     b64 = F.translate(F.base64(blob), "\r\n", "")
-    return (_docs(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id",
                     F.substring(b64, 1, 32).alias("b64_head"),
                     F.length(b64).alias("b64_len"),
@@ -372,7 +354,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting + mean token length (quality features)."""
     t = F.trim(F.col("text"))
     tokens = F.split(t, r"\s+")
-    return (_docs(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .filter(F.length(t) > 0)
             .select("doc_id", "lang",
                     F.size(tokens).alias("n_tokens"),
@@ -400,7 +382,7 @@ def token_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha = F.regexp_extract_all(t, F.lit("[a-zA-Z]+"), 0)
     digit = F.regexp_extract_all(t, F.lit("[0-9]+"), 0)
     other = F.regexp_extract_all(t, F.lit("[^a-zA-Z0-9 \\t\\n\\r]"), 0)
-    return (_docs(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .filter(F.length(t) > 0)
             .select("doc_id",
                     F.size(toks).alias("n_tokens"),
@@ -438,7 +420,8 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
     BOTH engines, so ordering and values are portable.
     """
     words = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-    dw = _docs(spark, sf_dir).select(words.alias("__w"))
+    dw = source(spark, sf_dir, "documents", spread=True).select(
+        words.alias("__w"))
     # explode_outer + null filter throughout (r7): plain explode infers
     # a size()>0 filter that re-evaluates the inlined tokenizer /
     # bigram transform a second time per row (guide §7.2)
@@ -546,14 +529,6 @@ def bpe_segment(word: str,
     return parts
 
 
-@_functools.lru_cache(maxsize=65536)
-def _n_subtokens(word: str) -> int:
-    """Merged-token count of one pre-token — a worker-lifetime cache
-    over the SAME bpe_segment the pytest equivalence battery certifies
-    (never a second copy of the merge loop)."""
-    return len(bpe_segment(word))
-
-
 def token_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real BPE token counting: pre-tokenize with BPE_TOKEN_RE, then run
     the merge loop over each pre-token and count merged tokens — since
@@ -603,9 +578,8 @@ def token_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                          sum(len(w) for w in pre)])
         return pd.Series(rows)
 
-    from .sketch import _spread
-
-    docs = _spread(_docs(spark, sf_dir).filter(F.length("text") > 0))
+    docs = source(spark, sf_dir, "documents", spread=True).filter(
+        F.length("text") > 0)
     c = docs.select("doc_id", bpe_counts(F.col("text")).alias("c"))
     return (c.select(
         "doc_id",
@@ -734,27 +708,16 @@ def train_bpe_merges(docs: DataFrame, n_merges: int = 48,
 BPE_TRAIN_N_MERGES = 256
 BPE_TRAIN_MIN_FREQ = 1
 
-# Learned-merges memo (the _MODEL_CACHE pattern): bpe_train_stats and
-# token_bpe_merge share ONE training run per (application, corpus).
-_BPE_LEARNED_CACHE: dict[tuple, list] = {}
-
-
 def learned_bpe_merges(spark: SparkSession, sf_dir: str,
                        n_merges: int = BPE_TRAIN_N_MERGES,
                        min_freq: int = BPE_TRAIN_MIN_FREQ) -> list:
-    import os
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns,
-           st.st_size, n_merges, min_freq)
-    got = _BPE_LEARNED_CACHE.get(key)
-    if got is None:
-        got = train_bpe_merges(_docs(spark, sf_dir), n_merges=n_merges,
-                               min_freq=min_freq)
-        if len(_BPE_LEARNED_CACHE) >= 8:
-            _BPE_LEARNED_CACHE.pop(next(iter(_BPE_LEARNED_CACHE)))
-        _BPE_LEARNED_CACHE[key] = got
-    return got
+    """Memoized train_bpe_merges: bpe_train_stats and token_bpe_merge
+    share ONE training run per (application, corpus)."""
+    return memo(("bpe_merges", sf_dir, n_merges, min_freq),
+                f"{sf_dir}/documents.parquet",
+                lambda: train_bpe_merges(
+                    source(spark, sf_dir, "documents", spread=True),
+                    n_merges=n_merges, min_freq=min_freq))
 
 
 def bpe_train_stats(spark: SparkSession, sf_dir: str,
@@ -807,7 +770,8 @@ def bpe_train_stats(spark: SparkSession, sf_dir: str,
             return cache[w]
         return ws.map(n)
 
-    words = _word_freqs(_docs(spark, sf_dir), "text")
+    words = _word_freqs(source(spark, sf_dir, "documents", spread=True),
+                        "text")
     base_chars = (words
                   .select(F.explode(F.split(
                       F.trim(F.regexp_replace("w", "(.)", "$1 ")),
@@ -876,7 +840,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits = n - F.length(F.regexp_replace(t, "[0-9]", ""))
     punct = n - F.length(F.regexp_replace(t, "[.,!?;:]", ""))
     spaces = n - F.length(F.regexp_replace(t, " ", ""))
-    return (_docs(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .filter(n > 0)
             .select(
                 "doc_id",
@@ -961,12 +925,10 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                                "dup_line_chars", "ellipsis_lines",
                                "bullet_lines", "packed"])
 
-    from .sketch import _spread
-
-    docs = _spread(_docs(spark, sf_dir)
-                   .filter(F.length(F.trim(F.col("text"))) > 0)
-                   .select("doc_id", F.col("text").alias("__t"),
-                           F.trim(F.lower(F.col("text"))).alias("__norm")))
+    docs = (source(spark, sf_dir, "documents", spread=True)
+            .filter(F.length(F.trim(F.col("text"))) > 0)
+            .select("doc_id", F.col("text").alias("__t"),
+                    F.trim(F.lower(F.col("text"))).alias("__norm")))
     fields = StructType(
         [StructField(n, LongType()) for n in
          ("doc_id", "n_chars", "n_lines", "n_distinct_lines",
@@ -1029,8 +991,8 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = hexval(1) * 16 + hexval(2)
     # unspread scan, deliberately (r7): one md5 per row before a
     # map-side-combinable agg — the agg's own exchange reparallelizes,
-    # so the _spread repartition bought nothing but its shuffle
-    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # so the spread repartition bought nothing but its shuffle
+    return (source(spark, sf_dir, "documents", spread=False)
             .select("doc_id", "source", rate.alias("__rate"),
                     bucket.alias("__b"))
             .groupBy("source")
@@ -1071,8 +1033,8 @@ def dataset_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row: per-split doc/char counts over the corpus — the
     sanity report a split job logs (one map-side-combinable agg)."""
-    docs = _docs(spark, sf_dir).select("doc_id", F.length("text")
-                                       .alias("__len"))
+    docs = (source(spark, sf_dir, "documents", spread=True)
+            .select("doc_id", F.length("text").alias("__len")))
     return (dataset_split(docs).join(docs, "doc_id")
             .groupBy("split")
             .agg(F.count("*").alias("n_docs"),
@@ -1129,7 +1091,8 @@ def chunk_sequences(docs: DataFrame, max_tokens: int = CHUNK_MAX_TOKENS,
 
 def chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row for chunk_sequences over the documents corpus."""
-    return chunk_sequences(_docs(spark, sf_dir).select("doc_id", "text"))
+    docs = source(spark, sf_dir, "documents", spread=True)
+    return chunk_sequences(docs.select("doc_id", "text"))
 
 
 # Fixed-width duplicated-span detection (the Lee et al. 2022 "Dedup-
@@ -1224,7 +1187,8 @@ def span_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     every doc in residue class doc_id%17==4 (same construction in the
     DuckDB twin) make both the whole-doc and the partial-span
     duplication paths non-vacuous."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = source(spark, sf_dir, "documents", spread=True).select(
+        "doc_id", "text")
     copies = docs.filter(F.col("doc_id") < 10).select(
         (-F.col("doc_id") - 300000).alias("doc_id"), "text")
     boiler = (" this website uses cookies to improve your experience"
@@ -1260,7 +1224,8 @@ def temperature_mixture(spark: SparkSession, sf_dir: str,
     Returns the per-language mixture report:
     (lang, n_docs, share, rate_per256, n_sampled, eff_rate).
     """
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
+    docs = source(spark, sf_dir, "documents", spread=True).select(
+        "doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count("*").alias("__n"))
     # NB __tot not __N: Spark resolution is case-insensitive, so an
     # __N total next to counts' __n is AMBIGUOUS_REFERENCE
@@ -1432,7 +1397,8 @@ def decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark-copy case — and any other doc sharing an exact 8-gram
     with them by pool coincidence is flagged identically by both
     engines."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = source(spark, sf_dir, "documents", spread=True).select(
+        "doc_id", "text")
     eval_docs = docs.filter(F.col("doc_id") % 97 == 5)
     return contamination_flags(docs, eval_docs)
 
@@ -1447,10 +1413,6 @@ def decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPL_HEAD_MAX = 20.0
 PPL_MIDDLE_MAX = 110.0
 PPL_REF_LANG = "en"  # the "clean reference corpus" slice
-# trained-model memo for the driver row (see char_lm_ppl): FIFO-bounded,
-# keyed on (application, sf_dir, corpus content fingerprint)
-_CHAR_LM_CACHE: dict[tuple, tuple] = {}
-_CHAR_LM_CACHE_MAX = 8
 
 
 def _lm_pad(df: DataFrame) -> DataFrame:
@@ -1741,7 +1703,8 @@ def char_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     >=161 rev at sf0.01), so every bucket is exercised and the decision
     is robust to float noise. The reference slice is the original
     lang='en' docs only."""
-    base = _docs(spark, sf_dir).select("doc_id", "text", "lang")
+    base = source(spark, sf_dir, "documents", spread=True).select(
+        "doc_id", "text", "lang")
     n = F.length("text")
     half = F.floor(n / 2).cast("int")
     halfrev = base.select(
@@ -1758,19 +1721,9 @@ def char_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label_centroids / learned_bpe_merges BUILD/QUERY split (r7): a
     # CCNet pipeline trains the reference LM once and scores many
     # corpora with it; rebuilding the identical model tables on every
-    # plan construction cost ~1.4 s per bench rep. Content fingerprint
-    # (mtime_ns + size) so a regenerated corpus at the same path
-    # misses; FIFO-bounded like similarity._CENTROID_CACHE.
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           st.st_mtime_ns, st.st_size)
-    model = _CHAR_LM_CACHE.get(key)
-    if model is None:
-        model = char_lm_train(ref)
-        while len(_CHAR_LM_CACHE) >= _CHAR_LM_CACHE_MAX:
-            _CHAR_LM_CACHE.pop(next(iter(_CHAR_LM_CACHE)))
-        _CHAR_LM_CACHE[key] = model
+    # plan construction cost ~1.4 s per bench rep.
+    model = memo(("char_lm", sf_dir), f"{sf_dir}/documents.parquet",
+                 lambda: char_lm_train(ref))
     return char_lm_perplexity(scoring, ref, model=model)
 
 
@@ -1786,7 +1739,8 @@ def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator must keep each unique full text, keep exactly ONE copy of
     each snippet and of the footer (at the min (doc_id, line_no)
     occurrence), and drop the rest."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = source(spark, sf_dir, "documents", spread=True).select(
+        "doc_id", "text")
     seeds = (docs.filter(F.col("doc_id") < 7)
              .select(F.col("doc_id").alias("__sid"),
                      F.substring("text", 1, 80).alias("__snip")))
@@ -1968,8 +1922,8 @@ def lang_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append((v @ contrib).tolist())
         return pd.Series(out)
 
-    # _docs already spreads the single-file scan (r7) — no extra hop
-    docs = _docs(spark, sf_dir).filter(F.length("text") > 0)
+    docs = source(spark, sf_dir, "documents", spread=True).filter(
+        F.length("text") > 0)
     hits = docs.select("doc_id", "lang",
                        lang_hits(F.col("text")).alias("h"))
     hits = hits.select(
@@ -2004,7 +1958,7 @@ def lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     es = marker_count(" el ")
     bn = marker_count(" তথ্য ")
     best = F.greatest(en, de, fr, es, bn)
-    return (_docs(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "lang",
                     en.alias("en_hits"), de.alias("de_hits"),
                     fr.alias("fr_hits"), es.alias("es_hits"),
@@ -2098,7 +2052,8 @@ def pack_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every value is an exact integer from a deterministic order, so the
     DuckDB twin (same md5 bucket, same window cumsum) matches bit for
     bit."""
-    chunks = chunk_sequences(_docs(spark, sf_dir).select("doc_id", "text"))
+    docs = source(spark, sf_dir, "documents", spread=True)
+    chunks = chunk_sequences(docs.select("doc_id", "text"))
     packed = pack_training_sequences(chunks)
     return (packed.groupBy("bucket")
             .agg(F.count("*").alias("n_chunks"),
@@ -2178,7 +2133,7 @@ def domain_mixture_budget(docs: DataFrame,
 def mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row: the domain mixture plan over the corpus langs."""
     return domain_mixture_budget(
-        _docs(spark, sf_dir).select("lang", "text"))
+        source(spark, sf_dir, "documents", spread=True).select("lang", "text"))
 
 
 # -- the full Gopher quality rule set ----------------------------------------
@@ -2292,7 +2247,8 @@ def gopher_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              "with all of the required stop words present"),
     ]
     pl = spark.createDataFrame(plants, "doc_id long, text string")
-    docs = _docs(spark, sf_dir).select("doc_id", "text").unionByName(pl)
+    docs = (source(spark, sf_dir, "documents", spread=True)
+            .select("doc_id", "text").unionByName(pl))
     return gopher_rules(docs).orderBy("doc_id")
 
 
@@ -2362,5 +2318,6 @@ def pack_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row: the materialized packed sequences over the chunked
     corpus — byte-exact pack_text per (bucket, pack) under the hash
     gate, proving the full concat-and-split semantics end to end."""
-    chunks = chunk_sequences(_docs(spark, sf_dir).select("doc_id", "text"))
+    docs = source(spark, sf_dir, "documents", spread=True)
+    chunks = chunk_sequences(docs.select("doc_id", "text"))
     return pack_sequences_text(chunks)

@@ -20,17 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.source import source
+
 TRACKING_PREFIX = "utm_"  # the industry-standard tracking-param family
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan, spread to defaultParallelism when the local
-    one-row-group file would otherwise pin the synth/regex stage to one
-    core (r7, guide §2.5); no-op on a multi-split production scan. All
-    downstream aggregates in this module are exact integers / min / max
-    (order-independent)."""
-    from .sketch import _spread
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def canonicalize_url(u: Column) -> Column:
@@ -152,8 +144,8 @@ def host_cap(spark: SparkSession, sf_dir: str,
     ts = F.timestamp_seconds(F.lit(1735689600) + d)
     # unspread scan, deliberately (r7): url synthesis is a narrow
     # projection and cap_per_host's host agg repartitions anyway — the
-    # _spread exchange was pure overhead (measured 1.15x at 50k docs)
-    pages = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # spread exchange was pure overhead (measured 1.15x at 50k docs)
+    pages = (source(spark, sf_dir, "documents", spread=False)
              .select("doc_id", url.alias("url"), ts.alias("warc_ts")))
     return (cap_per_host(pages, cap=cap)
             .select("doc_id", "host", "warc_ts")
@@ -211,7 +203,7 @@ def url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     url = F.concat(F.lit("https://h"), hostnum.cast("string"),
                    F.lit(".example.com"), seg,
                    F.lit("/p/"), d.cast("string"))
-    pages = (_docs_spread(spark, sf_dir)
+    pages = (source(spark, sf_dir, "documents", spread=True)
              .select("doc_id", url.alias("url")))
     bl = spark.createDataFrame(
         [("h3.example.com",), ("h5.example.com",)], ["host"])
@@ -242,7 +234,7 @@ def _synth_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.concat(F.lit("https://example.com/b/"), g,
                           F.lit("?id="), g)))
     ts = F.timestamp_seconds(F.lit(1735689600) + d)  # 2025-01-01 + id sec
-    return (_docs_spread(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", raw.alias("url"), ts.alias("warc_ts")))
 
 
@@ -395,7 +387,7 @@ def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(' <a href="https://s'), _s((d + 1) % 11),
         F.lit(".example/p/"), _s(d + 1), F.lit('">next</a></body></html>'))
     ts = F.timestamp_seconds(F.lit(1735689600) + d)
-    return (_docs_spread(spark, sf_dir)
+    return (source(spark, sf_dir, "documents", spread=True)
             .select(url.alias("url"), ts.alias("warc_ts"),
                     F.encode(html_str, "UTF-8").alias("html"),
                     "text", "lang"))
@@ -625,7 +617,7 @@ def _synth_robots(spark: SparkSession, sf_dir: str):
                                      d.cast("string")))
             .when(sel == 3, F.concat(F.lit("/tmp/z"), d.cast("string")))
             .otherwise(F.lit("")))
-    docs = _docs_spread(spark, sf_dir)
+    docs = source(spark, sf_dir, "documents", spread=True)
     urls_df = docs.select(
         "doc_id",
         F.concat(F.lit("https://"), host, path).alias("url"))
@@ -782,10 +774,10 @@ def crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same construction in the DuckDB twin.
 
     Unspread scan, deliberately (r7): the per-doc work here is one md5
-    per branch — the _spread repartition bought no parallel compute
+    per branch — the spread repartition bought no parallel compute
     worth its exchange (measured a 1.6x regression at 50k docs), and
     the snapshot_diff full-outer join repartitions by url anyway."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = source(spark, sf_dir, "documents", spread=False)
     d = F.col("doc_id")
     url = F.concat(F.lit("https://s"), (d % 11).cast("string"),
                    F.lit(".example/p/"), d.cast("string"))

@@ -121,22 +121,9 @@ def with_format(df: DataFrame, payload_col: str = "html") -> DataFrame:
 
 def with_part_columns(df: DataFrame, num_parts: int = 64,
                       n_salts: int = 8) -> DataFrame:
-    """Derive the part_key/salt columns only (no physical repartition) —
-    used when a branch needs the checkpoint key without the payload
-    shuffle (extract_pages' oversize branch)."""
-    return (df.withColumn(
-            "part_key",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(num_parts))
-             .cast(IntegerType()))
-            .withColumn(
-            "salt",
-            F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(n_salts))
-             .cast(IntegerType())))
-
-
-def with_partitioning(df: DataFrame, num_parts: int = 64,
-                      n_salts: int = 8) -> DataFrame:
-    """Explicit url-hash part_key + salt, then repartition on both.
+    """Derive the url-hash part_key and salt columns (no physical
+    repartition; extract_pages repartitions on both after its oversize
+    gate).
 
     part_key is the checkpoint/lineage unit (stable across cluster
     sizes); salt is an independent second url hash that splits each
@@ -146,10 +133,15 @@ def with_partitioning(df: DataFrame, num_parts: int = 64,
     of url ONLY, so every crawl version of a url lands in the same task
     (which is what makes the extractor's per-task exact-duplicate guard
     in ``_extract_batches`` exact). On Iceberg this is hidden
-    partitioning ``bucket(num_parts, url)``.
-    """
-    df = with_part_columns(df, num_parts=num_parts, n_salts=n_salts)
-    return df.repartition(num_parts, "part_key", "salt")
+    partitioning ``bucket(num_parts, url)``."""
+    return (df.withColumn(
+            "part_key",
+            F.pmod(F.xxhash64(F.col("url")), F.lit(num_parts))
+             .cast(IntegerType()))
+            .withColumn(
+            "salt",
+            F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(n_salts))
+             .cast(IntegerType())))
 
 
 # ---------------------------------------------------------------------------
@@ -342,6 +334,8 @@ def extract_pages(pages: DataFrame, num_parts: int = 64,
     df = (df.withColumn("in_bytes", in_bytes)
             .withColumn("too_large", too_large)
             .withColumn("html", F.when(~too_large, F.col("html"))))
+    # url-only keys: every crawl version of a url shares one task, which
+    # keeps the per-task duplicate guard exact (see with_part_columns)
     df = df.repartition(num_parts, "part_key", "salt")
     # ship ONLY what the UDF reads — the raw crawl `text` column and the
     # salt never cross the JVM->Python boundary; `fmt` IS read: the

@@ -29,6 +29,7 @@ from textextract_spark.operators import (
     learned, multimodal, ranking, relational, releases, similarity,
     sketch, textdata, urls)
 from textextract_spark.operators.oracles import ORACLES
+from textextract_spark.operators.spark_text import spaceless
 from textextract_spark.pipeline import extract_pages
 
 
@@ -312,7 +313,7 @@ def _simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     #             way — astronomically unlikely past a few occurrences
     docs = (source(spark, sf_dir, "documents", spread=True)
             .select("doc_id", "text"))
-    eligible = (F.length(F.trim("text")) > 0) & ~sketch._is_spaceless(
+    eligible = (F.length(F.trim("text")) > 0) & ~spaceless(
         F.trim(F.lower(F.col("text"))))
     # plant ids live in the NEGATIVE range (-100000 - doc_id): provably
     # disjoint from any non-negative corpus id at every sf (r5 ADVICE #1

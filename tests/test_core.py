@@ -296,8 +296,9 @@ def test_pdf_roundtrip_property():
     """Property: build_pdf(lines) -> extract_pdf recovers the exact lines
     (joined with \\n) for printable latin-1 text including parens and
     backslashes — the literal-string escape path both ways — compressed
-    and uncompressed."""
-    from hypothesis import given, settings
+    and uncompressed. The pinned examples put the BT/ET operators inside
+    a string literal, which must not end (or open) a text object."""
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from textextract_spark.core.pdf_extract import extract_pdf
@@ -314,6 +315,8 @@ def test_pdf_roundtrip_property():
     @settings(max_examples=80, deadline=None)
     @given(lines=st.lists(line, min_size=1, max_size=6),
            compress=st.booleans())
+    @example(lines=["ET"], compress=False)
+    @example(lines=["(ET) BT"], compress=False)
     def check(lines, compress):
         text, spans = extract_pdf(build_pdf(lines, compress=compress))
         assert text == "\n".join(lines)

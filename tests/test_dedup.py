@@ -367,7 +367,7 @@ def test_pyxxh64_matches_spark(spark):
     32/8/4/1-byte processing boundaries."""
     from pyspark.sql import functions as F
 
-    from textextract_spark.operators.sketch import xxh64_bytes
+    from textextract_spark.operators.spark_text import xxh64_bytes
 
     toks = ["", "a", "spark", "ñé", "漢字テスト", "x" * 3, "x" * 4,
             "x" * 7, "x" * 8, "x" * 12, "x" * 31, "x" * 32, "x" * 33,
@@ -381,6 +381,41 @@ def test_pyxxh64_matches_spark(spark):
         assert sv == got[t], t
 
 
+def test_spark_text_matches_spark_builtins(spark):
+    """Each Python rule in spark_text equals the Spark built-in it
+    stands for, on whitespace edges (\\t, \\x0b, \\x0c; U+00A0 and
+    U+3000, which Java's \\s does not match), CJK and emoji: split_ws
+    vs split(c, '\\s+'), len vs length, code_points vs split(c, ''),
+    is_spaceless vs spaceless, and the WORD_RE findall of the lowered
+    text vs words."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from textextract_spark.operators.spark_text import (
+        WORD_RE, code_points, is_spaceless, spaceless, split_ws, words)
+
+    texts = ["", " ", "a b", "  lead and trail  ", "tab\tsep\x0bvt\x0cff",
+             "\r\nline\n", "nbsp\u00a0kept", "ideo\u3000space",
+             "数据分析处理内容文本", "数据 分析", "a😀b", "😀😀 🎉x",
+             "𝐚𝐛𝐜 word", "Mixed CASE Ünïcode words_42"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    c = F.col("t")
+    rows = {r["i"]: r for r in df.select(
+        "i", F.split(c, r"\s+").alias("ws"), F.length(c).alias("n"),
+        F.split(c, "").alias("cps"), spaceless(c).alias("sp"),
+        words(c).alias("w")).collect()}
+    for i, t in enumerate(texts):
+        r = rows[i]
+        assert split_ws(t) == list(r["ws"]), t
+        assert len(t) == r["n"], t
+        # split('', '') is [''], not []
+        assert ([chr(v) for v in code_points(t)] or [""]) == list(
+            r["cps"]), t
+        assert is_spaceless(t) == bool(r["sp"]), t
+        assert re.findall(WORD_RE, t.lower()) == list(r["w"]), t
+
+
 def test_simhash_arrow_votes_match_jvm_agg(spark):
     """The r7 Arrow vote kernel produces signatures identical to the
     r6 JVM explode + 64-column aggregation it replaced, on a corpus
@@ -390,7 +425,8 @@ def test_simhash_arrow_votes_match_jvm_agg(spark):
     from pyspark.sql import functions as F
 
     from textextract_spark.operators.sketch import (
-        SIMHASH_BITS, SIMHASH_CHAR_TOKEN, _is_spaceless, with_simhash)
+        SIMHASH_BITS, SIMHASH_CHAR_TOKEN, with_simhash)
+    from textextract_spark.operators.spark_text import spaceless
 
     docs = spark.createDataFrame(
         [(0, "alpha beta gamma delta epsilon zeta alpha"),
@@ -408,7 +444,7 @@ def test_simhash_arrow_votes_match_jvm_agg(spark):
     norm = F.trim(F.lower(F.col("text")))
     base = (docs.withColumn("__norm", norm)
             .withColumn("tokens", F.split(F.col("__norm"), r"\s+")))
-    sp = _is_spaceless(F.col("__norm"))
+    sp = spaceless(F.col("__norm"))
     word = (base.filter(~sp)
             .select("doc_id", F.explode("tokens").alias("tok")))
     chars = (base.filter(sp & (F.length("__norm") >= SIMHASH_CHAR_TOKEN))

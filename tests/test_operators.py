@@ -934,11 +934,14 @@ def test_winnow_fingerprint_guarantee(spark, tmp_path):
     """The winnowing guarantee (Schleimer et al.): two docs sharing a
     substring of length >= K+W-1 chars share at least one fingerprint;
     fingerprints are whitespace-normalization-invariant; counts obey
-    1 <= n_fingerprints <= n_windows."""
+    1 <= n_fingerprints <= n_windows, and n_grams is Spark's
+    length(norm) - (K-1), which counts code points (the emoji doc)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
-    from textextract_spark.operators.textdata import winnow_fingerprint
+    from textextract_spark.operators.textdata import (
+        WINNOW_K, winnow_fingerprint)
 
     shared = "the quick brown fox jumps over the lazy dog"
     texts = [
@@ -946,6 +949,7 @@ def test_winnow_fingerprint_guarantee(spark, tmp_path):
         "totally different opening " + shared,
         "no overlap here at all with anything else whatsoever",
         "  THE   quick brown fox jumps over the lazy dog  ",  # ws/case
+        "🎉 party 🎉 time 🎉 for all 🎉",  # astral code points
     ]
     tbl = pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()),
                     "text": texts, "lang": ["en"] * len(texts)})
@@ -954,7 +958,12 @@ def test_winnow_fingerprint_guarantee(spark, tmp_path):
     pq.write_table(tbl, str(d / "documents.parquet"))
 
     rows = {r.doc_id: r for r in winnow_fingerprint(spark, str(d)).collect()}
-    for r in rows.values():
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    want = {r.doc_id: r.n for r in spark.read.parquet(str(d)).select(
+        "doc_id", (F.length(norm) - (WINNOW_K - 1)).alias("n")).collect()}
+    assert set(rows) == set(want)
+    for i, r in rows.items():
+        assert r.n_grams == want[i], i
         assert 1 <= r.n_fingerprints <= r.n_grams - 3
     # docs 0/1 share a 43-char substring -> digests differ but at least
     # one fingerprint is shared; recompute sets via the same operator on
@@ -2308,6 +2317,7 @@ def test_repetition_arrow_matches_jvm(spark, tmp_path):
         "数据 分析 数据 分析",
         "\n\n",
         "x " + "y z " * 50,
+        "🎉 party 🎉\n🎉 party 🎉\nplain tail",  # astral code points
     ]
     rows = [{"doc_id": i, "text": t, "lang": "en"}
             for i, t in enumerate(texts)]
@@ -2383,14 +2393,15 @@ def test_repetition_arrow_matches_jvm(spark, tmp_path):
 
 
 def test_char_lm_score_non_ascii(spark, tmp_path):
-    """The r7 zero-copy UTF-8 scoring kernel takes a per-doc UTF-16
+    """The r7 zero-copy UTF-8 scoring kernel takes a per-doc code-point
     decode fallback for non-ASCII text. Under a bijective character
-    substitution (ascii lowercase -> fullwidth lowercase, one BMP code
-    unit each) the bigram COUNT structure of a corpus is unchanged, so
-    the trained model probabilities, per-doc n_bigrams, cross-entropy,
-    perplexity and bucket must all be EQUAL to the ascii original —
-    which exercises the fallback path end-to-end against the fast
-    path's values."""
+    substitution (ascii lowercase -> fullwidth lowercase, or -> the
+    astral mathematical bold lowercase U+1D41A..) the bigram COUNT
+    structure of a corpus is unchanged, so the trained model
+    probabilities, per-doc n_bigrams, cross-entropy, perplexity and
+    bucket must all be EQUAL to the ascii original — which exercises
+    the fallback path end-to-end against the fast path's values, and
+    pins that Spark's split-by-char counts code points."""
     from pyspark.sql import functions as F
 
     from textextract_spark.operators.textdata import char_lm_perplexity
@@ -2400,24 +2411,27 @@ def test_char_lm_score_non_ascii(spark, tmp_path):
              "the the the the repeated words here",
              "zz unseen bigrams qq xx vv",
              "mixed case Words Are Lowered First"]
-    wide = str.maketrans({c: chr(0xFF41 + ord(c) - ord("a"))
-                          for c in "abcdefghijklmnopqrstuvwxyz"})
 
-    def run(mapped: bool):
-        rows = [(i, t.lower().translate(wide) if mapped else t)
+    def substitution(first: int):
+        return str.maketrans({c: chr(first + ord(c) - ord("a"))
+                              for c in "abcdefghijklmnopqrstuvwxyz"})
+
+    def run(table):
+        rows = [(i, t.lower().translate(table) if table else t)
                 for i, t in enumerate(texts)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         ref = docs.filter(F.col("doc_id") < 3)
         return {r["doc_id"]: r
                 for r in char_lm_perplexity(docs, ref).collect()}
 
-    got_ascii = run(False)
-    got_wide = run(True)
-    assert set(got_ascii) == set(got_wide) == set(range(len(texts)))
-    for i in got_ascii:
-        for c in ("n_bigrams", "cross_entropy", "perplexity",
-                  "ppl_bucket"):
-            assert got_ascii[i][c] == got_wide[i][c], (i, c)
+    got_ascii = run(None)
+    for first in (0xFF41, 0x1D41A):  # fullwidth (BMP), bold (astral)
+        got = run(substitution(first))
+        assert set(got_ascii) == set(got) == set(range(len(texts)))
+        for i in got_ascii:
+            for c in ("n_bigrams", "cross_entropy", "perplexity",
+                      "ppl_bucket"):
+                assert got_ascii[i][c] == got[i][c], (hex(first), i, c)
 
 
 def test_char_lm_score_string_ids(spark):

@@ -1,5 +1,5 @@
 """End-to-end Spark pipeline tests: golden byte-identity, format-gate
-lockstep, dedup-latest, lineage metrics, checkpoint resume (SURVEY.md §5)."""
+lockstep, lineage metrics, checkpoint resume (SURVEY.md §5)."""
 
 import os
 import tempfile
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from textextract_spark.datagen import generate_pages, golden_rows
 from textextract_spark.pipeline import (
-    dedup_latest,
     extract_pages,
     lineage_metrics,
     run_pipeline,
@@ -47,15 +46,6 @@ def test_format_gate_matches_python_sniff(spark, corpus_dir):
         .select("url", "warc_ts", "html", "fmt").collect()
     for r in rows:
         assert r.fmt == sniff_format(bytes(r.html)), r.url
-
-
-def test_dedup_latest(spark, corpus_dir):
-    pages = spark.read.parquet(corpus_dir)
-    deduped = dedup_latest(pages)
-    assert deduped.groupBy("url").count().filter("count > 1").count() == 0
-    # kept row per url is the max warc_ts
-    expected = pages.groupBy("url").agg(F.max("warc_ts").alias("warc_ts"))
-    assert deduped.select("url", "warc_ts").exceptAll(expected).count() == 0
 
 
 def test_lineage_metrics_consistent(spark, corpus_dir, golden):

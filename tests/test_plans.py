@@ -492,3 +492,28 @@ def test_one_source_reader_and_one_model_memo():
                             re.M))
     assert caches == [("textextract_spark/operators/releases.py",
                        "_FEED_CACHE")]
+
+
+def test_one_set_of_spark_text_primitives():
+    """Structural guard: the Spark string semantics the Python kernels
+    reproduce (ASCII \\s, [a-z]+ words, XXH64, the md5 bucket, the
+    script rule) live in operators/spark_text.py only; no kernel counts
+    UTF-16 units, and no per-batch memo is a hand-written dict."""
+    import pathlib
+    root = pathlib.Path(__file__).resolve().parents[1]
+    ops = root / "textextract_spark" / "operators"
+    files = [*(p for p in ops.glob("*.py") if p.name != "oracles.py"),
+             root / "__spark_entry__.py"]
+    text = {p.relative_to(root).as_posix(): p.read_text() for p in files}
+
+    def holders(pattern):
+        return sorted(k for k, t in text.items() if re.search(pattern, t))
+
+    owner = ["textextract_spark/operators/spark_text.py"]
+    assert holders(r"re\.compile\([^)]*re\.ASCII") == owner
+    assert holders(r'"\[a-z\]\+"') == owner
+    assert holders(r"def xxh64_bytes\b") == owner
+    assert holders(r"def _?md5_bucket") == owner
+    assert holders(r"(?i)utf-?16") == []
+    assert holders(r"_is_spaceless") == []
+    assert holders(r": dict\[str, int\] = \{\}") == []

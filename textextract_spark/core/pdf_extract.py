@@ -29,7 +29,6 @@ _STREAM_START_RE = re.compile(
     rb"<<(?P<d>(?:[^<>]|<<[^<>]*>>)*?)>>\s*stream(?:\r\n|\n|\r)",
     re.DOTALL)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?![\s\d]*R)")
-_TEXTOBJ_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
 
 
 def _iter_streams(payload: bytes) -> Iterator[bytes]:
@@ -113,26 +112,39 @@ def _decode_hex(raw: bytes) -> str:
         return ""
 
 
-# Tokens inside a BT..ET object we care about, in order.
+# Content-stream tokens we care about, in order. Strings are tokens in
+# their own right, so a BT or ET inside a string never opens or closes
+# a text object, and one left-to-right pass keeps the scan linear.
 _TOKEN_RE = re.compile(
     rb"\((?P<lit>(?:\\.|[^\\()])*)\)"      # literal string
     rb"|<(?P<hex>[0-9A-Fa-f\s]*)>"          # hex string
     rb"|\](?P<tjend>\s*TJ)"                 # end of TJ array
-    rb"|(?P<op>Tj|TJ|Td|TD|T\*|Tm)",        # operators
+    rb"|(?P<op>BT|ET|Tj|TJ|Td|TD|T\*|Tm)",  # operators
 )
 
 
-def _extract_textobj(body: bytes) -> list[str]:
-    """Return the text chunks of one BT..ET object; '\\n' marks line breaks."""
-    chunks: list[str] = []
-    pending: list[str] = []  # strings seen since last show operator
-    started = False
-    for m in _TOKEN_RE.finditer(body):
-        if m.group("lit") is not None:
+def _text_objects(stream: bytes) -> Iterator[list[str]]:
+    """Yield the text chunks of each closed BT..ET object in order;
+    '\\n' marks line breaks. Tokens outside an object, and an object
+    never closed by ET, yield nothing."""
+    chunks: list[str] | None = None  # None: outside a text object
+    for m in _TOKEN_RE.finditer(stream):
+        op = m.group("op")
+        if chunks is None:
+            if op == b"BT":
+                chunks = []
+                pending: list[str] = []  # strings since last show op
+                started = False
+        elif op == b"ET":
+            yield chunks
+            chunks = None
+        elif op == b"BT":
+            continue
+        elif m.group("lit") is not None:
             pending.append(_decode_literal(m.group("lit")))
         elif m.group("hex") is not None:
             pending.append(_decode_hex(m.group("hex")))
-        elif m.group("tjend") is not None or m.group("op") in (b"Tj", b"TJ"):
+        elif m.group("tjend") is not None or op in (b"Tj", b"TJ"):
             if pending:
                 chunks.append("".join(pending))
                 pending = []
@@ -141,7 +153,6 @@ def _extract_textobj(body: bytes) -> list[str]:
             pending = []  # positioning args are not text
             if started:
                 chunks.append("\n")
-    return chunks
 
 
 def extract_pdf(payload: bytes) -> tuple[str, list[tuple[str, int, int]]]:
@@ -153,8 +164,8 @@ def extract_pdf(payload: bytes) -> tuple[str, list[tuple[str, int, int]]]:
     lines: list[str] = []
     cur: list[str] = []
     for stream in _iter_streams(payload):
-        for tm in _TEXTOBJ_RE.finditer(stream):
-            for chunk in _extract_textobj(tm.group(1)):
+        for obj in _text_objects(stream):
+            for chunk in obj:
                 if chunk == "\n":
                     if cur:
                         lines.append("".join(cur))

@@ -32,13 +32,15 @@ iteration plan never recomputes the token pass per round.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import memo, source
+from .spark_text import WORD_RE, md5_bucket, words
 
-WORD_RE = "[a-z]+"
 HASH_MOD = 1000003  # prime; keeps the Horner fold exact in int64
 
 DSIR_BUCKETS = 64
@@ -51,11 +53,14 @@ LR_ITERS = 12
 LR_POS_WORDS = ("dup",)  # the corpus's planted boilerplate marker
 LR_SCALE = 1_000_000  # fixed-point micro-units for the GD loop
 
-_HEX = "0123456789abcdef"
 
-
-def _words(col):
-    return F.regexp_extract_all(F.lower(col), F.lit(WORD_RE), 0)
+def _horner(w: str) -> int:
+    """Horner fold of ``w``'s code points mod HASH_MOD: _bucket's
+    hash before its bucket mod, for the Python kernels."""
+    v = 0
+    for c in w:
+        v = (v * 31 + ord(c)) % HASH_MOD
+    return v
 
 
 def _bucket(tok_col: str, buckets: int):
@@ -67,18 +72,6 @@ def _bucket(tok_col: str, buckets: int):
         f" CAST(0 AS BIGINT),"
         f" (a, i) -> (a * 31 + ascii(substring({tok_col}, i, 1)))"
         f" % {HASH_MOD}) % {buckets} AS INT)")
-
-
-def _md5_bucket(id_col: str = "doc_id"):
-    """The repo's deterministic 0..255 sampling bucket (mixture_sample
-    shape): first two hex digits of md5(doc_id)."""
-
-    def hexval(i):
-        return F.expr(
-            f"instr('{_HEX}', substr(md5(cast({id_col} as string)),{i},1))"
-        ) - 1
-
-    return hexval(1) * 16 + hexval(2)
 
 
 # -- DSIR importance resampling ---------------------------------------------
@@ -116,21 +109,12 @@ def dsir_doc_weights(docs: DataFrame, target_pred,
     from pyspark.sql.types import ArrayType, LongType
 
     word_re = re.compile(WORD_RE)
-    prime = HASH_MOD
 
     @F.pandas_udf(ArrayType(LongType()))
     def hist_of(lowered: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}  # per-batch distinct-token memo
-
+        @functools.cache  # per-batch distinct-token memo
         def hb(w: str) -> int:
-            v = cache.get(w)
-            if v is None:
-                v = 0
-                for ch in w:
-                    v = (v * 31 + ord(ch)) % prime
-                v %= buckets
-                cache[w] = v
-            return v
+            return _horner(w) % buckets
 
         out = []
         for t in lowered:
@@ -199,7 +183,7 @@ def dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior, with zero rand() so reruns keep identical docs."""
     docs = source(spark, sf_dir, "documents", spread=True)
     w = dsir_doc_weights(docs, F.col("lang") == F.lit(DSIR_TARGET_LANG))
-    keep = (_md5_bucket().cast("double")
+    keep = (md5_bucket("doc_id", 2).cast("double")
             < 256.0 * F.least(F.lit(1.0),
                               F.exp(F.col("avg_log_ratio"))
                               * DSIR_KEEP_BASE))
@@ -224,10 +208,10 @@ def _lr_features(docs: DataFrame, buckets: int):
     base = docs.select(
         "doc_id",
         (F.size(F.array_intersect(
-            _words(F.col("text")),
+            words(F.col("text")),
             F.array(*[F.lit(w) for w in LR_POS_WORDS]))) > 0)
         .cast("int").alias("y"),
-        _words(F.col("text")).alias("__w"))
+        words(F.col("text")).alias("__w"))
     labels = base.select("doc_id", "y").localCheckpoint(eager=True)
     # explode_outer + null filter: see dsir_doc_weights (r7)
     feats = (base.select("doc_id", F.explode_outer("__w").alias("__t"))
@@ -525,7 +509,7 @@ def cluster_balanced_sample(spark: SparkSession,
     rate = F.least(
         F.lit(256),
         F.floor(256.0 * BALANCE_TARGET / F.col("__n"))).cast("int")
-    keep = _md5_bucket("vec_id") < F.col("__rate")
+    keep = md5_bucket("vec_id", 2) < F.col("__rate")
     return (a.join(F.broadcast(sizes.select(
                 "__k", F.col("__n"), rate.alias("__rate"))), "__k")
             .select(F.col("__k").alias("cluster"), "__n", "__rate",
@@ -584,20 +568,11 @@ def embed_documents(docs: DataFrame, dim: int = EMBED_DIM,
     from pyspark.sql.types import ArrayType, LongType
 
     word_re = re.compile(WORD_RE)
-    mod2d, prime = 2 * dim, HASH_MOD
+    mod2d = 2 * dim
 
     @F.pandas_udf(ArrayType(LongType()))
     def embed(lowered: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}  # per-batch distinct-token memo
-
-        def h(w: str) -> int:
-            v = cache.get(w)
-            if v is None:
-                v = 0
-                for c in w:
-                    v = (v * 31 + ord(c)) % prime
-                cache[w] = v
-            return v
+        h = functools.cache(_horner)  # per-batch distinct-token memo
 
         out = []
         for t in lowered:

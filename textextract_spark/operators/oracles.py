@@ -1351,7 +1351,8 @@ def _mixture_sample_oracle() -> str:
     """GENERATED from textdata.MIXTURE_RATES (like the lang_trigram twin)
     so the mixture config cannot drift between engines; the two-hex-digit
     bucket arithmetic mirrors the Spark side exactly."""
-    from .textdata import _HEX, MIXTURE_DEFAULT_RATE, MIXTURE_RATES
+    from .spark_text import HEX_DIGITS
+    from .textdata import MIXTURE_DEFAULT_RATE, MIXTURE_RATES
 
     whens = "\n                        ".join(
         f"WHEN source = '{s}' THEN {r}"
@@ -1361,10 +1362,10 @@ def _mixture_sample_oracle() -> str:
             SELECT source,
                    CASE {whens}
                         ELSE {MIXTURE_DEFAULT_RATE} END AS rate,
-                   (instr('{_HEX}',
+                   (instr('{HEX_DIGITS}',
                           substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1)
                    * 16
-                   + (instr('{_HEX}',
+                   + (instr('{HEX_DIGITS}',
                             substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)
                        AS bucket
             FROM documents)
@@ -1515,12 +1516,13 @@ ORACLES["span_dedup_stats"] = _span_dedup_oracle()
 def _split_report_oracle() -> str:
     """GENERATED from textdata's split thresholds (twin of
     split_report): same md5 bucket arithmetic and cutoffs."""
-    from .textdata import _HEX, SPLIT_TRAIN_MAX, SPLIT_VAL_MAX
+    from .spark_text import HEX_DIGITS
+    from .textdata import SPLIT_TRAIN_MAX, SPLIT_VAL_MAX
 
-    bucket = (f"(instr('{_HEX}', substr(md5(CAST(doc_id AS VARCHAR)),"
-              f" 1, 1)) - 1) * 16"
-              f" + (instr('{_HEX}', substr(md5(CAST(doc_id AS VARCHAR)),"
-              f" 2, 1)) - 1)")
+    bucket = (f"(instr('{HEX_DIGITS}',"
+              f" substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
+              f" + (instr('{HEX_DIGITS}',"
+              f" substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)")
     return f"""
         WITH s AS (
             SELECT doc_id, length(text) AS len,
@@ -1541,7 +1543,8 @@ ORACLES["split_report"] = _split_report_oracle()
 def _temp_mixture_oracle() -> str:
     """GENERATED from textdata.TEMP_ALPHA (twin of temperature_mixture):
     identical count-driven rate formula and md5 bucket arithmetic."""
-    from .textdata import _HEX, TEMP_ALPHA
+    from .spark_text import HEX_DIGITS
+    from .textdata import TEMP_ALPHA
 
     exp = 1.0 - TEMP_ALPHA
     return f"""
@@ -1557,9 +1560,9 @@ def _temp_mixture_oracle() -> str:
             FROM c, t),
         d AS (
             SELECT doc_id, lang,
-                   (instr('{_HEX}', substr(
+                   (instr('{HEX_DIGITS}', substr(
                         md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                   + (instr('{_HEX}', substr(
+                   + (instr('{HEX_DIGITS}', substr(
                         md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) AS b
             FROM documents)
         SELECT d.lang,

@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import source
-
-WORD_RE = "[a-z]+"
+from .spark_text import words
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -34,12 +33,6 @@ BM25_QUERY = ("spark", "merge", "vector", "stream")
 BM25_TOP_K = 20
 
 TFIDF_PER_DOC = 3
-
-
-def _words(col):
-    """Lowercase word tokens (same pattern as bigram_pmi, so index
-    statistics compose with the collocation layer)."""
-    return F.regexp_extract_all(F.lower(col), F.lit(WORD_RE), 0)
 
 
 def bm25_search(docs: DataFrame, query: tuple[str, ...],
@@ -61,7 +54,7 @@ def bm25_search(docs: DataFrame, query: tuple[str, ...],
     if not query:
         raise ValueError("bm25_search needs at least one query term")
     base = docs.select(F.col(id_col).alias("doc_id"),
-                       _words(F.col(text_col)).alias("__w"))
+                       words(F.col(text_col)).alias("__w"))
     base = base.select("doc_id", F.size("__w").alias("__dl"), "__w")
     stats = base.agg(F.count("*").alias("__n"),
                      F.avg("__dl").alias("__avgdl"))
@@ -123,7 +116,7 @@ def tfidf_doc_keywords(docs: DataFrame, per_doc: int = TFIDF_PER_DOC,
     the doc's own distinct-word list, bounded by the doc itself.
     """
     toks = (docs.select(F.col(id_col).alias("doc_id"),
-                        F.explode(_words(F.col(text_col))).alias("w")))
+                        F.explode(words(F.col(text_col))).alias("w")))
     # NOT checkpointed (r7, measured): tf feeds both the document-
     # frequency aggregation and the scoring join, so the tokenize runs
     # twice — but materializing the corpus-sized (doc, word) table cost

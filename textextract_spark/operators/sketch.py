@@ -21,6 +21,7 @@ on BOTH the minhash and simhash paths.
 
 from __future__ import annotations
 
+import functools
 import random as _random
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import source, spread_partitions
+from .spark_text import is_spaceless, split_ws, xxh64_bytes
 
 K_HASHES = 64          # minhash permutations
 BANDS = 16             # LSH bands (K/BANDS rows per band)
@@ -35,7 +37,6 @@ ROWS_PER_BAND = K_HASHES // BANDS
 SHINGLE = 3            # word shingle width (space-segmented scripts)
 CHAR_SHINGLE = 5       # char n-gram width (unsegmented scripts: CJK etc.)
 SIMHASH_CHAR_TOKEN = 3  # char token width for simhash votes, unsegmented
-SPACELESS_MAX_WS = 0.05  # whitespace density below this = unsegmented
 MAX_BUCKET = 50        # cap candidate fan-out per band bucket (skew guard)
 # row-wise pre-sample threshold for monster buckets: below this the exact
 # first-MAX_BUCKET-by-doc_id sample is taken; above it a deterministic
@@ -45,15 +46,21 @@ _PRESAMPLE_TARGET = 64 * MAX_BUCKET
 SIMHASH_BITS = 64
 
 
-def _is_spaceless(norm):
-    """Script predicate: text whose whitespace density is below
-    SPACELESS_MAX_WS is unsegmented (CJK and other space-free scripts) —
-    word tokenization degenerates to whole-line tokens there, silently
-    collapsing near-dup recall (~20% of a Common-Crawl corpus). ASCII
-    whitespace only (Java regex and RE2 both scope \\s to ASCII, so the
-    Spark operator and the DuckDB twin agree byte-for-byte)."""
-    ws = F.length(norm) - F.length(F.regexp_replace(norm, r"\s", ""))
-    return (F.length(norm) > 0) & (ws / F.length(norm) < SPACELESS_MAX_WS)
+def _shingles(norm: str) -> dict | None:
+    """Distinct shingles of one JVM-normalized text, in first-occurrence
+    order (array_distinct's): CHAR_SHINGLE-char n-grams when the text is
+    spaceless, SHINGLE-word windows otherwise; None when the text has
+    too few chars or words for one shingle."""
+    if is_spaceless(norm):
+        n, k = len(norm), CHAR_SHINGLE
+        return (dict.fromkeys(norm[i:i + k] for i in range(n - k + 1))
+                if n >= k else None)
+    if not norm:
+        return None
+    toks, k = split_ws(norm), SHINGLE
+    return (dict.fromkeys(" ".join(toks[i:i + k])
+                          for i in range(len(toks) - k + 1))
+            if len(toks) >= k else None)
 
 
 def with_shingles(df: DataFrame) -> DataFrame:
@@ -69,44 +76,22 @@ def with_shingles(df: DataFrame) -> DataFrame:
     cannot drift — replacing the interpreted per-window slice+concat_ws
     transform (measured 3.3 s -> ~0.5 s at sf1.0/local[32] for this
     stage alone; the winnow_fingerprint / lang_trigram tradeoff).
-    Token semantics are replicated exactly: re.ASCII scopes Python's
-    \\s to the Java \\s charset, re.split keeps the same leading
-    empty token as Spark's split, " ".join matches concat_ws over
-    non-null strings, and dict.fromkeys preserves array_distinct's
-    first-occurrence order (BMP corpus assumption as elsewhere: Java
-    indexes UTF-16 units, Python codepoints — the full-value oracles
-    on the dedup family would flag an astral-plane divergence).
+    Token semantics are replicated exactly (spark_text): split_ws is
+    Spark's split on \\s+, " ".join matches concat_ws over non-null
+    strings, and dict.fromkeys preserves array_distinct's
+    first-occurrence order.
 
     Docs qualifying for neither branch carry shingles = NULL where the
     r6 two-branch union dropped their rows — inert for every consumer
     (minhash_signatures explode_outer-filters nulls; the jaccard
     verify join only ever fetches pair members, which have bands and
     therefore shingles)."""
-    import re
     from pyspark.sql.types import ArrayType, StringType
-
-    ws_run = re.compile(r"\s+", re.ASCII)
-    ws_one = re.compile(r"\s", re.ASCII)
-    k_c, k_w = CHAR_SHINGLE, SHINGLE
 
     @F.pandas_udf(ArrayType(StringType()))
     def shingles_of(norms: pd.Series) -> pd.Series:
-        out = []
-        for t in norms:
-            n = len(t)
-            if n and (n - len(ws_one.sub("", t))) / n < SPACELESS_MAX_WS:
-                out.append(list(dict.fromkeys(
-                    t[i:i + k_c] for i in range(n - k_c + 1)))
-                    if n >= k_c else None)
-            elif n:
-                toks = ws_run.split(t)
-                out.append(list(dict.fromkeys(
-                    " ".join(toks[i:i + k_w])
-                    for i in range(len(toks) - k_w + 1)))
-                    if len(toks) >= k_w else None)
-            else:
-                out.append(None)
-        return pd.Series(out)
+        return pd.Series([None if (sh := _shingles(t)) is None
+                          else list(sh) for t in norms])
 
     return spread_partitions(df).withColumn(
         "shingles", shingles_of(F.trim(F.lower(F.col("text")))))
@@ -137,12 +122,11 @@ def minhash_signatures(df: DataFrame,
     ~0.7 s duplicated work at 50k docs / local[32]).
 
     ONE Arrow-batched stage over the JVM-normalized text (r7, guide
-    §4.2): shingle exactly like with_shingles (same script-aware
-    tokenizer, same dict.fromkeys distinct — duplicate shingles can't
-    change a min anyway), hash each distinct shingle once through
-    xxh64_bytes (bit-identical to F.xxhash64, per-batch memo), keep
-    the low 32 bits, and take the K permutation minima as one
-    (shingles x K) vectorized numpy min. This replaces with_shingles
+    §4.2): shingle through the same _shingles as with_shingles
+    (duplicate shingles can't change a min anyway), hash each distinct
+    shingle once through xxh64_bytes (bit-identical to F.xxhash64,
+    per-batch memo), keep the low 32 bits, and take the K permutation
+    minima as one (shingles x K) vectorized numpy min. This replaces with_shingles
     -> explode (one row per SHINGLE) -> a 64-column min aggregation
     and its shuffle: signature stage measured 1.45s -> ~0.9s at 50k
     docs / local[32], zero exchange left in the stage. All values are
@@ -152,44 +136,21 @@ def minhash_signatures(df: DataFrame,
     tests/test_dedup.py::test_minhash_arrow_matches_jvm_agg. Docs
     qualifying for neither shingle branch emit no signature row (the
     explode_outer + null-filter behavior of the r6 form)."""
-    import re
-
     import numpy as np
 
-    ws_run = re.compile(r"\s+", re.ASCII)
-    ws_one = re.compile(r"\s", re.ASCII)
-    k_c, k_w = CHAR_SHINGLE, SHINGLE
-    max_ws = SPACELESS_MAX_WS
     A = np.asarray(_MH_A, dtype=np.int64)
     B = np.asarray(_MH_B, dtype=np.int64)
 
     def sig_kernel(batches):
-        memo: dict[str, int] = {}
-
+        @functools.cache
         def h32_of(t: str) -> int:
-            v = memo.get(t)
-            if v is None:
-                v = xxh64_bytes(t.encode("utf-8")) & 0xFFFFFFFF
-                memo[t] = v
-            return v
+            return xxh64_bytes(t.encode("utf-8")) & 0xFFFFFFFF
 
         for pdf in batches:
             ids, sigs, shs = [], [], []
             for doc_id, t in zip(pdf["doc_id"], pdf["__norm"]):
-                n = len(t)
-                if n and (n - len(ws_one.sub("", t))) / n < max_ws:
-                    if n < k_c:
-                        continue
-                    sh = dict.fromkeys(
-                        t[i:i + k_c] for i in range(n - k_c + 1))
-                elif n:
-                    toks = ws_run.split(t)
-                    if len(toks) < k_w:
-                        continue
-                    sh = dict.fromkeys(
-                        " ".join(toks[i:i + k_w])
-                        for i in range(len(toks) - k_w + 1))
-                else:
+                sh = _shingles(t)
+                if sh is None:
                     continue
                 hs = np.fromiter((h32_of(s) for s in sh),
                                  dtype=np.int64, count=len(sh))
@@ -416,73 +377,6 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
             .select("a_id", "b_id", F.round("__raw", 4).alias("jaccard")))
 
 
-# Spark-compatible XXH64 (seed 42) over raw bytes — bit-for-bit equal to
-# F.xxhash64 on a string column (validated against Spark for empty,
-# ASCII, multi-byte UTF-8 and >=32-byte inputs; pinned by
-# tests/test_dedup.py::test_pyxxh64_matches_spark). Pure Python: callers
-# run it behind a per-batch distinct-token memo, so the cost is per
-# distinct token, not per occurrence.
-_XXH_M = (1 << 64) - 1
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _XXH_M
-
-
-def xxh64_bytes(data: bytes, seed: int = 42) -> int:
-    """Unsigned XXH64; subtract 2^64 when bit 63 is set to get Spark's
-    signed long."""
-    M, P1, P2, P3, P4, P5 = (_XXH_M, _XXH_P1, _XXH_P2, _XXH_P3,
-                             _XXH_P4, _XXH_P5)
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + P1 + P2) & M
-        v2 = (seed + P2) & M
-        v3 = seed & M
-        v4 = (seed - P1) & M
-        while i + 32 <= n:
-            k = int.from_bytes(data[i:i + 8], "little")
-            v1 = (_rotl64((v1 + k * P2) & M, 31) * P1) & M
-            k = int.from_bytes(data[i + 8:i + 16], "little")
-            v2 = (_rotl64((v2 + k * P2) & M, 31) * P1) & M
-            k = int.from_bytes(data[i + 16:i + 24], "little")
-            v3 = (_rotl64((v3 + k * P2) & M, 31) * P1) & M
-            k = int.from_bytes(data[i + 24:i + 32], "little")
-            v4 = (_rotl64((v4 + k * P2) & M, 31) * P1) & M
-            i += 32
-        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12)
-             + _rotl64(v4, 18)) & M
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ (_rotl64((v * P2) & M, 31) * P1) & M) * P1 + P4) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + n) & M
-    while i + 8 <= n:
-        k = int.from_bytes(data[i:i + 8], "little")
-        h = (_rotl64(h ^ (_rotl64((k * P2) & M, 31) * P1) & M, 27)
-             * P1 + P4) & M
-        i += 8
-    if i + 4 <= n:
-        k = int.from_bytes(data[i:i + 4], "little")
-        h = (_rotl64(h ^ (k * P1) & M, 23) * P2 + P3) & M
-        i += 4
-    while i < n:
-        h = (_rotl64(h ^ (data[i] * P5) & M, 11) * P1) & M
-        i += 1
-    h ^= h >> 33
-    h = (h * P2) & M
-    h ^= h >> 29
-    h = (h * P3) & M
-    h ^= h >> 32
-    return h
-
-
 def with_simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc via token-hash bit votes.
 
@@ -499,10 +393,8 @@ def with_simhash(df: DataFrame) -> DataFrame:
     TOKEN) -> 64-column hash aggregation + its shuffle: measured
     2.9s -> 1.6s for the vote stage at 50k docs,
     local[32], zero shuffle left before signature assembly. Token
-    semantics replicated exactly (re.ASCII \\s split keeping empty
-    tokens like Java split with limit -1; trim/lower stays in the JVM;
-    BMP assumption for the char branch as in with_shingles — Java
-    substr slices UTF-16 units, Python codepoints).
+    semantics replicated exactly (spark_text.split_ws keeps empty
+    tokens like Spark's split; trim/lower stays in the JVM).
 
     The signature is assembled IN the kernel (r7, second pass): the
     majority test 2*ones_b > n over the per-bit ones-counts, packed
@@ -514,38 +406,27 @@ def with_simhash(df: DataFrame) -> DataFrame:
     Pinned end-to-end by test_simhash_arrow_votes_match_jvm_agg
     (final signatures vs the r6 JVM explode+agg reference).
     """
-    import re
-
     import numpy as np
 
-    ws_run = re.compile(r"\s+", re.ASCII)
-    ws_one = re.compile(r"\s", re.ASCII)
     k_c = SIMHASH_CHAR_TOKEN
-    max_ws = SPACELESS_MAX_WS
 
     def votes_kernel(batches):
-        memo: dict[str, int] = {}
-
+        @functools.cache
         def h_of(t: str) -> int:
-            v = memo.get(t)
-            if v is None:
-                v = xxh64_bytes(t.encode("utf-8"))
-                memo[t] = v
-            return v
+            return xxh64_bytes(t.encode("utf-8"))
 
         for pdf in batches:
             ids, ns, rows = [], [], []
             for doc_id, norm in zip(pdf["doc_id"], pdf["__norm"]):
-                n = len(norm)
-                if n and (n - len(ws_one.sub("", norm))) / n < max_ws:
+                if is_spaceless(norm):
+                    n = len(norm)
                     if n < k_c:  # no char n-grams: no vote row at all
                         continue
                     toks = [norm[i:i + k_c] for i in range(n - k_c + 1)]
                 else:
-                    # keeps leading/trailing empty tokens exactly like
-                    # Java split(limit=-1); an empty norm votes once
-                    # with the hash of "" — both match the r6 explode
-                    toks = ws_run.split(norm)
+                    # an empty norm votes once with the hash of "",
+                    # like the r6 explode
+                    toks = split_ws(norm)
                 hs = np.fromiter((h_of(t) for t in toks),
                                  dtype=np.uint64, count=len(toks))
                 rows.append(np.unpackbits(

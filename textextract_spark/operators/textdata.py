@@ -18,11 +18,15 @@ never row-at-a-time Python.
 
 from __future__ import annotations
 
+import functools
+from collections import Counter
+
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import memo, source
+from .spark_text import code_points, md5_bucket, split_ws, words
 
 
 # -- exact dedup / fingerprints ---------------------------------------------
@@ -268,8 +272,8 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted-lambda-vs-BLAS tradeoff as the ANN signature stage
     (similarity._lsh_keys_udf). Portable: the identical Horner
     arithmetic over unicode codepoints runs in the DuckDB twin
-    (unicode() returns the codepoint; utf-32-le frombuffer here), so the
-    full-value oracle is unaffected by the execution strategy.
+    (unicode() returns the codepoint; spark_text.code_points here), so
+    the full-value oracle is unaffected by the execution strategy.
     """
     import hashlib
 
@@ -284,19 +288,14 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc) measured ~0.9 s at a 50k-doc replica, half the query.
     # hashlib.md5 over ','.join(str(v)) is byte-identical to Spark's
     # md5(concat_ws(',', transform(fp, cast))) — Long.toString and
-    # str(int) agree — and n_grams counts UTF-16 code units exactly
-    # like the r6 F.length. Values pinned by the full DuckDB oracle
-    # row (md5(array_to_string(fp, ',')) on the twin side).
+    # str(int) agree — and n_grams counts code points exactly like
+    # the r6 F.length. Values pinned by the full DuckDB oracle row
+    # (md5(array_to_string(fp, ',')) on the twin side).
     def winnow_kernel(batches):
         for pdf in batches:
             ids, ngs, nfs, mins, digs = [], [], [], [], []
             for doc_id, t in zip(pdf["doc_id"], pdf["__n"]):
-                cps = np.frombuffer(t.encode("utf-32-le"),
-                                    dtype=np.uint32).astype(np.int64)
-                # n_grams in UTF-16 units = Java length(); cps are
-                # codepoints, so recount units for the astral-safe value
-                u16 = (len(t) if t.isascii()
-                       else len(t.encode("utf-16-le")) // 2)
+                cps = code_points(t).astype(np.int64)
                 n = len(cps) - (k - 1)
                 h = np.zeros(n, dtype=np.int64)
                 for j in range(k):
@@ -305,7 +304,7 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                     h, w).min(axis=1)
                 fp = np.unique(wins)  # sorted distinct
                 ids.append(doc_id)
-                ngs.append(u16 - (k - 1))
+                ngs.append(n)
                 nfs.append(len(fp))
                 mins.append(int(fp[0]))
                 digs.append(hashlib.md5(
@@ -419,9 +418,8 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
     PMI is computed on exact integer counts and rounded to 4 places in
     BOTH engines, so ordering and values are portable.
     """
-    words = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
     dw = source(spark, sf_dir, "documents", spread=True).select(
-        words.alias("__w"))
+        words(F.col("text")).alias("__w"))
     # explode_outer + null filter throughout (r7): plain explode infers
     # a size()>0 filter that re-evaluates the inlined tokenizer /
     # bigram transform a second time per row (guide §7.2)
@@ -562,13 +560,10 @@ def token_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # level bpe_segment (pytest compares the UDF against it, so a
         # second inline copy could silently drift from the thing the
         # test certifies). The learned ranks ride the closure; the memo
-        # is worker-lifetime, ~O(vocabulary) total.
-        cache: dict[str, int] = {}
-
+        # is per batch, ~O(batch vocabulary).
+        @functools.cache
         def n(w: str) -> int:
-            if w not in cache:
-                cache[w] = len(bpe_segment(w, merges_t, ranks))
-            return cache[w]
+            return len(bpe_segment(w, merges_t, ranks))
 
         rows = []
         for t in texts:
@@ -762,12 +757,9 @@ def bpe_train_stats(spark: SparkSession, sf_dir: str,
         # per-batch memo over distinct words; the learned ranks ride the
         # closure (broadcast shape). Kernel = the SAME bpe_segment the
         # pytest battery certifies.
-        cache: dict[str, int] = {}
-
+        @functools.cache
         def n(w: str) -> int:
-            if w not in cache:
-                cache[w] = len(bpe_segment(w, merges_t, ranks))
-            return cache[w]
+            return len(bpe_segment(w, merges_t, ranks))
         return ws.map(n)
 
     words = _word_freqs(source(spark, sf_dir, "documents", spread=True),
@@ -867,38 +859,28 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZERO exchange before the final sort; the ratio/round expressions
     stay in Spark, bit-identical to the r6 projection. Semantics
     replicated exactly: trim/lower of the gram tokenizer stays in the
-    JVM (__norm), line trim is strip(' ') = Spark trim, \\s+ is
-    re.ASCII = Java's charset, split keeps leading/trailing empty
-    tokens like Java split(limit=-1), and all lengths are UTF-16 code
-    units (len of the utf-16-le encoding / 2) = Java length(), astral
-    planes included. The packed (cnt, len) max tie-break is unchanged.
+    JVM (__norm), line trim is strip(' ') = Spark trim, the gram
+    tokens are spark_text.split_ws = Spark's split on \\s+, and every
+    length is len() = Spark length() (both count code points). The
+    packed (cnt, len) max tie-break is unchanged.
     Pinned by tests/test_operators.py::
     test_repetition_arrow_matches_jvm against the r6 explode+agg form.
     """
     from pyspark.sql.types import LongType, StructField, StructType
-    import re
-
-    ws_run = re.compile(r"\s+", re.ASCII)
-
-    def u16len(s: str) -> int:
-        return len(s) if s.isascii() else len(s.encode("utf-16-le")) // 2
 
     def stats_kernel(batches):
         for pdf in batches:
             rows = []
             for doc_id, text, norm in zip(pdf["doc_id"], pdf["__t"],
                                           pdf["__norm"]):
-                counts: dict[str, int] = {}
-                for ln in text.split("\n"):
-                    ln = ln.strip(" ")
-                    if ln:
-                        counts[ln] = counts.get(ln, 0) + 1
+                counts = Counter(filter(None, (
+                    ln.strip(" ") for ln in text.split("\n"))))
                 if not counts:
                     continue  # the r6 explode emitted no row either
                 n_lines = line_chars = dup_chars = ell = bul = 0
                 for ln, c in counts.items():
                     n_lines += c
-                    ll = u16len(ln)
+                    ll = len(ln)
                     line_chars += c * ll
                     if c > 1:
                         dup_chars += c * ll
@@ -906,18 +888,14 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ell += c
                     if ln[0] in "-*•":
                         bul += c
-                toks = ws_run.split(norm)
+                toks = split_ws(norm)
                 packed = None
                 if len(toks) >= 2:
-                    gc: dict[str, int] = {}
-                    prev = toks[0]
-                    for t in toks[1:]:
-                        g = prev + " " + t
-                        gc[g] = gc.get(g, 0) + 1
-                        prev = t
-                    packed = max(c * 100000 + u16len(g)
+                    gc = Counter(a + " " + b
+                                 for a, b in zip(toks, toks[1:]))
+                    packed = max(c * 100000 + len(g)
                                  for g, c in gc.items())
-                rows.append((doc_id, u16len(text), n_lines, len(counts),
+                rows.append((doc_id, len(text), n_lines, len(counts),
                              line_chars, dup_chars, ell, bul, packed))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "n_chars", "n_lines",
@@ -962,7 +940,6 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # digits — the bucket arithmetic is portable to ANSI SQL, unlike conv).
 MIXTURE_RATES: dict[str, int] = {"src0": 256, "src1": 128, "src2": 64}
 MIXTURE_DEFAULT_RATE = 26  # ~10%
-_HEX = "0123456789abcdef"
 
 
 def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,11 +961,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     for src, r in MIXTURE_RATES.items():
         rate = F.when(F.col("source") == src, F.lit(r)).otherwise(rate)
 
-    def hexval(i):
-        return F.expr(
-            f"instr('{_HEX}', substr(md5(cast(doc_id as string)),{i},1))"
-        ) - 1
-    bucket = hexval(1) * 16 + hexval(2)
+    bucket = md5_bucket("doc_id", 2)
     # unspread scan, deliberately (r7): one md5 per row before a
     # map-side-combinable agg — the agg's own exchange reparallelizes,
     # so the spread repartition bought nothing but its shuffle
@@ -1019,11 +992,7 @@ def dataset_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Returns the input ids with a `split` column.
     """
-    def hexval(i):
-        return F.expr(
-            f"instr('{_HEX}', substr(md5(cast({id_col} as string)),{i},1))"
-        ) - 1
-    b = hexval(1) * 16 + hexval(2)
+    b = md5_bucket(id_col, 2)
     split = (F.when(b < SPLIT_TRAIN_MAX, F.lit("train"))
              .when(b < SPLIT_VAL_MAX, F.lit("val"))
              .otherwise(F.lit("test")))
@@ -1241,11 +1210,7 @@ def temperature_mixture(spark: SparkSession, sf_dir: str,
                              F.lit(1.0 - alpha))).cast("int"))
                       .alias("__rate")))
 
-    def hexval(i):
-        return F.expr(
-            f"instr('{_HEX}', substr(md5(cast(doc_id as string)),{i},1))"
-        ) - 1
-    bucket = hexval(1) * 16 + hexval(2)
+    bucket = md5_bucket("doc_id", 2)
     return (docs.withColumn("__b", bucket)
             .join(F.broadcast(rates), "lang")
             .groupBy("lang")
@@ -1428,9 +1393,9 @@ def char_lm_train(ref: DataFrame) -> tuple:
     classic train-once/broadcast model build, the same build/query
     split as similarity.label_centroids. Returns the numpy lookup
     tables (pk, pv, c1k, c1v, g_lpu) that ride the scoring kernel's
-    closure: sorted int64 UTF-16 pair keys -> micro-unit log-probs,
-    first-char fallback table, and the global unseen-first-char
-    default.
+    closure: sorted int64 code-point pair keys (c1 << 21 | c2) ->
+    micro-unit log-probs, first-char fallback table, and the global
+    unseen-first-char default.
 
     Every quantized log-prob is produced by the SAME Spark expression
     tree the r6 join emitted — the model is computed in Spark and
@@ -1438,7 +1403,7 @@ def char_lm_train(ref: DataFrame) -> tuple:
     cross-engine.
 
     (r7 note: an Arrow/numpy bigram-histogram train pass was tried —
-    one batch-wide np.unique over UTF-16 pair keys — and measured
+    one batch-wide np.unique over code-point pair keys — and measured
     SLOWER than this codegen explode+agg (3.4s vs 3.0s at 50k docs),
     because the ref slice then crosses the Python boundary twice;
     reverted, evidence kept here.)
@@ -1502,21 +1467,18 @@ def char_lm_train(ref: DataFrame) -> tuple:
     if g_lpu is None:  # empty reference corpus: nothing will be scored
         g_lpu = 0
 
-    def u16(s: str) -> "np.ndarray":
-        return np.frombuffer(s.encode("utf-16-le"), dtype="<u2")
-
     pk = np.empty(len(pair_map), dtype=np.int64)
     pv = np.empty(len(pair_map), dtype=np.int64)
     for i, (bg, val) in enumerate(pair_map.items()):
-        cu = u16(bg)  # two BMP chars -> two code units
-        pk[i] = int(cu[0]) * 65536 + int(cu[1])
+        c1, c2 = code_points(bg).tolist()
+        pk[i] = c1 << 21 | c2
         pv[i] = val
     order = np.argsort(pk)
     pk, pv = pk[order], pv[order]
     c1k = np.empty(len(c1_map), dtype=np.int64)
     c1v = np.empty(len(c1_map), dtype=np.int64)
     for i, (c1, val) in enumerate(c1_map.items()):
-        c1k[i] = int(u16(c1)[0])
+        c1k[i] = ord(c1)
         c1v[i] = val
     order = np.argsort(c1k)
     c1k, c1v = c1k[order], c1v[order]
@@ -1558,8 +1520,8 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
     the SAME Spark expression tree the r6 join emitted — the model
     table is computed in Spark and collected, never re-derived in
     Python — and the per-doc sum is exact integer addition in numpy.
-    Bigrams in Python are adjacent UTF-16 CODE UNITS
-    (pad.encode('utf-16-le')), which is exactly Java's split-by-char
+    Bigrams in Python are adjacent code points
+    (spark_text.code_points), which is exactly Spark's split-by-char
     semantics, so the gram stream is identical to the r6 explode's.
     """
     import numpy as np
@@ -1570,7 +1532,7 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
     pk, pv, c1k, c1v, g_lpu = model
 
     def key64(a, b):
-        return a.astype(np.int64) * 65536 + b.astype(np.int64)
+        return a.astype(np.int64) << 21 | b.astype(np.int64)
     def table_vals(keys, mask, tk, tv):
         """(values, hit-mask) of the sorted-key table lookup, 0 and
         False wherever mask is off or the key is absent — exact int64
@@ -1586,11 +1548,11 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
     # kernel ran two searchsorted lookups PER DOCUMENT; with ~2k model
     # keys the per-doc fixed cost (string materialization, encode,
     # frombuffer, two lookups, a Python sum) dominated the 3x-corpus
-    # scoring set. Now the batch's code units come straight from the
+    # scoring set. Now the batch's code points come straight from the
     # Arrow string column's UTF-8 data buffer (zero-copy: for ASCII
-    # text — the whole driver corpus — bytes ARE UTF-16 code-unit
-    # values; any non-ASCII document takes a per-doc UTF-16 decode
-    # fallback), cross-document boundary pairs are masked to zero,
+    # text — the whole documents table — bytes ARE code points; any
+    # non-ASCII document takes a per-doc decode fallback),
+    # cross-document boundary pairs are masked to zero,
     # both lookups run once over the whole batch, and per-doc totals
     # come from np.add.reduceat — the same int64 additions in a
     # different order-independent grouping, so every (n_bigrams,
@@ -1628,8 +1590,8 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
                 offs[0]:offs[-1]]
             offs = offs - offs[0]
             # per-doc max byte: ASCII docs' UTF-8 bytes equal their
-            # UTF-16 code units, no decode needed (pads are >= 3
-            # bytes, so reduceat segments are never empty)
+            # code points, no decode needed (pads are >= 3 bytes, so
+            # reduceat segments are never empty)
             seg_max = np.maximum.reduceat(data, offs[:-1])
             if seg_max.max() < 128:
                 cat = data
@@ -1638,16 +1600,12 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
                 parts = []
                 for i in range(n):
                     seg = data[offs[i]:offs[i + 1]]
-                    if seg_max[i] < 128:
-                        parts.append(seg)
-                    else:
-                        parts.append(np.frombuffer(
-                            seg.tobytes().decode("utf-8")
-                               .encode("utf-16-le"), dtype="<u2"))
+                    parts.append(
+                        seg if seg_max[i] < 128
+                        else code_points(seg.tobytes().decode("utf-8")))
                 lens = np.fromiter((len(p) for p in parts),
                                    dtype=np.int64, count=n)
-                cat = np.concatenate(parts).astype(np.uint16,
-                                                   copy=False)
+                cat = np.concatenate(parts)  # uint32
             keys = key64(cat[:-1], cat[1:])
             ends = np.cumsum(lens)
             mask = np.ones(len(keys), dtype=bool)
@@ -1882,16 +1840,15 @@ def lang_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile = {lang: tuple(TRIGRAM_PROFILE[lang])
                for lang in _PROFILE_LANGS}
     # r7: vectorized membership counting — pack each profile trigram's
-    # three CODEPOINTS (utf-32, so astral chars keep Python-slice
-    # semantics) into one int64 key; per doc, searchsorted against the
-    # sorted key table + bincount + one (keys x langs) matvec replaces
+    # three CODEPOINTS into one int64 key; per doc, searchsorted against
+    # the sorted key table + bincount + one (keys x langs) matvec replaces
     # the per-character Python Counter loop (which built a count for
     # EVERY trigram of the doc just to read back ~500 profile cells).
     # A gram shared by several languages (or repeated in one tuple) is
     # handled by the contribution matrix exactly like the Counter sum.
     def key_of(g: str) -> int:
-        c = np.frombuffer(g.encode("utf-32-le"), dtype="<u4")
-        return ((int(c[0]) << 21) + int(c[1]) << 21) + int(c[2])
+        c0, c1, c2 = map(ord, g)
+        return ((c0 << 21) + c1 << 21) + c2
 
     uniq: dict[int, int] = {}
     rows = []
@@ -1913,8 +1870,7 @@ def lang_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         nk = len(pk)
         for t in texts:
             pad = " " + t.lower() + " "
-            u = np.frombuffer(pad.encode("utf-32-le"),
-                              dtype="<u4").astype(np.int64)
+            u = code_points(pad).astype(np.int64)
             k = ((u[:-2] << 21) + u[1:-1] << 21) + u[2:]
             idx = np.minimum(np.searchsorted(pk, k), nk - 1)
             hit = pk[idx] == k
@@ -1986,18 +1942,6 @@ def lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the module: the key is synthetic with FIXED cardinality, never a
 # data-skewed key, and the per-task state is a running sum.
 
-def _md5_bucket_n(id_col: str, n_hex: int):
-    """First n_hex md5 hex digits of the id as an integer bucket
-    (16^n_hex buckets) — the generalized form of _md5_bucket-style
-    sampling keys, used where bucket COUNT is a scale knob."""
-    b = F.lit(0)
-    for i in range(1, n_hex + 1):
-        b = b * 16 + (F.expr(
-            f"instr('{_HEX}', substr(md5(cast({id_col} as string)),{i},1))"
-        ) - 1)
-    return b.cast("int")
-
-
 PACK_BUDGET = 64  # tokens per packed training sequence
 
 
@@ -2025,7 +1969,7 @@ def pack_training_sequences(chunks: DataFrame,
     """
     from pyspark.sql import Window
 
-    b = _md5_bucket_n(id_col, bucket_hex)
+    b = md5_bucket(id_col, bucket_hex)
     w = (Window.partitionBy("bucket")
          .orderBy(id_col, ord_col)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -2275,7 +2219,7 @@ def pack_sequences_text(chunks: DataFrame,
     a hot-key window. ``bucket_hex`` as in pack_training_sequences."""
     from pyspark.sql import Window
 
-    b = _md5_bucket_n(id_col, bucket_hex)
+    b = md5_bucket(id_col, bucket_hex)
     toks = F.filter(F.split(F.col(text_col), r"\s+"),
                     lambda x: x != "")
     base = chunks.select(F.col(id_col), F.col(ord_col),

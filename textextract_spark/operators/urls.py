@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import source
+from .spark_text import words
 
 TRACKING_PREFIX = "utm_"  # the industry-standard tracking-param family
 
@@ -704,8 +705,7 @@ def inbound_anchor_terms(pages: DataFrame, html_col: str = "html",
             .select(F.lower(F.regexp_extract(
                         F.col("__a.dst"), r"^https?://([^/:?#]+)", 1))
                      .alias("dst_host"),
-                    F.explode_outer(F.regexp_extract_all(
-                        F.lower(F.col("__a.txt")), F.lit("[a-z]+"), 0))
+                    F.explode_outer(words(F.col("__a.txt")))
                      .alias("term"))
             .filter(F.col("term").isNotNull()))
     counts = (tokd.groupBy("dst_host", "term")

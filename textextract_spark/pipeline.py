@@ -33,7 +33,7 @@ from collections.abc import Iterator
 from functools import reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, LongType, StringType, StructField, StructType,
@@ -71,31 +71,6 @@ EXTRACTED_SCHEMA = StructType([
 # ---------------------------------------------------------------------------
 # Plan-level stages (pure DataFrame expressions)
 # ---------------------------------------------------------------------------
-
-def dedup_latest(df: DataFrame, key: str = "url",
-                 order: str = "warc_ts",
-                 payload_col: str = "html") -> DataFrame:
-    """Latest crawl per url wins (SURVEY.md §2.5 W3).
-
-    row_number window over url: one shuffle + per-partition sort.
-    Tie-break on payload hash keeps the winner deterministic even if two
-    crawls share a timestamp. Reference analog: first-row-wins active
-    subscription (/root/reference/backend/database/models.py:571-583).
-
-    Cost note (measured, see SCALE.md): WindowExec row-copies its
-    buffered rows, so NEVER run this over payload-wide rows — the
-    extraction pipeline instead selects winners with a payload-free
-    (url, max(warc_ts)) aggregation + semi join (extract_pages). This
-    general window form remains for narrow-row dedup (events, metrics).
-    (groupBy+max_by(payload_struct) is 25x worse still:
-    ObjectHashAggregate, no codegen.)
-    """
-    w = Window.partitionBy(key).orderBy(
-        F.desc(order), F.desc(F.xxhash64(F.col(payload_col))))
-    return (df.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1)
-              .drop("__rn"))
-
 
 def with_format(df: DataFrame, payload_col: str = "html") -> DataFrame:
     """Format gate as DataFrame predicates BEFORE UDF dispatch (north_rule).

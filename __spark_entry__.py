@@ -54,20 +54,18 @@ _CHROME_POST = ("</p></article><footer><a href=\"/tos\">terms</a>"
                 "</footer></body></html>")
 
 
-def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize a pages table (input_hint schema) from the driver's
-    documents table — deterministic, no external data."""
-    docs = source(spark, sf_dir, "documents", spread=True)
-    html = F.encode(
-        F.concat(F.lit(_CHROME_PRE), F.col("text"), F.lit(_CHROME_POST)),
-        "UTF-8")
+def _pages(rows: DataFrame, html, scheme: str = "doc://") -> DataFrame:
+    """Synthesize a pages table (input_hint schema) from documents-shaped
+    rows (doc_id, text, lang) and an ``html`` payload column —
+    deterministic, no external data."""
     # lazily checkpointed (r7): extract_pages references its input
     # twice (winner aggregation + dedup semi join) and Catalyst does
-    # not share subtrees, so the chrome synthesis ran twice per driver
-    # row; one materialization feeds both branches (a parquet-backed
-    # pages table gets the same effect from the scan cache for free)
-    return docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
+    # not share subtrees, so the synthesis (and any payload UDF) ran
+    # twice per driver row; one materialization feeds both branches (a
+    # parquet-backed pages table gets the same effect from the scan
+    # cache for free)
+    return rows.select(
+        F.concat(F.lit(scheme), F.col("doc_id").cast("string"))
          .alias("url"),
         F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id"))
          .alias("warc_ts"),
@@ -76,9 +74,47 @@ def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang")).localCheckpoint(eager=False)
 
 
+def _chrome_pages(rows: DataFrame) -> DataFrame:
+    """``_pages`` whose payload is each row's text in the fixed HTML
+    chrome (the extractor keeps exactly trim(text) of it)."""
+    return _pages(rows, F.encode(
+        F.concat(F.lit(_CHROME_PRE), F.col("text"), F.lit(_CHROME_POST)),
+        "UTF-8"))
+
+
+def _extract(spark: SparkSession, pages: DataFrame, **kw) -> DataFrame:
+    """The extraction step of the driver rows (entry keeps its pinned
+    16 partitions)."""
+    return extract_pages(pages, num_parts=_num_parts(spark), n_salts=4,
+                         **kw)
+
+
+def _curation_input(spark: SparkSession, sf_dir: str,
+                    near: bool = True) -> tuple[DataFrame, DataFrame]:
+    """(documents, extracted url/status/text) for the curation rows.
+
+    Planted copies make the dedup stages non-vacuous. Plant ids live in
+    the NEGATIVE range, disjoint from any corpus id at every sf:
+    -100000 - doc_id exact copies of docs 0-9 and, with ``near``,
+    -200000 - doc_id near copies of docs 0-19 (one appended word,
+    " postscriptum")."""
+    docs = (source(spark, sf_dir, "documents", spread=True)
+            .select("doc_id", "text", "lang"))
+    both = docs.unionByName(docs.filter(F.col("doc_id") < 10).select(
+        (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang"))
+    if near:
+        both = both.unionByName(docs.filter(F.col("doc_id") < 20).select(
+            (-F.col("doc_id") - 200000).alias("doc_id"),
+            F.concat("text", F.lit(" postscriptum")).alias("text"),
+            "lang"))
+    ex = _extract(spark, _chrome_pages(both)).select("url", "status", "text")
+    return docs, ex
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    pages = _pages_from_documents(spark, "/root/testdata/sf0.001")
+    pages = _chrome_pages(
+        source(spark, "/root/testdata/sf0.001", "documents", spread=True))
     out = extract_pages(pages, num_parts=16, n_salts=4)
     return out.select("url", "part_key", "text", "spans", "status",
                       F.col("meta.fmt").alias("fmt"),
@@ -104,9 +140,8 @@ def _extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical expected text in pure SQL. (The broader byte-identity
     oracle over the mixed html/pdf/plain corpus runs in pytest against
     golden files.)"""
-    pages = _pages_from_documents(spark, sf_dir)
-    return _extraction_report(extract_pages(pages, num_parts=_num_parts(spark),
-                          n_salts=4))
+    pages = _chrome_pages(source(spark, sf_dir, "documents", spread=True))
+    return _extraction_report(_extract(spark, pages))
 
 
 def _extract_mixed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,20 +161,11 @@ def _extract_mixed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return doc_id.map(lambda i: build_pdf(
             [f"Document {i}", "flate stream body"], compress=True))
 
-    docs = source(spark, sf_dir, "documents", spread=True)
-    pages = docs.select(
-        F.concat(F.lit("docm://"), F.col("doc_id").cast("string"))
-         .alias("url"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id"))
-         .alias("warc_ts"),
+    pages = _pages(
+        source(spark, sf_dir, "documents", spread=True),
         F.when(F.col("doc_id") % 3 == 0, pdf_payload(F.col("doc_id")))
-         .otherwise(F.encode("text", "UTF-8")).alias("html"),
-        F.col("text"),
-        F.col("lang")).localCheckpoint(eager=False)
-    # ^ one materialization: without it the winner/semi diamond ran
-    #   the PDF-build pandas UDF twice per row
-    return _extraction_report(extract_pages(pages, num_parts=_num_parts(spark),
-                          n_salts=4))
+         .otherwise(F.encode("text", "UTF-8")), scheme="docm://")
+    return _extraction_report(_extract(spark, pages))
 
 
 def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,9 +283,7 @@ def _extract_warc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = (read_warc(spark, _warc_docs_dir(sf_dir))
              .withColumn("lang", F.lit(None).cast("string")))
-    return _extraction_report(
-        extract_pages(pages, num_parts=_num_parts(spark), n_salts=4,
-                      digest_col="digest"))
+    return _extraction_report(_extract(spark, pages, digest_col="digest"))
 
 
 def _minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,26 +391,9 @@ def _curate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (md5, min(url)) only, map-side combinable, then an
     AQE-splittable hash-key join back. decisions: drop:extract |
     drop:quality | drop:dup | keep."""
-    docs = (source(spark, sf_dir, "documents", spread=True)
-            .select("doc_id", "text", "lang"))
-    plants = docs.filter(F.col("doc_id") < 10).select(
-        (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
-    both = docs.unionByName(plants)
-    pages = both.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-         .alias("url"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id"))
-         .alias("warc_ts"),
-        F.encode(F.concat(F.lit(_CHROME_PRE), F.col("text"),
-                          F.lit(_CHROME_POST)), "UTF-8").alias("html"),
-        F.col("text"), F.col("lang")).localCheckpoint(eager=False)
-    # ^ one synthesis materialization for extract_pages' winner/semi
-    #   diamond (the _pages_from_documents note)
     from textextract_spark.pipeline import curation_decisions
 
-    ex = (extract_pages(pages, num_parts=_num_parts(spark),
-                          n_salts=4)
-          .select("url", "status", "text"))
+    _, ex = _curation_input(spark, sf_dir, near=False)
     return (curation_decisions(ex)
             .select("url", "status", "quality", "decision",
                     F.length("text").alias("text_len"), "text")
@@ -431,27 +438,7 @@ def _curate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE cluster closure."""
     from textextract_spark.pipeline import curation_decisions_neardup
 
-    docs = (source(spark, sf_dir, "documents", spread=True)
-            .select("doc_id", "text", "lang"))
-    exact_plants = docs.filter(F.col("doc_id") < 10).select(
-        (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
-    near_plants = docs.filter(F.col("doc_id") < 20).select(
-        (-F.col("doc_id") - 200000).alias("doc_id"),
-        F.concat("text", F.lit(" postscriptum")).alias("text"), "lang")
-    both = docs.unionByName(exact_plants).unionByName(near_plants)
-    pages = both.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-         .alias("url"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id"))
-         .alias("warc_ts"),
-        F.encode(F.concat(F.lit(_CHROME_PRE), F.col("text"),
-                          F.lit(_CHROME_POST)), "UTF-8").alias("html"),
-        F.col("text"), F.col("lang")).localCheckpoint(eager=False)
-    # ^ one synthesis materialization for extract_pages' winner/semi
-    #   diamond (the _pages_from_documents note)
-    ex = (extract_pages(pages, num_parts=_num_parts(spark),
-                          n_salts=4)
-          .select("url", "status", "text"))
+    _, ex = _curation_input(spark, sf_dir)
     return (curation_decisions_neardup(ex)
             .select("url", "status", "quality", "decision",
                     F.length("text").alias("text_len"))
@@ -474,27 +461,7 @@ def _curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, the add-one char-bigram LM, and the md5 split buckets."""
     from textextract_spark.pipeline import curation_decisions_full
 
-    docs = (source(spark, sf_dir, "documents", spread=True)
-            .select("doc_id", "text", "lang"))
-    exact_plants = docs.filter(F.col("doc_id") < 10).select(
-        (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
-    near_plants = docs.filter(F.col("doc_id") < 20).select(
-        (-F.col("doc_id") - 200000).alias("doc_id"),
-        F.concat("text", F.lit(" postscriptum")).alias("text"), "lang")
-    both = docs.unionByName(exact_plants).unionByName(near_plants)
-    pages = both.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-         .alias("url"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id"))
-         .alias("warc_ts"),
-        F.encode(F.concat(F.lit(_CHROME_PRE), F.col("text"),
-                          F.lit(_CHROME_POST)), "UTF-8").alias("html"),
-        F.col("text"), F.col("lang")).localCheckpoint(eager=False)
-    # ^ one synthesis materialization for extract_pages' winner/semi
-    #   diamond (the _pages_from_documents note)
-    ex = (extract_pages(pages, num_parts=_num_parts(spark),
-                          n_salts=4)
-          .select("url", "status", "text"))
+    docs, ex = _curation_input(spark, sf_dir)
     eval_docs = docs.filter(F.col("doc_id") % 97 == 5).select("text")
     return (curation_decisions_full(ex, eval_docs)
             .select("url", "status", "quality", "decision",
@@ -519,27 +486,7 @@ def _trainset_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_sequences, pack_sequences_text)
     from textextract_spark.pipeline import curation_decisions_full
 
-    docs = (source(spark, sf_dir, "documents", spread=True)
-            .select("doc_id", "text", "lang"))
-    exact_plants = docs.filter(F.col("doc_id") < 10).select(
-        (-F.col("doc_id") - 100000).alias("doc_id"), "text", "lang")
-    near_plants = docs.filter(F.col("doc_id") < 20).select(
-        (-F.col("doc_id") - 200000).alias("doc_id"),
-        F.concat("text", F.lit(" postscriptum")).alias("text"), "lang")
-    both = docs.unionByName(exact_plants).unionByName(near_plants)
-    pages = both.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-         .alias("url"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id"))
-         .alias("warc_ts"),
-        F.encode(F.concat(F.lit(_CHROME_PRE), F.col("text"),
-                          F.lit(_CHROME_POST)), "UTF-8").alias("html"),
-        F.col("text"), F.col("lang")).localCheckpoint(eager=False)
-    # ^ one synthesis materialization for extract_pages' winner/semi
-    #   diamond (the _pages_from_documents note)
-    ex = (extract_pages(pages, num_parts=_num_parts(spark),
-                          n_salts=4)
-          .select("url", "status", "text"))
+    docs, ex = _curation_input(spark, sf_dir)
     eval_docs = docs.filter(F.col("doc_id") % 97 == 5).select("text")
     keeps = (curation_decisions_full(ex, eval_docs)
              .filter(F.col("decision") == "keep")

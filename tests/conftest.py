@@ -1,3 +1,4 @@
+import contextlib
 import os
 import tempfile
 
@@ -26,3 +27,28 @@ def corpus_dir():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def crash_after_first_chunk(monkeypatch):
+    """Context manager: inside it, the second ``ManifestTable.append`` to
+    an ``extracted`` table raises — a job killed once its first chunk's
+    data and lineage are committed."""
+    from textextract_spark.io.table import ManifestTable
+
+    @contextlib.contextmanager
+    def crash():
+        append = ManifestTable.append
+        seen = []
+
+        def failing(table, *args, **kwargs):
+            if os.path.basename(table.path) == "extracted":
+                seen.append(table)
+                if len(seen) == 2:
+                    raise RuntimeError("injected failure after chunk 0")
+            return append(table, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(ManifestTable, "append", failing)
+            yield
+    return crash

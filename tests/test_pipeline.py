@@ -60,7 +60,8 @@ def test_lineage_metrics_consistent(spark, corpus_dir, golden):
     assert all(r.warc_ts_min <= r.warc_ts_max for r in m)
 
 
-def test_run_pipeline_and_resume(spark, corpus_dir, golden):
+def test_run_pipeline_and_resume(spark, corpus_dir, golden,
+                                 crash_after_first_chunk):
     """Kill after chunk 1, rerun, assert final table == single-run table
     and already-committed part_keys are not reprocessed (§5.4)."""
     out1 = tempfile.mkdtemp(prefix="textx-out1-")
@@ -73,9 +74,10 @@ def test_run_pipeline_and_resume(spark, corpus_dir, golden):
     assert full == {u: g["text"] for u, g in golden.items()}
 
     # interrupted run: crash injected after first chunk commit
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with (crash_after_first_chunk(),
+          pytest.raises(RuntimeError, match="injected failure")):
         run_pipeline(spark, corpus_dir, out2, num_parts=8, chunks=4,
-                     run_id="r1", fail_after_chunk=1)
+                     run_id="r1")
     from textextract_spark.io.table import ManifestTable
     partial = ManifestTable(os.path.join(out2, "extracted"))
     committed_before = partial.committed_part_keys()

@@ -517,3 +517,21 @@ def test_one_set_of_spark_text_primitives():
     assert holders(r"(?i)utf-?16") == []
     assert holders(r"_is_spaceless") == []
     assert holders(r": dict\[str, int\] = \{\}") == []
+    assert holders(r"memo\.clear\(\)") == []
+
+
+def test_one_commit_path():
+    """Structural guard: every snapshot write publishes through
+    ManifestTable._commit, run_pipeline writes lineage in one place, and
+    both stream functions share one epoch sink."""
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "textextract_spark"
+
+    def calls(rel, pattern):
+        text = (pkg / rel).read_text()
+        return len(re.findall(r"(?<!def )\b" + pattern, text))
+
+    assert calls("io/table.py", r"self\._publish\(") == 1
+    assert calls("pipeline.py", r"lineage_metrics\(") == 1
+    assert calls("pipeline.py", r"metrics_tbl\.append\(") == 1
+    assert calls("streaming/stream.py", r"def _sink\(") == 1

@@ -106,7 +106,7 @@ def test_warc_roundtrip_property():
     check()
 
 
-def test_warc_pipeline_resume(spark, tmp_path):
+def test_warc_pipeline_resume(spark, tmp_path, crash_after_first_chunk):
     """run_pipeline over WARC input: crash after the first chunk, resume,
     final table equals the single-run result and committed part_keys are
     not reprocessed — the chunk filter and the parsed-pages persist must
@@ -130,9 +130,10 @@ def test_warc_pipeline_resume(spark, tmp_path):
     assert len(full) == len({r["url"] for r in rows})
 
     out2 = str(tmp_path / "out2")
-    with _pytest.raises(RuntimeError, match="injected failure"):
+    with (crash_after_first_chunk(),
+          _pytest.raises(RuntimeError, match="injected failure")):
         run_pipeline(spark, str(d), out2, num_parts=8, chunks=4,
-                     run_id="r1", input_format="warc", fail_after_chunk=1)
+                     run_id="r1", input_format="warc")
     res2 = run_pipeline(spark, str(d), out2, num_parts=8, chunks=4,
                         run_id="r2", input_format="warc")
     assert sorted(res2["committed_part_keys"]) == list(range(8))

@@ -386,62 +386,40 @@ def _scored_blocks(html_text: str) -> list[tuple[str, str, int, float, float]]:
             if fm:  # common well-formed tag: one regex, same semantics
                 name = fm.group(1).lower()
                 endpos = fm.end()
-                if fm.group(2) == ">":  # start (+ rawtext)
-                    if name in _SKIP_TAGS:
-                        skip_depth += 1
-                    elif not skip_depth:
-                        if name in _BLOCK_TAGS:
-                            flush()
-                            if name not in ("br", "hr"):
-                                block_stack.append(name)
-                                cur.tag = name
-                        else:
-                            if name == "a":
-                                anchor_depth += 1
-                            cur.inline_tags += 1
+                end = fm.group(2)
+            else:  # exact stdlib-regex replication of parse_starttag
+                j = _LOCATE_START_RE.match(s, lt).end()
+                nc = s[j:j + 1]
+                endpos = -1
+                if nc == ">":
+                    endpos = j + 1
+                elif nc == "/":
+                    if s.startswith("/>", j):
+                        endpos = j + 2
+                    # lone '/' at buffer end: incomplete
+                elif nc == "" or nc == "=" or nc in _ASCII_LETTERS:
+                    pass  # incomplete (end of input in/before an attr value)
+                else:
+                    endpos = j if j > lt else lt + 1
+                if endpos < 0:
+                    i = recover(lt)
+                    continue
+                nm = _TAGFIND_RE.match(s, lt + 1)
+                name = nm.group(1).lower()
+                k = nm.end()
+                while k < endpos:  # attr consumption decides tag-vs-junk
+                    am = _ATTRFIND_RE.match(s, k)
+                    if not am:
+                        break
+                    k = am.end()
+                end = s[k:endpos].strip()
+                if end != ">" and end != "/>":
+                    # attr junk: whole span is literal data (un-unescaped)
+                    raw_data(s[lt:endpos])
                     i = endpos
-                    if name in _RAWTEXT:
-                        cm = _RAWCLOSE[name].search(s, i)
-                        if cm is None:
-                            break
-                        if skip_depth:
-                            skip_depth -= 1
-                        i = cm.end()
-                else:  # '/>' self-closing
-                    if not skip_depth:
-                        if name in ("br", "hr"):
-                            flush()
-                        elif (name not in _BLOCK_TAGS
-                              and name not in _SKIP_TAGS):
-                            cur.inline_tags += 1
-                    i = endpos
-                continue
-            j = _LOCATE_START_RE.match(s, lt).end()
-            nc = s[j:j + 1]
-            endpos = -1
-            if nc == ">":
-                endpos = j + 1
-            elif nc == "/":
-                if s.startswith("/>", j):
-                    endpos = j + 2
-                # lone '/' at buffer end: incomplete
-            elif nc == "" or nc == "=" or nc in _ASCII_LETTERS:
-                pass  # incomplete (end of input in/before an attr value)
-            else:
-                endpos = j if j > lt else lt + 1
-            if endpos < 0:
-                i = recover(lt)
-                continue
-            nm = _TAGFIND_RE.match(s, lt + 1)
-            name = nm.group(1).lower()
-            k = nm.end()
-            while k < endpos:  # attr consumption decides tag-vs-junk
-                am = _ATTRFIND_RE.match(s, k)
-                if not am:
-                    break
-                k = am.end()
-            end = s[k:endpos].strip()
-            if end == ">":  # ---- real start tag
+                    continue
+            i = endpos
+            if end == ">":  # ---- real start tag (+ rawtext)
                 if name in _SKIP_TAGS:
                     skip_depth += 1
                 elif not skip_depth:
@@ -454,7 +432,6 @@ def _scored_blocks(html_text: str) -> list[tuple[str, str, int, float, float]]:
                         if name == "a":
                             anchor_depth += 1
                         cur.inline_tags += 1
-                i = endpos
                 if name in _RAWTEXT:
                     cm = _RAWCLOSE[name].search(s, i)
                     if cm is None:  # unterminated rawtext: rest is body
@@ -464,17 +441,11 @@ def _scored_blocks(html_text: str) -> list[tuple[str, str, int, float, float]]:
                     if skip_depth:
                         skip_depth -= 1
                     i = cm.end()
-            elif end == "/>":  # ---- self-closing
-                if not skip_depth:
-                    if name in ("br", "hr"):
-                        flush()
-                    elif (name not in _BLOCK_TAGS
-                          and name not in _SKIP_TAGS):
-                        cur.inline_tags += 1
-                i = endpos
-            else:  # attr junk: whole span is literal data (un-unescaped)
-                raw_data(s[lt:endpos])
-                i = endpos
+            elif not skip_depth:  # ---- self-closing '/>'
+                if name in ("br", "hr"):
+                    flush()
+                elif name not in _BLOCK_TAGS and name not in _SKIP_TAGS:
+                    cur.inline_tags += 1
             continue
         # bare '<' (or '<' + non-letter junk): literal data
         data("<")

@@ -4,10 +4,11 @@ Iceberg stand-in (SURVEY.md §7 hard part (e)): the Iceberg runtime jar is
 not available in this sandbox, so a parquet directory + versioned JSON
 manifests emulate the three Iceberg behaviors the pipeline depends on:
 
-  * snapshot-based append commits — each ``append`` writes files to a new
-    snapshot directory, then atomically publishes a new manifest version;
-    readers only see manifest-listed files, so a killed job never exposes
-    partial output;
+  * snapshot-based commits — every write (append, overwrite,
+    replace_partitions, compact) goes through one step, ``_commit``: it
+    writes files to a new snapshot directory, then atomically publishes a
+    new manifest version; readers only see manifest-listed files, so a
+    killed job never exposes partial output;
   * **optimistic concurrency** — a commit is the creation of manifest
     version ``parent+1`` via ``os.link`` (atomic fail-if-exists on POSIX):
     two writers that both loaded version N race to create N+1; exactly one
@@ -31,6 +32,7 @@ of the commit conflict: single-instance lock via port bind
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -48,8 +50,6 @@ class CommitConflictError(RuntimeError):
 class ManifestTable:
     def __init__(self, path: str) -> None:
         self.path = path
-        # legacy single-file manifest (pre-CAS layout) — read-only fallback
-        self.manifest_path = os.path.join(path, "_manifest.json")
         os.makedirs(path, exist_ok=True)
 
     # -- manifest ----------------------------------------------------------
@@ -67,9 +67,6 @@ class ManifestTable:
             ver, p = versions[-1]
             with open(p) as f:
                 return ver, json.load(f)
-        if os.path.exists(self.manifest_path):  # legacy layout = version 0
-            with open(self.manifest_path) as f:
-                return 0, json.load(f)
         return 0, {"snapshots": []}
 
     def _load_version(self, version: int) -> dict:
@@ -112,29 +109,42 @@ class ManifestTable:
             os.remove(tmp)
 
     # -- writes ------------------------------------------------------------
-    def append(self, df: DataFrame, part_keys: list[int] | None = None,
-               run_id: str | None = None) -> str:
-        """Write df as a new snapshot; returns the snapshot id.
+    def _commit(self, write, *, replace: bool = False,
+                base: tuple[int, dict] | None = None, **entry) -> str:
+        """The one commit step every write goes through: mint a snapshot
+        id, ``write(dir)`` into an unreferenced directory, then publish a
+        manifest version that appends the snapshot record (or, with
+        ``replace``, makes it the only visible snapshot).
 
-        The parquet write lands in an unreferenced directory first; the
-        manifest-version link is the commit point (crash before it =
-        invisible; losing a commit race = CommitConflictError, snapshot
-        dir left orphaned).
+        The manifest is loaded after the write unless ``base`` (version,
+        manifest) was loaded before it: a rewrite that replaces every
+        snapshot it read passes the state it read, so any commit that
+        lands during the rewrite makes this publish fail. The version
+        link is the commit point (crash before it = invisible; losing a
+        commit race = CommitConflictError, snapshot dir left orphaned).
         """
         snapshot_id = uuid.uuid4().hex[:16]
-        snap_dir = os.path.join(self.path, f"snap-{snapshot_id}")
-        df.write.mode("overwrite").parquet(snap_dir)
-        ver, manifest = self._load_with_version()
+        write(os.path.join(self.path, f"snap-{snapshot_id}"))
+        ver, manifest = base or self._load_with_version()
         snaps = manifest["snapshots"]
-        manifest["snapshots"] = snaps + [{
+        record = {
             "snapshot_id": snapshot_id,
             "dir": f"snap-{snapshot_id}",
-            "part_keys": sorted(part_keys or []),
-            "run_id": run_id,
+            "part_keys": [],
+            "run_id": None,
             "parent": snaps[-1]["snapshot_id"] if snaps else None,
-        }]
+            **entry,
+        }
+        manifest["snapshots"] = [record] if replace else snaps + [record]
         self._publish(manifest, ver)
         return snapshot_id
+
+    def append(self, df: DataFrame, part_keys: list[int] | None = None,
+               run_id: str | None = None) -> str:
+        """Write df as a new snapshot; returns the snapshot id."""
+        return self._commit(df.write.mode("overwrite").parquet,
+                            part_keys=sorted(part_keys or []),
+                            run_id=run_id)
 
     def overwrite(self, df: DataFrame) -> str:
         """Replace table contents with df as a single new snapshot.
@@ -144,20 +154,8 @@ class ManifestTable:
         visible state (old snapshot dirs remain for time travel,
         unreferenced).
         """
-        snapshot_id = uuid.uuid4().hex[:16]
-        snap_dir = os.path.join(self.path, f"snap-{snapshot_id}")
-        df.write.mode("overwrite").parquet(snap_dir)
-        ver, manifest = self._load_with_version()
-        snaps = manifest["snapshots"]
-        manifest["snapshots"] = [{
-            "snapshot_id": snapshot_id,
-            "dir": f"snap-{snapshot_id}",
-            "part_keys": [],
-            "run_id": None,
-            "parent": snaps[-1]["snapshot_id"] if snaps else None,
-        }]
-        self._publish(manifest, ver)
-        return snapshot_id
+        return self._commit(df.write.mode("overwrite").parquet,
+                            replace=True)
 
     def replace_partitions(self, df: DataFrame, bucket_col: str,
                            buckets: list[int],
@@ -167,22 +165,10 @@ class ManifestTable:
         other buckets keep their previous snapshots. The snapshot dir is
         physically partitioned by bucket_col so readers prune to live
         bucket directories."""
-        snapshot_id = uuid.uuid4().hex[:16]
-        snap_dir = os.path.join(self.path, f"snap-{snapshot_id}")
-        (df.write.mode("overwrite").partitionBy(bucket_col)
-           .parquet(snap_dir))
-        ver, manifest = self._load_with_version()
-        snaps = manifest["snapshots"]
-        manifest["snapshots"] = snaps + [{
-            "snapshot_id": snapshot_id,
-            "dir": f"snap-{snapshot_id}",
-            "part_keys": [],
-            "run_id": run_id,
-            "parent": snaps[-1]["snapshot_id"] if snaps else None,
-            "replaces": {bucket_col: sorted(int(b) for b in buckets)},
-        }]
-        self._publish(manifest, ver)
-        return snapshot_id
+        return self._commit(
+            df.write.mode("overwrite").partitionBy(bucket_col).parquet,
+            run_id=run_id,
+            replaces={bucket_col: sorted(int(b) for b in buckets)})
 
     def compact(self, spark: SparkSession, target_files: int = 8,
                 run_id: str | None = None) -> str | None:
@@ -199,8 +185,9 @@ class ManifestTable:
             shuffle-free);
           * ``committed_part_keys`` is preserved (the checkpoint/resume
             contract survives compaction — reruns still skip);
-          * the commit is the same CAS publish as append: a concurrent
-            writer that lands first wins and this compaction fails with
+          * the commit is the same CAS publish as append, against the
+            manifest read before the rewrite: a concurrent writer that
+            lands first wins and this compaction fails with
             CommitConflictError, leaving its output an orphan (retry);
           * old manifest versions remain readable (VERSION AS OF time
             travel shows the pre-compaction layout).
@@ -215,8 +202,8 @@ class ManifestTable:
         the pre-compaction owner did). Mixed append+replace histories
         have no single read semantics and stay unsupported (raise).
         """
-        ver, manifest = self._load_with_version()
-        snaps = manifest["snapshots"]
+        base = self._load_with_version()
+        snaps = base[1]["snapshots"]
         if len(snaps) <= 1:
             return None  # nothing to compact
         replace_cols = {col for s in snaps
@@ -230,61 +217,43 @@ class ManifestTable:
                     f"(saw columns {sorted(replace_cols)}, "
                     f"{sum(1 for s in snaps if not s.get('replaces'))} "
                     "non-replace snapshots)")
-            return self._compact_keyed(spark, replace_cols.pop(),
+            return self._compact_keyed(spark, base, replace_cols.pop(),
                                        target_files, run_id)
         dirs = [os.path.join(self.path, s["dir"]) for s in snaps]
-        snapshot_id = uuid.uuid4().hex[:16]
-        snap_dir = os.path.join(self.path, f"snap-{snapshot_id}")
-        (spark.read.parquet(*dirs).coalesce(target_files)
-         .write.mode("overwrite").parquet(snap_dir))
-        part_keys = sorted({k for s in snaps for k in s["part_keys"]})
-        manifest["snapshots"] = [{
-            "snapshot_id": snapshot_id,
-            "dir": f"snap-{snapshot_id}",
-            "part_keys": part_keys,
-            "run_id": run_id,
-            "parent": snaps[-1]["snapshot_id"],
-            "compacted_from": [s["snapshot_id"] for s in snaps],
-        }]
-        self._publish(manifest, ver)
-        return snapshot_id
+        return self._commit(
+            spark.read.parquet(*dirs).coalesce(target_files)
+            .write.mode("overwrite").parquet,
+            replace=True, base=base,
+            part_keys=sorted({k for s in snaps for k in s["part_keys"]}),
+            run_id=run_id,
+            compacted_from=[s["snapshot_id"] for s in snaps])
 
-    def _compact_keyed(self, spark: SparkSession, bucket_col: str,
-                       target_files: int, run_id: str | None) -> str | None:
+    def _compact_keyed(self, spark: SparkSession, base: tuple[int, dict],
+                       bucket_col: str, target_files: int,
+                       run_id: str | None) -> str:
         """Bucket-aware rewrite for replace_partitions tables: write the
         resolved live state once, owning ALL ever-replaced buckets.
 
         The scan is read_keyed itself — partition-pruned to each
         snapshot's still-owned buckets, never a full read of dead data.
         coalesce keeps the rewrite shuffle-free; the partitionBy write
-        restores the physical bucket layout readers prune on. The CAS
-        publish is the same commit point as append/replace: losing the
-        race raises CommitConflictError and leaves an orphan snapshot.
+        restores the physical bucket layout readers prune on.
         """
-        ver, manifest = self._load_with_version()
-        snaps = manifest["snapshots"]
-        all_buckets = sorted({int(b) for s in snaps
-                              for b in s["replaces"][bucket_col]})
+        snaps = base[1]["snapshots"]
+        buckets = sorted({int(b) for s in snaps
+                          for b in s["replaces"][bucket_col]})
         live = self.read_keyed(spark, bucket_col)
-        snapshot_id = uuid.uuid4().hex[:16]
-        snap_dir = os.path.join(self.path, f"snap-{snapshot_id}")
         if live is not None:
-            (live.coalesce(target_files)
-             .write.mode("overwrite").partitionBy(bucket_col)
-             .parquet(snap_dir))
+            write = (live.coalesce(target_files).write.mode("overwrite")
+                     .partitionBy(bucket_col).parquet)
         else:  # every owned bucket is empty: commit an empty snapshot
-            os.makedirs(snap_dir, exist_ok=True)
-        manifest["snapshots"] = [{
-            "snapshot_id": snapshot_id,
-            "dir": f"snap-{snapshot_id}",
-            "part_keys": sorted({k for s in snaps for k in s["part_keys"]}),
-            "run_id": run_id,
-            "parent": snaps[-1]["snapshot_id"],
-            "replaces": {bucket_col: all_buckets},
-            "compacted_from": [s["snapshot_id"] for s in snaps],
-        }]
-        self._publish(manifest, ver)
-        return snapshot_id
+            write = functools.partial(os.makedirs, exist_ok=True)
+        return self._commit(
+            write, replace=True, base=base,
+            part_keys=sorted({k for s in snaps for k in s["part_keys"]}),
+            run_id=run_id,
+            replaces={bucket_col: buckets},
+            compacted_from=[s["snapshot_id"] for s in snaps])
 
     def read_keyed(self, spark: SparkSession,
                    bucket_col: str,
@@ -353,10 +322,6 @@ class ManifestTable:
         for s in self._load()["snapshots"]:
             keys.update(s["part_keys"])
         return keys
-
-    def current_snapshot_id(self) -> str | None:
-        snaps = self._load()["snapshots"]
-        return snaps[-1]["snapshot_id"] if snaps else None
 
     def snapshots(self) -> list[dict]:
         """All committed snapshot records (id, dir, part_keys, run_id)."""

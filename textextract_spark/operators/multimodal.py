@@ -14,6 +14,7 @@ batching, partitioning) is identical and tested.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 import zlib
@@ -363,14 +364,16 @@ DECODE_SCHEMA = StructType([
 ])
 
 
-def _synth_media(i: int) -> bytes:
-    """Deterministic BMP/WAV/PNG payload from media_id (test/driver
-    corpus stand-in: this container has no real image/audio files)."""
-    if i % 3 == 0:
-        return build_bmp(1 + i % 31, 1 + i % 17)
-    if i % 3 == 1:
-        return build_wav(1 + i % 2, 8000 + i % 100, 16, 16 + i % 50)
-    return build_png(1 + i % 29, 1 + i % 13)
+def _synth_media(key: tuple) -> bytes:
+    """Deterministic BMP/WAV/PNG payload from the media_id residues
+    (i%3, i%31, i%17, i%2, i%100, i%50, i%29, i%13) (test/driver corpus
+    stand-in: this container has no real image/audio files)."""
+    kind, w_bmp, h_bmp, ch, sr, n, w_png, h_png = key
+    if kind == 0:
+        return build_bmp(1 + w_bmp, 1 + h_bmp)
+    if kind == 1:
+        return build_wav(1 + ch, 8000 + sr, 16, 16 + n)
+    return build_png(1 + w_png, 1 + h_png)
 
 
 def _synth_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -378,18 +381,11 @@ def _synth_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     # params from small id residues, so a task sees each distinct
     # payload many times; encode (deflate for PNG) once per distinct.
     # Bounded so a pathological corpus cannot grow it without limit.
-    memo: dict[int, bytes] = {}
+    synth = functools.lru_cache(maxsize=8192)(_synth_media)
     for pdf in batches:
-        out = []
-        for i in pdf["media_id"].tolist():
-            key = (i % 3, i % 31, i % 17, i % 2, i % 100, i % 50,
-                   i % 29, i % 13)
-            p = memo.get(key)
-            if p is None:
-                if len(memo) > 8192:
-                    memo.clear()
-                p = memo[key] = _synth_media(i)
-            out.append(p)
+        out = [synth((i % 3, i % 31, i % 17, i % 2, i % 100, i % 50,
+                      i % 29, i % 13))
+               for i in pdf["media_id"].tolist()]
         yield pd.DataFrame({"media_id": pdf["media_id"], "media": out})
 
 
@@ -398,18 +394,16 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # once per task — the dedup-before-decode step a real media
     # pipeline runs (crawl media is heavily byte-duplicated); keying on
     # the payload bytes keeps it correct for any corpus. Bounded.
-    memo: dict[bytes, dict] = {}
+    @functools.lru_cache(maxsize=8192)
+    def decode(payload: bytes) -> dict:
+        return decode_media(
+            payload, "image" if payload[:1] != b"R" else "audio")
+
     for pdf in batches:
         rows = {k: [] for k in ("media_id", "kind", "width", "height",
                                 "channels", "sample_rate", "n_samples")}
         for mid, payload in zip(pdf["media_id"], pdf["media"]):
-            key = bytes(payload)
-            f = memo.get(key)
-            if f is None:
-                if len(memo) > 8192:
-                    memo.clear()
-                f = memo[key] = decode_media(
-                    payload, "image" if payload[:1] != b"R" else "audio")
+            f = decode(bytes(payload))
             rows["media_id"].append(mid)
             rows["kind"].append(f["kind"])
             # 0 = not-applicable for the other container's fields (typed
@@ -461,23 +455,15 @@ def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # function of the source image — (w, h) fully determines the PNG
     # here — so each distinct image is processed once per task (the
     # dedup-before-decode step of _decode_batches). Bounded.
-    memo: dict[tuple, tuple] = {}
-
+    @functools.lru_cache(maxsize=8192)
     def one(w: int, h: int) -> tuple:
-        got = memo.get((w, h))
-        if got is None:
-            if len(memo) > 8192:
-                memo.clear()
-            f = decode_media(build_png(w, h), "image")  # REAL full decode
-            px = np.frombuffer(f["pixels"],
-                               dtype=np.uint8).reshape(h, w, 3)
-            xs = (np.arange(RESIZE_W) * w) // RESIZE_W
-            ys = (np.arange(RESIZE_H) * h) // RESIZE_H
-            flat = px[ys][:, xs, :].astype(np.int64).ravel()
-            got = memo[(w, h)] = (
-                int(flat.sum()),
+        f = decode_media(build_png(w, h), "image")  # REAL full decode
+        px = np.frombuffer(f["pixels"], dtype=np.uint8).reshape(h, w, 3)
+        xs = (np.arange(RESIZE_W) * w) // RESIZE_W
+        ys = (np.arange(RESIZE_H) * h) // RESIZE_H
+        flat = px[ys][:, xs, :].astype(np.int64).ravel()
+        return (int(flat.sum()),
                 int((flat * (np.arange(flat.size) + 1)).sum()))
-        return got
 
     for pdf in batches:
         rows = {k: [] for k in ("media_id", "src_w", "src_h",
@@ -549,20 +535,13 @@ def _audio_feature_batches(
     # distinct-source memo (r7): the encode+decode+feature chain is a
     # pure function of the WAV's build params (_resize_batches note);
     # each distinct stream is processed once per task. Bounded.
-    memo: dict[tuple, tuple] = {}
-
+    @functools.lru_cache(maxsize=8192)
     def one(ch: int, sr: int, n: int) -> tuple:
-        got = memo.get((ch, sr, n))
-        if got is None:
-            if len(memo) > 8192:
-                memo.clear()
-            s = wav_pcm_samples(build_wav(ch, sr, 16, n))
-            sv = s.astype(np.float64)
-            got = memo[(ch, sr, n)] = (
-                float(np.sqrt(np.mean(sv * sv))),
+        s = wav_pcm_samples(build_wav(ch, sr, 16, n))
+        sv = s.astype(np.float64)
+        return (float(np.sqrt(np.mean(sv * sv))),
                 float(np.sum(sv[:-1] * sv[1:] < 0)) / (len(sv) - 1),
                 int(np.max(np.abs(s.astype(np.int64)))))
-        return got
 
     for pdf in batches:
         rows = {k: [] for k in ("media_id", "channels", "n_samples",

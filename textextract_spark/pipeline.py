@@ -520,6 +520,31 @@ def curation_decisions_full(extracted: DataFrame,
 # Orchestration: chunked snapshot commits + resume
 # ---------------------------------------------------------------------------
 
+def _record_lineage(spark: SparkSession, out: ManifestTable,
+                    metrics_tbl: ManifestTable, input_split: str,
+                    run_id: str) -> None:
+    """The one lineage writer: append ``lineage_metrics`` rows for every
+    part_key committed in ``out`` that ``metrics_tbl`` lacks — one job
+    and one metrics snapshot per data snapshot, carrying that
+    snapshot's run_id. The data and lineage commits are two manifests,
+    so a crash between them leaves part_keys unmetered; resume skips
+    committed part_keys, so run_pipeline calls this before new work
+    (the heal) as well as after each chunk commit."""
+    missing = out.committed_part_keys() - metrics_tbl.committed_part_keys()
+    if not missing:
+        return
+    for s in out.snapshots():
+        keys = sorted(set(s["part_keys"]) & missing)
+        if not keys:
+            continue
+        snap_run = s.get("run_id") or run_id
+        snap_df = spark.read.parquet(f"{out.path}/{s['dir']}")
+        metrics_tbl.append(
+            lineage_metrics(snap_df.filter(F.col("part_key").isin(keys)),
+                            run_id=snap_run, input_split=input_split),
+            part_keys=keys, run_id=snap_run)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages_path: str,
@@ -528,7 +553,6 @@ def run_pipeline(
     n_salts: int = 8,
     chunks: int = 4,
     run_id: str = "run-0",
-    fail_after_chunk: int | None = None,
     input_format: str = "parquet",
     digest_col: str | None = None,
     curate: bool = False,
@@ -541,29 +565,12 @@ def run_pipeline(
     the ``extracted`` table, its lineage appended to ``metrics``, and its
     part_keys recorded — a rerun skips committed part_keys entirely (the
     filter prunes at the scan on a bucket-partitioned Iceberg table).
-    ``fail_after_chunk`` injects a crash for the resume test (§5.4).
     """
     out = ManifestTable(f"{out_dir}/extracted")
     metrics_tbl = ManifestTable(f"{out_dir}/metrics")
 
-    # Heal the non-atomic data/lineage commit pair: a crash between
-    # out.append and metrics_tbl.append leaves part_keys committed in
-    # `extracted` with no lineage rows — and resume skips committed
-    # part_keys, so they would stay unmetered forever. Backfill lineage
-    # from the committed snapshot dirs before doing new work.
-    orphaned = out.committed_part_keys() - metrics_tbl.committed_part_keys()
-    if orphaned:
-        for s in out.snapshots():
-            keys = sorted(set(s["part_keys"]) & orphaned)
-            if not keys:
-                continue
-            snap_df = spark.read.parquet(f"{out.path}/{s['dir']}")
-            metrics_tbl.append(
-                lineage_metrics(
-                    snap_df.filter(F.col("part_key").isin(keys)),
-                    run_id=s.get("run_id") or run_id,
-                    input_split=pages_path),
-                part_keys=keys, run_id=s.get("run_id") or run_id)
+    # heal first: a crash between a chunk's data and lineage commits
+    _record_lineage(spark, out, metrics_tbl, pages_path, run_id)
 
     persisted = None
     if input_format == "warc":
@@ -593,7 +600,6 @@ def run_pipeline(
 
     committed = out.committed_part_keys()
     all_keys = list(range(num_parts))
-    done_chunks = 0
     for chunk in range(chunks):
         chunk_keys = [k for k in all_keys if k % chunks == chunk]
         todo = [k for k in chunk_keys if k not in committed]
@@ -605,16 +611,8 @@ def run_pipeline(
         chunk_df = extract_pages(pages, num_parts=num_parts,
                                  n_salts=n_salts, part_keys=todo,
                                  digest_col=digest_col)
-        snapshot_id = out.append(chunk_df, part_keys=todo, run_id=run_id)
-        written = spark.read.parquet(
-            f"{out.path}/snap-{snapshot_id}")
-        metrics_tbl.append(
-            lineage_metrics(written, run_id=run_id,
-                            input_split=pages_path),
-            part_keys=todo, run_id=run_id)
-        done_chunks += 1
-        if fail_after_chunk is not None and done_chunks >= fail_after_chunk:
-            raise RuntimeError(f"injected failure after chunk {chunk}")
+        out.append(chunk_df, part_keys=todo, run_id=run_id)
+        _record_lineage(spark, out, metrics_tbl, pages_path, run_id)
     if persisted is not None:
         persisted.unpersist()
     result = {

@@ -22,6 +22,7 @@ import hashlib
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampNTZType,
 )
@@ -36,6 +37,36 @@ PAGES_SCHEMA = StructType([
     StructField("text", StringType()),
     StructField("lang", StringType()),
 ])
+
+
+def _start(stream, out_dir: str, checkpoint_dir: str, prefix: str,
+           available_now: bool, **extract_kw):
+    """Start ``stream`` (a pages-schema streaming DataFrame) into the
+    ManifestTable at ``out_dir`` through the one epoch sink: each
+    micro-batch is extracted and appended as one snapshot with run_id
+    ``{prefix}-{tag}-epoch-{epoch}``, and an epoch whose run_id is
+    already committed is skipped (the replay guard)."""
+    out = ManifestTable(out_dir)
+    # tag = hash of the FULL checkpoint path: two different streams whose
+    # checkpoint dirs merely share a basename must not collide (a replay
+    # after checkpoint loss keeps the same path, so dedup still works)
+    ckpt_tag = hashlib.md5(
+        os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
+
+    def _sink(batch_df, epoch_id: int) -> None:
+        run_id = f"{prefix}-{ckpt_tag}-epoch-{epoch_id}"
+        if any(s.get("run_id") == run_id for s in out.snapshots()):
+            return  # replayed micro-batch (crash after commit, before
+            #         checkpoint advance) — already committed, skip
+        out.append(extract_pages(batch_df, **extract_kw),
+                   part_keys=[], run_id=run_id)
+
+    writer = (stream.writeStream
+              .foreachBatch(_sink)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_extract(
@@ -57,31 +88,11 @@ def stream_extract(
     cross-batch url dedup is a downstream MERGE (the batch pipeline's
     dedup-latest covers full-corpus reruns).
     """
-    out = ManifestTable(out_dir)
-    # tag = hash of the FULL checkpoint path: two different streams whose
-    # checkpoint dirs merely share a basename must not collide (a replay
-    # after checkpoint loss keeps the same path, so dedup still works)
-    ckpt_tag = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
-
-    def _sink(batch_df, epoch_id: int) -> None:
-        run_id = f"stream-{ckpt_tag}-epoch-{epoch_id}"
-        if any(s.get("run_id") == run_id for s in out.snapshots()):
-            return  # replayed micro-batch (crash after commit, before
-            #         checkpoint advance) — already committed, skip
-        extracted = extract_pages(batch_df, num_parts=num_parts,
-                                  n_salts=n_salts)
-        out.append(extracted, part_keys=[], run_id=run_id)
-
     stream = (spark.readStream.schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", "8")
               .parquet(pages_dir))
-    writer = (stream.writeStream
-              .foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, out_dir, checkpoint_dir, "stream", available_now,
+                  num_parts=num_parts, n_salts=n_salts)
 
 
 # binaryFile's fixed schema — streaming file sources require it spelled
@@ -118,32 +129,15 @@ def stream_extract_warc(
     from ..io.warc import PAGES_FROM_WARC_SCHEMA, _warc_batches
     from .dedup import drop_recrawled_urls
 
-    out = ManifestTable(out_dir)
-    ckpt_tag = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
-
-    def _sink(batch_df, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        run_id = f"streamwarc-{ckpt_tag}-epoch-{epoch_id}"
-        if any(s.get("run_id") == run_id for s in out.snapshots()):
-            return
-        pages = (batch_df.drop("canonical_url")
-                 .withColumn("lang", F.lit(None).cast("string")))
-        extracted = extract_pages(pages, num_parts=num_parts,
-                                  n_salts=n_salts, digest_col="digest")
-        out.append(extracted, part_keys=[], run_id=run_id)
-
     files = (spark.readStream.format("binaryFile")
              .schema(_BINARY_FILE_SCHEMA)
              .option("maxFilesPerTrigger", "8")
              .load(crawl_dir))
     pages = (files.select("content")
              .mapInPandas(_warc_batches, schema=PAGES_FROM_WARC_SCHEMA))
-    fresh = drop_recrawled_urls(pages, watermark=watermark)
-    writer = (fresh.writeStream
-              .foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    fresh = (drop_recrawled_urls(pages, watermark=watermark)
+             .drop("canonical_url")
+             .withColumn("lang", F.lit(None).cast("string")))
+    return _start(fresh, out_dir, checkpoint_dir, "streamwarc",
+                  available_now, num_parts=num_parts, n_salts=n_salts,
+                  digest_col="digest")

@@ -99,6 +99,48 @@ def test_pdf_flatedecode_truncated_is_total():
         assert res.status.split(":")[0] in ("ok", "empty")
 
 
+def test_pdf_inflate_bomb_is_skipped_within_budget():
+    """A 200 KB PDF whose one Flate stream inflates to 200 MB comes back
+    skipped:inflate_budget, and the inflate holds about one budget of
+    output, never the whole bomb."""
+    import tracemalloc
+    import zlib
+
+    comp = zlib.compress(bytes(200 * 1024 * 1024), 9)
+    payload = (b"%PDF-1.4\n1 0 obj\n<< /Length " + str(len(comp)).encode()
+               + b" /Filter /FlateDecode >>\nstream\n" + comp
+               + b"\nendstream\nendobj\n%%EOF\n")
+    del comp
+    tracemalloc.start()
+    try:
+        res = extract_document(payload)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert (res.status, res.fmt) == ("skipped:inflate_budget", "pdf")
+    from textextract_spark.core.pdf_extract import INFLATE_BUDGET
+    assert peak < 2 * INFLATE_BUDGET, peak
+
+
+def test_unterminated_markup_runs_are_linear():
+    """Runs of '<' constructs whose closer never comes ('-->', '>',
+    ']]>', ']>') must not rescan the tail from every '<': doubling the
+    run at most ~doubles the time (min over 3 timed pairs)."""
+    import time
+
+    def timed(doc):  # this thread's CPU time: other load does not count
+        t0 = time.thread_time()
+        extract_html(doc)
+        return time.thread_time() - t0
+
+    n = 32000
+    for c in ("<![if x>", "<![cdata[x", "<?x ", "<!x ", "<!--a>"):
+        one, two = "<p>" + c * n, "<p>" + c * 2 * n
+        # back-to-back pairs share the box's load; min of 3 pairs
+        ratio = min(timed(two) / timed(one) for _ in range(3))
+        assert ratio <= 2.5, (c, ratio)
+
+
 def test_plain_strip_and_idempotence():
     rng = random.Random(5)
     payload = make_plain(rng, "en")

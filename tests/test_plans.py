@@ -535,3 +535,35 @@ def test_one_commit_path():
     assert calls("pipeline.py", r"lineage_metrics\(") == 1
     assert calls("pipeline.py", r"metrics_tbl\.append\(") == 1
     assert calls("streaming/stream.py", r"def _sink\(") == 1
+
+
+def test_one_near_duplicate_path():
+    """Structural guard: the curation journey materializes its decision
+    table once and demotes keeps through one helper, the two minhash
+    verifiers share one candidate block, neardup_clusters feeds the
+    unordered pairs to connected_components, and the tools resolve
+    their own checkout from __file__ (no call takes an absolute path
+    literal)."""
+    import ast
+    import pathlib
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "textextract_spark"
+    pipeline = (pkg / "pipeline.py").read_text()
+    sketch = (pkg / "operators" / "sketch.py").read_text()
+
+    assert pipeline.count(".localCheckpoint(") == 1
+    assert pipeline.count("def _demote(") == 1
+    assert len(re.findall(r"_candidate_pairs\(\s*minhash_bands\(",
+                          sketch)) == 1
+    fn = next(n for n in ast.parse(sketch).body
+              if isinstance(n, ast.FunctionDef)
+              and n.name == "neardup_clusters")
+    assert "ngram_jaccard_pairs(" not in ast.get_source_segment(sketch, fn)
+    literal_paths = [
+        (p.name, a.value) for p in sorted((root / "tools").glob("*.py"))
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.Call)
+        for a in [*n.args, *(k.value for k in n.keywords)]
+        if isinstance(a, ast.Constant) and isinstance(a.value, str)
+        and len(a.value) > 1 and a.value.startswith("/")]
+    assert literal_paths == []

@@ -17,7 +17,7 @@ from dataclasses import dataclass, field
 
 from .charset import decode_payload
 from .html_extract import extract_html
-from .pdf_extract import extract_pdf
+from .pdf_extract import InflateBudgetExceeded, extract_pdf
 
 FMT_HTML = "html"
 FMT_PDF = "pdf"
@@ -99,6 +99,8 @@ def extract_document(payload: bytes | None, lang: str | None = None,
             text, spans = extract_plain(bytes(payload))
         status = "ok" if text else "empty"
         return ExtractResult(text=text, spans=spans, status=status, fmt=fmt)
+    except InflateBudgetExceeded:  # a decompression bomb, not an error
+        return ExtractResult(status="skipped:inflate_budget", fmt=FMT_PDF)
     except Exception as exc:  # total function: per-doc failure -> status col
         return ExtractResult(status=f"error:{type(exc).__name__}",
                              fmt=fmt_known)

@@ -209,9 +209,6 @@ _FAST_START_RE = re.compile(
     r"(?>(?:\s+(?>[^\s=/>]+)"  # '=+' mirrors the stdlib value indicator
     r"(?:\s*=+\s*(?>\"[^\"]*\"|'[^']*'|(?!['\"])[^\s>]*))?)*)"
     r"\s*(/>|>)")
-_COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
-_DECL_RE = re.compile(r"<![^>]*>")
-_PI_RE = re.compile(r"<\?[^>]*>")
 
 # <![...]> marked sections, mirroring html.parser's parse_marked_section:
 # cdata/temp/ignore/include/rcdata close at ']]>' (whitespace-tolerant),
@@ -266,6 +263,12 @@ def _scored_blocks(html_text: str) -> list[tuple[str, str, int, float, float]]:
     cur_anchor = cur.anchor_parts  # never reallocates a _Block
     blocks: list[tuple[str, str, int, float, float]] = []
     find = s.find
+    # Lowest start from which each closer is known absent. A failed
+    # forward search fails for every later start too, so each closer
+    # scans the tail at most twice and unterminated '<!--', '<?', '<!',
+    # '<![' and '</' runs cost linear time, not quadratic.
+    no_gt = no_cc = n + 1  # '>' and '-->'
+    no_ms = {_MS_STD_CLOSE_RE: n + 1, _MS_MSO_CLOSE_RE: n + 1}
 
     def flush() -> None:
         if cur_parts:
@@ -303,10 +306,13 @@ def _scored_blocks(html_text: str) -> list[tuple[str, str, int, float, float]]:
         """html.parser's goahead(end=1) incomplete-construct recovery:
         everything through the first '>' becomes data; else up to (not
         including) the next '<'; else a lone '<'. Returns the new pos."""
-        k = find(">", lt + 1)
-        if k >= 0:
-            data(s[lt:k + 1])
-            return k + 1
+        nonlocal no_gt
+        if lt + 1 < no_gt:
+            k = find(">", lt + 1)
+            if k >= 0:
+                data(s[lt:k + 1])
+                return k + 1
+            no_gt = lt + 1
         k = find("<", lt + 1)
         if k >= 0:
             data(s[lt:k])
@@ -340,28 +346,36 @@ def _scored_blocks(html_text: str) -> list[tuple[str, str, int, float, float]]:
             data(s[i:lt])
         nxt = s[lt + 1:lt + 2]
         if nxt == "!" or nxt == "?":
-            if nxt == "?":
-                m = _PI_RE.match(s, lt)
-            elif s.startswith("<!--", lt):
-                m = _COMMENT_RE.match(s, lt)
-            elif s.startswith("<![", lt):
-                nm = _MS_NAME_RE.match(s, lt + 3)
-                kw = nm.group(0).lower() if nm else ""
-                close = (_MS_STD_CLOSE_RE if kw in _MS_STD
-                         else _MS_MSO_CLOSE_RE if kw in _MS_MSO else None)
-                if close is not None:
+            nm = s.startswith("<![", lt) and _MS_NAME_RE.match(s, lt + 3)
+            kw = nm.group(0).lower() if nm else ""
+            close = (_MS_STD_CLOSE_RE if kw in _MS_STD
+                     else _MS_MSO_CLOSE_RE if kw in _MS_MSO else None)
+            if close is not None:  # marked section with a known keyword
+                if lt + 3 < no_ms[close]:
                     m = close.search(s, lt + 3)
-                else:  # unknown keyword (html.parser raises; we stay total)
-                    m = _DECL_RE.match(s, lt)
-            else:
-                m = _DECL_RE.match(s, lt)
-            if m:
-                i = m.end()
-                continue
+                    if m:
+                        i = m.end()
+                        continue
+                    no_ms[close] = lt + 3
+            elif s.startswith("<!--", lt):  # comment: through '-->'
+                if lt + 4 < no_cc:
+                    k = find("-->", lt + 4)
+                    if k >= 0:
+                        i = k + 3
+                        continue
+                    no_cc = lt + 4
+            # <?pi>, <!decl> and an unknown <![kw (html.parser raises
+            # there; we stay total): through the first '>'
+            elif lt + 2 < no_gt:
+                k = find(">", lt + 2)
+                if k >= 0:
+                    i = k + 1
+                    continue
+                no_gt = lt + 2
             i = recover(lt)
             continue
         if nxt == "/":  # ---- end tag: parse_endtag semantics ------------
-            gt = find(">", lt + 1)
+            gt = find(">", lt + 1) if lt + 1 < no_gt else -1
             if gt < 0:  # no '>' anywhere: incomplete at EOF
                 i = recover(lt)
                 continue

@@ -30,6 +30,34 @@ _STREAM_START_RE = re.compile(
     re.DOTALL)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?![\s\d]*R)")
 
+# Inflated bytes one document may produce across its Flate streams (8 x
+# extract.MAX_PAYLOAD_BYTES): a 200 KB payload can inflate to gigabytes.
+INFLATE_BUDGET = 64 * 1024 * 1024
+
+
+class InflateBudgetExceeded(Exception):
+    """The document's Flate streams inflate past INFLATE_BUDGET."""
+
+
+def _inflate(data: bytes, budget: int) -> bytes | None:
+    """zlib.decompress with a budget, or None where it would raise."""
+    # 1 MiB steps: going over budget is caught holding ~budget bytes (a
+    # one-shot inflate holds its whole output twice while assembling it)
+    z, parts, size = zlib.decompressobj(), [], 0
+    while not z.eof:
+        try:
+            part = z.decompress(data, 1 << 20)
+        except zlib.error:
+            return None
+        data = z.unconsumed_tail
+        if not (part or data or z.eof):  # input ran out before stream end
+            return None
+        size += len(part)
+        if size > budget:
+            raise InflateBudgetExceeded
+        parts.append(part)
+    return b"".join(parts)
+
 
 def _iter_streams(payload: bytes) -> Iterator[bytes]:
     """Yield decoded content-stream bytes in document order.
@@ -38,8 +66,10 @@ def _iter_streams(payload: bytes) -> Iterator[bytes]:
     length (the reliable path — Flate data may contain any byte
     sequence, including ``endstream``); otherwise it falls back to the
     first ``endstream`` marker. /FlateDecode streams are zlib-inflated;
-    undecodable streams are skipped, never raised.
+    undecodable streams are skipped, never raised. Inflating past the
+    document's INFLATE_BUDGET raises InflateBudgetExceeded.
     """
+    budget = INFLATE_BUDGET
     for m in _STREAM_START_RE.finditer(payload):
         d = m.group("d")
         start = m.end()
@@ -57,10 +87,10 @@ def _iter_streams(payload: bytes) -> Iterator[bytes]:
                 continue
             data = payload[start:em].rstrip(b"\r\n")
         if b"/FlateDecode" in d:
-            try:
-                data = zlib.decompress(data)
-            except zlib.error:
+            data = _inflate(data, budget)
+            if data is None:
                 continue
+            budget -= len(data)
         yield data
 
 _ESCAPES = {

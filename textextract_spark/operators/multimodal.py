@@ -173,11 +173,15 @@ def _decode_png(payload: bytes) -> dict:
         raise ValueError(f"invalid PNG color type {color_type}")
     ch = _PNG_CHANNELS[color_type]
     stride = width * ch
-    try:
-        raw = zlib.decompress(bytes(idat))
+    size = (stride + 1) * height
+    z = zlib.decompressobj()
+    try:  # inflate at most one byte past the declared size: no bomb
+        raw = z.decompress(bytes(idat), size + 1)
     except zlib.error as e:  # corrupt IDAT stream
         raise ValueError(f"corrupt PNG IDAT stream: {e}") from e
-    if len(raw) != (stride + 1) * height:
+    if not z.eof and len(raw) <= size:  # input ran out before stream end
+        raise ValueError("corrupt PNG IDAT stream: truncated")
+    if len(raw) != size:
         raise ValueError("PNG pixel data size mismatch")
     out = bytearray()
     prev = bytes(stride)

@@ -254,7 +254,9 @@ def _lsh_keys_udf(dim: int, tables: int = LSH_TABLES,
 
 def _ann_lsh_over(emb: DataFrame, dim: int,
                   min_cosine: float) -> DataFrame:
-    from .sketch import _candidate_pairs
+    # unlike the minhash paths (sketch._lsh_verified) the embedding rides
+    # the bucket: a join-back of the vectors measured slower here
+    from .sketch import _above, _candidate_pairs
 
     # posexplode_outer (not plain posexplode): an inferred size()>0 filter
     # would re-run the signature UDF a second time per row. band_id is the
@@ -268,10 +270,7 @@ def _ann_lsh_over(emb: DataFrame, dim: int,
     # MAX_BUCKET ids instead of exploding quadratically (the min-id
     # canonical keeper stays in the sample)
     pairs = _candidate_pairs(with_b, "embedding")
-    raw = (_dot(F.col("pa"), F.col("pb"))
-           / (_norm(F.col("pa")) * _norm(F.col("pb"))))
-    # raw-threshold filter, rounded display (matches the DuckDB oracle)
-    return (pairs.select("a_id", "b_id", raw.alias("__raw"))
-            .filter(F.col("__raw") >= min_cosine)
-            .select("a_id", "b_id", F.round("__raw", 4).alias("cosine"))
+    cosine = (_dot(F.col("pa"), F.col("pb"))
+              / (_norm(F.col("pa")) * _norm(F.col("pb"))))
+    return (_above(pairs, cosine, min_cosine, "cosine")
             .orderBy(F.desc("cosine"), "a_id", "b_id"))

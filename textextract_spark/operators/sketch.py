@@ -292,39 +292,51 @@ def _candidate_pairs(bands: DataFrame, payload_col: str | None) -> DataFrame:
     return pairs.dropDuplicates(["a_id", "b_id"])
 
 
+def _above(pairs: DataFrame, score, threshold: float,
+           name: str) -> DataFrame:
+    """(a_id, b_id, name): pairs whose score reaches threshold."""
+    # filter on the RAW score, round only for display: the rounded value
+    # disagrees with the oracles' raw-threshold WHERE at the boundary
+    # (raw 0.39997 rounds to 0.4)
+    return (pairs.select("a_id", "b_id", score.alias("__raw"))
+            .filter(F.col("__raw") >= threshold)
+            .select("a_id", "b_id", F.round("__raw", 4).alias(name)))
+
+
+def _lsh_verified(sig: DataFrame, payload: str, score, threshold: float,
+                  name: str) -> DataFrame:
+    """The minhash candidate/verify block: payload-free bands over
+    (doc_id, minhash) -> candidate pairs -> each side's ``payload``
+    joined back as pa/pb for those pairs only -> ``score`` >= threshold.
+    """
+    # lazy checkpoint: the band branch and both join-backs share ONE run
+    # of the signature kernel. The payload never rides the band
+    # checkpoint or the bucket shuffle (r7, guide §8 decide-small/
+    # attach-once: bands carrying the signature were ~30x the bytes).
+    sig = sig.localCheckpoint(eager=False)
+    pairs = _candidate_pairs(minhash_bands(sig.select("doc_id", "minhash")),
+                             None)
+    side = sig.select("doc_id", payload)
+    joined = (pairs
+              .join(side.select(F.col("doc_id").alias("a_id"),
+                                F.col(payload).alias("pa")), "a_id")
+              .join(side.select(F.col("doc_id").alias("b_id"),
+                                F.col(payload).alias("pb")), "b_id"))
+    return _above(joined, score, threshold, name)
+
+
 def minhash_neardup(spark: SparkSession, sf_dir: str,
                     threshold: float = 0.5) -> DataFrame:
     """Candidate near-dup pairs by MinHash LSH + signature-estimated
-    Jaccard >= threshold: signature -> payload-free bands -> bucket
-    pairs -> signatures joined back for the surviving pairs only.
-
-    r7 (guide §8 decide-small/attach-once): the bands used to carry
-    the full 64-long signature per (doc, band) row — ~30x the id-only
-    bytes through the checkpoint, the bucket shuffle and the
-    collect_list; now the pair ids are decided payload-free (the
-    ngram_jaccard shape) and the two signature join-backs touch only
-    the pair survivors. The signature table is lazily checkpointed so
-    the band branch and both join-backs share ONE materialization."""
+    Jaccard >= threshold (the fraction of equal signature slots)."""
     # unspread read: minhash_signatures spreads its own input
     docs = source(spark, sf_dir, "documents", spread=False)
-    mh = minhash_signatures(docs).localCheckpoint(eager=False)
-    pairs = _candidate_pairs(minhash_bands(mh), None)
-    joined = (pairs
-              .join(mh.select(F.col("doc_id").alias("a_id"),
-                              F.col("minhash").alias("pa")), "a_id")
-              .join(mh.select(F.col("doc_id").alias("b_id"),
-                              F.col("minhash").alias("pb")), "b_id"))
-    # filter on the RAW estimate; round only for display (filtering on
-    # the rounded value disagrees with a raw-threshold oracle at the
-    # boundary, e.g. raw 0.39997 rounds to 0.4)
-    est_raw = (F.aggregate(F.zip_with("pa", "pb",
-                                      lambda x, y: (x == y).cast("int")),
-                           F.lit(0), lambda acc, x: acc + x)
-               / F.lit(K_HASHES))
-    return (joined.select("a_id", "b_id", est_raw.alias("__raw"))
-            .filter(F.col("__raw") >= threshold)
-            .select("a_id", "b_id",
-                    F.round("__raw", 4).alias("est_jaccard"))
+    est = (F.aggregate(F.zip_with("pa", "pb",
+                                  lambda x, y: (x == y).cast("int")),
+                       F.lit(0), lambda acc, x: acc + x)
+           / F.lit(K_HASHES))
+    return (_lsh_verified(minhash_signatures(docs), "minhash", est,
+                          threshold, "est_jaccard")
             .orderBy(F.desc("est_jaccard"), "a_id", "b_id"))
 
 
@@ -332,11 +344,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
                         threshold: float = 0.4) -> DataFrame:
     """Exact shingle-set Jaccard for the LSH candidate pairs (verify pass
     after minhash banding — the two-stage dedup a real pipeline runs).
-
-    The banding shuffle is payload-free (doc ids only); shingle sets are
-    joined back ONLY for the surviving candidate pairs — at 10^9 docs the
-    pair set is orders of magnitude smaller than docs x 16 bands, so the
-    shingle payload never rides the bucket shuffle (r1 carried it 16x).
     """
     docs = source(spark, sf_dir, "documents", spread=False)
     return (exact_jaccard_pairs(docs, threshold)
@@ -346,35 +353,13 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
 def exact_jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     """LSH-candidates -> exact-jaccard-verified pairs over any
     (doc_id, text) frame (doc_id may be any orderable type — the
-    curation path passes urls). Shared by ngram_jaccard_pairs and the
-    near-dup curation stage (pipeline.curation_decisions_neardup) — one
-    implementation of the candidate/verify shape.
-
-    r7: signatures and shingle sets come out of ONE Arrow kernel pass
-    (minhash_signatures emit_shingles=True), lazily checkpointed so the
-    banding branch and both verify join-backs share a single
-    materialization — the r6 form ran the full tokenize+shingle Python
-    loop twice (once inside the signature kernel, once in
-    with_shingles). Shingle arrays still never ride the bucket shuffle:
-    bands project (doc_id, minhash) only."""
-    sig = (minhash_signatures(docs, emit_shingles=True)
-           .localCheckpoint(eager=False))
-    pairs = _candidate_pairs(
-        minhash_bands(sig.select("doc_id", "minhash")), None)
-    sh = sig.select("doc_id", "shingles")
-    joined = (pairs
-              .join(sh.select(F.col("doc_id").alias("a_id"),
-                              F.col("shingles").alias("pa")), "a_id")
-              .join(sh.select(F.col("doc_id").alias("b_id"),
-                              F.col("shingles").alias("pb")), "b_id"))
+    curation path passes urls). Signatures and shingle sets come out of
+    ONE Arrow kernel pass (r7: the r6 form ran that Python loop twice).
+    """
     inter = F.size(F.array_intersect("pa", "pb"))
     union = F.size(F.array_union("pa", "pb"))
-    # raw-threshold filter (see minhash_neardup note) — matches the
-    # DuckDB oracle's WHERE on the unrounded jaccard
-    return (joined.select("a_id", "b_id",
-                          (inter / union).alias("__raw"))
-            .filter(F.col("__raw") >= threshold)
-            .select("a_id", "b_id", F.round("__raw", 4).alias("jaccard")))
+    return _lsh_verified(minhash_signatures(docs, emit_shingles=True),
+                         "shingles", inter / union, threshold, "jaccard")
 
 
 def with_simhash(df: DataFrame) -> DataFrame:
@@ -607,8 +592,10 @@ def neardup_clusters(spark: SparkSession, sf_dir: str,
                      threshold: float = 0.5,
                      max_iters: int = 20) -> DataFrame:
     """Near-dup cluster formation over the verified text pair graph:
-    ngram_jaccard_pairs edges -> Hash-Min connected components (see
-    connected_components for the algorithm and scale shape)."""
-    edges = (ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
-             .select("a_id", "b_id"))
+    exact_jaccard_pairs edges -> Hash-Min connected components (see
+    connected_components for the algorithm and scale shape). The edges
+    stay unordered: ngram_jaccard_pairs' output sort would survive the
+    components' cached union as a range exchange plus a sort."""
+    docs = source(spark, sf_dir, "documents", spread=False)
+    edges = exact_jaccard_pairs(docs, threshold).select("a_id", "b_id")
     return connected_components(edges, max_iters=max_iters)

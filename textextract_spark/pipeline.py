@@ -216,7 +216,6 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def extract_pages(pages: DataFrame, num_parts: int = 64,
                   n_salts: int = 8,
-                  max_payload_bytes: int = MAX_PAYLOAD_BYTES,
                   digest_col: str | None = None,
                   part_keys: list[int] | None = None) -> DataFrame:
     """Lazy end-to-end extraction plan over a raw pages DataFrame.
@@ -305,7 +304,7 @@ def extract_pages(pages: DataFrame, num_parts: int = 64,
     # duplicate the whole upstream subtree per branch — measured 2x the
     # job time.)
     in_bytes = F.coalesce(F.octet_length("html"), F.lit(0)).cast("long")
-    too_large = in_bytes > max_payload_bytes
+    too_large = in_bytes > MAX_PAYLOAD_BYTES
     df = (df.withColumn("in_bytes", in_bytes)
             .withColumn("too_large", too_large)
             .withColumn("html", F.when(~too_large, F.col("html"))))
@@ -393,74 +392,78 @@ def curation_decisions(extracted: DataFrame) -> DataFrame:
             .drop("__h", "__keeper"))
 
 
-def curation_decisions_neardup(extracted: DataFrame,
-                               threshold: float = 0.6) -> DataFrame:
-    """The curation journey v2: the exact-dedup decisions of
-    curation_decisions PLUS a NEAR-duplicate stage over the surviving
-    keeps — LSH candidates -> exact n-gram-jaccard verify (>= threshold)
-    -> Hash-Min connected components -> within each near-dup cluster
-    only the min-url keeper stays 'keep', the rest become
-    'drop:neardup'. This is the full pretraining curation decision:
-    boilerplate-stripped text, quality gate, byte-exact dedup, and
-    fuzzy dedup, one verdict per url.
+# Exact-jaccard threshold of the near-duplicate curation stage (the
+# oracle twins in operators/oracles.py use the same value).
+NEARDUP_THRESHOLD = 0.6
 
-    Scale shape: stage 1 is curation_decisions (payload-free winner
-    agg); the near-dup leg runs ONLY on keep survivors and reuses the
-    capped/bounded sketch machinery (sketch.exact_jaccard_pairs +
-    connected_components: payload-free banding, sampled buckets,
-    survivors-only shingle join-back, aggregate-only CC driver loop).
-    The final decision join back is key equality on url against the
-    (small) non-keeper set.
 
-    The upstream quality gate drops whitespace-poor docs ('no_spaces',
-    space density < 0.05) BEFORE this stage, so every scored doc takes
-    the word-shingle branch — which is what lets the DuckDB twin use a
-    single word-shingle CTE (the operator itself stays script-aware for
-    other callers).
-    """
-    from .operators.sketch import connected_components, exact_jaccard_pairs
+def _keeps(decided: DataFrame) -> DataFrame:
+    """The keep survivors of a decision table as (doc_id=url, text)."""
+    return (decided.filter(F.col("decision") == "keep")
+            .select(F.col("url").alias("doc_id"), "text"))
 
-    # one materialization of extraction + stage-1 decisions: the
-    # near-dup leg references it from FOUR branches (minhash bands,
-    # shingle join-back x2, the final decision join) and Catalyst does
-    # not share subplans — without the checkpoint the full extraction
-    # re-ran per branch (measured 36 s vs ~8 s at sf0.1). Same
-    # "materialize the curation table" step the product path gets for
-    # free by committing `extracted` before deciding.
-    base = curation_decisions(extracted).localCheckpoint(eager=False)
-    keeps = (base.filter(F.col("decision") == "keep")
-             .select(F.col("url").alias("doc_id"), "text"))
-    pairs = (exact_jaccard_pairs(keeps, threshold)
-             .select("a_id", "b_id"))
-    labels = connected_components(pairs)
-    non_keepers = (labels
-                   .filter(F.col("doc_id") != F.col("cluster_id"))
-                   .select(F.col("doc_id").alias("url"),
-                           F.lit(True).alias("__nd")))
-    return (base.join(non_keepers, "url", "left")
+
+def _demote(decided: DataFrame, urls: DataFrame, reason: str) -> DataFrame:
+    """Left-join a one-column ``url`` frame: its keeps become ``reason``."""
+    hits = urls.select("url", F.lit(True).alias("__hit"))
+    return (decided.join(hits, "url", "left")
             .withColumn(
                 "decision",
                 F.when((F.col("decision") == "keep")
-                       & F.col("__nd").isNotNull(),
-                       F.lit("drop:neardup"))
+                       & F.col("__hit").isNotNull(), F.lit(reason))
                  .otherwise(F.col("decision")))
-            .drop("__nd"))
+            .drop("__hit"))
+
+
+def _neardup_stage(extracted: DataFrame):
+    """(stage-1 decisions, their keeps, the url set of near-dup keeps:
+    every near-dup cluster member but its min-url keeper)."""
+    from .operators.sketch import connected_components, exact_jaccard_pairs
+
+    # the one materialization of extraction + stage-1 decisions: the
+    # near-dup leg references it from FOUR branches (minhash bands,
+    # shingle join-back x2, the demotion join), the later stages from
+    # more, and Catalyst does not share subplans — without the
+    # checkpoint the full extraction re-ran per branch (measured 36 s
+    # vs ~8 s at sf0.1). connected_components checkpoints its rounds,
+    # so the url set it yields is materialized too.
+    decided = curation_decisions(extracted).localCheckpoint(eager=False)
+    keeps = _keeps(decided)
+    labels = connected_components(
+        exact_jaccard_pairs(keeps, NEARDUP_THRESHOLD).select("a_id", "b_id"))
+    neardup = (labels.filter(F.col("doc_id") != F.col("cluster_id"))
+               .select(F.col("doc_id").alias("url")))
+    return decided, keeps, neardup
+
+
+def curation_decisions_neardup(extracted: DataFrame) -> DataFrame:
+    """The curation journey v2: curation_decisions PLUS a NEAR-duplicate
+    stage over the surviving keeps — LSH candidates -> exact
+    n-gram-jaccard verify (>= NEARDUP_THRESHOLD) -> Hash-Min connected
+    components -> within each cluster only the min-url keeper stays
+    'keep', the rest become 'drop:neardup'. One verdict per url.
+
+    The near-dup leg runs ONLY on keep survivors through the capped
+    sketch machinery (payload-free banding, sampled buckets,
+    survivors-only shingle join-back, aggregate-only CC driver loop).
+    The upstream quality gate drops whitespace-poor docs ('no_spaces')
+    first, so every scored doc takes the word-shingle branch — which
+    lets the DuckDB twin use a single word-shingle CTE.
+    """
+    decided, _, neardup = _neardup_stage(extracted)
+    return _demote(decided, neardup, "drop:neardup")
 
 
 def curation_decisions_full(extracted: DataFrame,
-                            eval_docs: DataFrame | None = None,
-                            threshold: float = 0.6) -> DataFrame:
-    """The COMPLETE pretraining curation journey as one verdict row per
-    url (r5 VERDICT ask #3): extraction status -> quality gate -> exact
-    dedup -> near-dup clusters (curation_decisions_neardup) -> benchmark
-    DECONTAMINATION against ``eval_docs`` (GPT-3 appendix-C n-gram rule;
-    None or empty means no benchmark supplied and the stage passes
-    everything) -> CCNet PERPLEXITY bucketing (char-bigram LM trained on
-    the keep survivors themselves as the clean reference slice) ->
-    deterministic train/val/test SPLIT assignment. Decisions: keep |
-    drop:extract | drop:quality | drop:dup | drop:neardup |
-    drop:contaminated; final keeps also carry ``ppl_bucket``
-    (head/middle/tail — the mixture-weighting input) and ``split``;
+                            eval_docs: DataFrame | None = None
+                            ) -> DataFrame:
+    """The COMPLETE pretraining curation journey, one verdict row per
+    url: extraction status -> quality gate -> exact dedup -> near-dup
+    clusters (curation_decisions_neardup) -> benchmark DECONTAMINATION
+    against ``eval_docs`` (GPT-3 appendix-C n-gram rule; None skips the
+    stage) -> CCNet PERPLEXITY bucket (char-bigram LM trained on the
+    keep survivors themselves) -> deterministic train/val/test SPLIT.
+    Final keeps carry ``ppl_bucket`` (head/middle/tail) and ``split``;
     dropped rows carry '-' in both.
 
     This is the single text-out contract a real pipeline commits
@@ -468,43 +471,37 @@ def curation_decisions_full(extracted: DataFrame,
     /root/reference/backend/routes/api_routes.py:78,126-132) — the
     same function the product ``--curate`` path snapshots.
 
-    Scale shape (10^12 urls): the neardup result is checkpointed ONCE
-    and feeds four branches. Decontamination collapses the benchmark to
-    a broadcast gram-hash set (corpus never shuffles); the perplexity
-    model is V^2-bounded and broadcast, its scoring one doc-key
-    shuffle; the split is a stateless pure function of url; the final
-    assembly is three url-key left joins against keep-sized sides —
-    every stage reuses the already-scale-shaped operator it names.
+    Scale shape (10^12 urls): the stage-1 decisions are checkpointed
+    ONCE; the near-dup survivors are their keeps less the near-dup url
+    set (a broadcast anti-join), and each stage demotes keeps by one
+    url-key left join (_demote). Decontamination broadcasts the benchmark's
+    gram-hash set, the perplexity model is V^2-bounded and rides the
+    scoring closure, the split is a pure function of url.
     """
     from .operators.textdata import (
         char_lm_perplexity, contamination_flags, dataset_split)
 
-    base = (curation_decisions_neardup(extracted, threshold)
-            .localCheckpoint(eager=False))
-    keeps = (base.filter(F.col("decision") == "keep")
-             .select(F.col("url").alias("doc_id"), "text"))
+    decided, keeps, neardup = _neardup_stage(extracted)
+    decided = _demote(decided, neardup, "drop:neardup")
+    # broadcast: the survivors feed four consumers, and a sort-merge
+    # anti-join shuffled their text once per consumer (peak scratch
+    # 13 -> 21 MB on curate_rerun); the near-dup set is a fraction of
+    # the keeps
+    keeps = keeps.join(
+        F.broadcast(neardup.withColumnRenamed("url", "doc_id")),
+        "doc_id", "left_anti")
     if eval_docs is not None:
         contam = (contamination_flags(keeps, eval_docs)
                   .filter(F.col("contaminated"))
-                  .select(F.col("doc_id").alias("url"),
-                          F.lit(True).alias("__ct")))
-    else:
-        contam = keeps.select(F.col("doc_id").alias("url"),
-                              F.lit(True).alias("__ct")).limit(0)
+                  .select(F.col("doc_id").alias("url")))
+        decided = _demote(decided, contam, "drop:contaminated")
     ppl = (char_lm_perplexity(keeps, keeps.select("text"))
            .select(F.col("doc_id").alias("url"),
                    F.col("ppl_bucket").alias("__ppl")))
     splits = (dataset_split(keeps, id_col="doc_id")
               .select(F.col("doc_id").alias("url"),
                       F.col("split").alias("__sp")))
-    return (base
-            .join(contam, "url", "left")
-            .withColumn(
-                "decision",
-                F.when((F.col("decision") == "keep")
-                       & F.col("__ct").isNotNull(),
-                       F.lit("drop:contaminated"))
-                 .otherwise(F.col("decision")))
+    return (decided
             .join(ppl, "url", "left")
             .join(splits, "url", "left")
             .withColumn("ppl_bucket",
@@ -513,7 +510,7 @@ def curation_decisions_full(extracted: DataFrame,
             .withColumn("split",
                         F.when(F.col("decision") == "keep",
                                F.col("__sp")).otherwise(F.lit("-")))
-            .drop("__ct", "__ppl", "__sp"))
+            .drop("__ppl", "__sp"))
 
 
 # ---------------------------------------------------------------------------

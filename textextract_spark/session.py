@@ -21,7 +21,6 @@ def get_spark(
     app_name: str = "textextract-spark",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    extra: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
@@ -69,6 +68,4 @@ def get_spark(
                    # shuffles). Over a real network fabric, leave it on.
                    .config("spark.shuffle.compress", "false")
                    .config("spark.shuffle.spill.compress", "false"))
-    for k, v in (extra or {}).items():
-        builder = builder.config(k, v)
     return builder.getOrCreate()

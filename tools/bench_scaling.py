@@ -26,7 +26,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pandas as pd  # noqa: E402  (workers import it; keep at module top)
 
@@ -51,7 +52,7 @@ def run_confined(cores: int, corpus: str, repeats: int = 2) -> dict:
     cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable,
            "tools/scaling_probe.py", str(cores), corpus, str(repeats)]
     out = subprocess.run(cmd, capture_output=True, text=True,
-                         cwd="/root/repo", timeout=1200)
+                         cwd=ROOT, timeout=1200)
     line = out.stdout.strip().splitlines()[-1]
     return json.loads(line)
 
@@ -118,8 +119,8 @@ def main() -> None:
               "ts": dt.datetime.now(dt.timezone.utc).isoformat()}
     print(json.dumps(result))
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
         f.write(f"""# BENCH/BASELINE — scaling + throughput evidence
 
 Target (BASELINE.json): docs/sec extraction throughput with scaling

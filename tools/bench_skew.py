@@ -14,7 +14,8 @@ import statistics
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
@@ -157,8 +158,8 @@ test_salted_partitioning_bounds_task_skew.
 
 Generated by tools/bench_skew.py.
 """
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/SKEW.md", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "SKEW.md"), "w") as f:
         f.write(out)
     print(out)
 

@@ -537,6 +537,44 @@ def test_one_commit_path():
     assert calls("streaming/stream.py", r"def _sink\(") == 1
 
 
+def test_one_materialize_step():
+    """Structural guard: every lineage cut in the package goes through
+    session.materialize, where the master picks localCheckpoint or a
+    reliable checkpoint, and the only caches are the two with an
+    explicit lifetime: the run-scoped WARC records in run_pipeline and
+    releases.cached_feed's dim."""
+    import ast
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "textextract_spark"
+    sites = []
+
+    class Calls(ast.NodeVisitor):
+        fn = "<module>"
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and (
+                    f.attr in ("localCheckpoint", "checkpoint", "persist")
+                    or (f.attr == "cache" and not node.args)):
+                sites.append((f.attr, rel, self.fn))
+            self.generic_visit(node)
+
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg).as_posix()
+        Calls().visit(ast.parse(p.read_text()))
+    assert sorted(sites) == [
+        ("cache", "operators/releases.py", "cached_feed"),
+        ("checkpoint", "session.py", "materialize"),
+        ("localCheckpoint", "session.py", "materialize"),
+        ("persist", "pipeline.py", "run_pipeline"),
+    ]
+
+
 def test_one_near_duplicate_path():
     """Structural guard: the curation journey materializes its decision
     table once and demotes keeps through one helper, the two minhash
@@ -551,7 +589,11 @@ def test_one_near_duplicate_path():
     pipeline = (pkg / "pipeline.py").read_text()
     sketch = (pkg / "operators" / "sketch.py").read_text()
 
-    assert pipeline.count(".localCheckpoint(") == 1
+    stage = next(n for n in ast.parse(pipeline).body
+                 if isinstance(n, ast.FunctionDef)
+                 and n.name == "_neardup_stage")
+    assert pipeline.count("materialize(") == 1
+    assert "materialize(" in ast.get_source_segment(pipeline, stage)
     assert pipeline.count("def _demote(") == 1
     assert len(re.findall(r"_candidate_pairs\(\s*minhash_bands\(",
                           sketch)) == 1

@@ -49,7 +49,9 @@ def main() -> None:
     ap.add_argument("--num-parts", type=int, default=64)
     ap.add_argument("--n-salts", type=int, default=8)
     ap.add_argument("--chunks", type=int, default=4)
-    ap.add_argument("--cores", default=None)
+    ap.add_argument("--cores", default=None,
+                    help="local[N] threads; ignored under spark-submit, "
+                         "whose --master stands")
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args()
 

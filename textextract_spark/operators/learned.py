@@ -25,7 +25,7 @@ distributions / gradients are map-side-combinable bucket aggregations
 (bucket cardinality is a constant, so the reduce side is trivially
 small); model state (B weights + intercept) rides broadcast joins; the
 per-iteration driver loop carries NO data (the Hash-Min CC / PageRank
-rule). Label and feature tables are localCheckpoint-materialized once —
+rule). Label and feature tables are materialized once —
 at production scale they would be committed tables — so the unrolled
 iteration plan never recomputes the token pass per round.
 """
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import memo, source
+from ..session import materialize
 from .spark_text import WORD_RE, md5_bucket, words
 
 HASH_MOD = 1000003  # prime; keeps the Horner fold exact in int64
@@ -125,9 +126,9 @@ def dsir_doc_weights(docs: DataFrame, target_pred,
                        .astype(np.int64).tolist())
         return pd.Series(out)
 
-    hist = (docs.select("doc_id", target_pred.alias("__is_target"),
-                        hist_of(F.lower(F.col("text"))).alias("__hist"))
-            .localCheckpoint(eager=False))
+    hist = materialize(
+        docs.select("doc_id", target_pred.alias("__is_target"),
+                    hist_of(F.lower(F.col("text"))).alias("__hist")))
     hx = hist.select("doc_id", "__is_target",
                      F.posexplode("__hist").alias("__b", "__c"))
     # ONE bucket aggregation yields both distributions (q = all docs,
@@ -202,7 +203,7 @@ def _lr_features(docs: DataFrame, buckets: int):
     """(labels, feats): labels = (doc_id, y) with y = contains any
     LR_POS_WORDS token (the handcrafted rule being distilled — the
     corpus's planted boilerplate marker); feats = distinct
-    (doc_id, bucket) presence rows. Both localCheckpoint-materialized —
+    (doc_id, bucket) presence rows. Both materialized —
     the training loop reuses them every iteration (at production
     scale: committed tables)."""
     base = docs.select(
@@ -212,7 +213,7 @@ def _lr_features(docs: DataFrame, buckets: int):
             F.array(*[F.lit(w) for w in LR_POS_WORDS]))) > 0)
         .cast("int").alias("y"),
         words(F.col("text")).alias("__w"))
-    labels = base.select("doc_id", "y").localCheckpoint(eager=True)
+    labels = materialize(base.select("doc_id", "y"), eager=True)
     # explode_outer + null filter: see dsir_doc_weights (r7)
     feats = (base.select("doc_id", F.explode_outer("__w").alias("__t"))
              .filter(F.col("__t").isNotNull())
@@ -220,9 +221,9 @@ def _lr_features(docs: DataFrame, buckets: int):
              .distinct())
     # bucket -1 is the intercept: an always-on feature for every doc,
     # so ONE gradient aggregation covers the whole model
-    feats_i = (feats.unionAll(
-        labels.select("doc_id", F.lit(-1).cast("int").alias("bucket")))
-        .localCheckpoint(eager=True))
+    feats_i = materialize(feats.unionAll(
+        labels.select("doc_id", F.lit(-1).cast("int").alias("bucket"))),
+        eager=True)
     return labels, feats_i
 
 
@@ -300,7 +301,7 @@ def _trained_model(spark: SparkSession, sf_dir: str):
     SAME model, and the driver runs every query in one session —
     retraining twice doubles the only expensive stage. Values hold
     (w6, labels, feats_i, n) with the two feature tables
-    localCheckpoint-materialized."""
+    materialized."""
     return memo(("lr_model", sf_dir), f"{sf_dir}/documents.parquet",
                 lambda: lr_train(
                     source(spark, sf_dir, "documents", spread=True)))
@@ -410,7 +411,7 @@ def kmeans_fit_qv(qv: DataFrame, k: int = KMEANS_K,
     components (model state, the MLlib shape) — with empty clusters
     keeping their previous centroid. Returns (centroids dict, the
     checkpointed qv)."""
-    qv = qv.localCheckpoint(eager=True)
+    qv = materialize(qv, eager=True)
     init = {int(r["vec_id"]): list(r["q"])
             for r in qv.filter(F.col("vec_id") < k).collect()}
     cents = {kk: init[kk] for kk in range(k)}

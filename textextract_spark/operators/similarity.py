@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..io.source import memo, source
+from ..session import materialize
 
 TOPK = 20
 LSH_TABLES = 4
@@ -82,7 +83,7 @@ def label_centroids(spark: SparkSession, sf_dir: str,
     Centroids are per-label means over the deterministic ``vec_id %
     sample_mod == 0`` pseudo-sample (mirrored exactly in the DuckDB twin
     so both engines quantize identically), computed via posexplode +
-    two hash-aggs (all JVM-side), materialized with localCheckpoint and
+    two hash-aggs (all JVM-side), materialized once and
     memoized per (application, sf_dir): subsequent ivf_topk plans scan
     the checkpointed centroid RDD — NO posexplode over the embeddings
     table remains in the query plan (plan-asserted, tests/test_plans).
@@ -97,16 +98,16 @@ def label_centroids(spark: SparkSession, sf_dir: str,
         emb = source(spark, sf_dir, "embeddings", spread=True).withColumn(
             "embedding",
             F.transform("embedding", lambda x: x.cast("double")))
-        return (emb.filter(F.col("vec_id") % sample_mod == 0)
-                .select("label",
-                        F.posexplode("embedding").alias("dim", "val"))
-                .groupBy("label", "dim").agg(F.avg("val").alias("v"))
-                .groupBy("label")
-                .agg(F.array_sort(F.collect_list(F.struct("dim", "v")))
-                     .alias("dv"))
-                .select("label",
-                        F.transform("dv", lambda s: s.v).alias("centroid"))
-                .localCheckpoint(eager=True))
+        return materialize(
+            emb.filter(F.col("vec_id") % sample_mod == 0)
+            .select("label", F.posexplode("embedding").alias("dim", "val"))
+            .groupBy("label", "dim").agg(F.avg("val").alias("v"))
+            .groupBy("label")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "v")))
+                 .alias("dv"))
+            .select("label",
+                    F.transform("dv", lambda s: s.v).alias("centroid")),
+            eager=True)
     return memo(("label_centroids", sf_dir, sample_mod),
                 f"{sf_dir}/embeddings.parquet", build)
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import source, spread_partitions
+from ..session import materialize
 from .spark_text import is_spaceless, split_ws, xxh64_bytes
 
 K_HASHES = 64          # minhash permutations
@@ -253,15 +254,14 @@ def _candidate_pairs(bands: DataFrame, payload_col: str | None) -> DataFrame:
     The stats/join diamond would otherwise evaluate the bands frame —
     and its whole upstream (signature UDF / 64-hash agg) — TWICE
     (Catalyst does not share subplans across branches; measured as a
-    duplicated ArrowEvalPython in the LSH plan), so bands is lazily
-    localCheckpoint'ed: one materialization feeds both branches, the
-    same "write signatures/bands to a scratch table" step a production
-    dedup pipeline performs anyway. Blocks are MEMORY_AND_DISK, per
-    query, reclaimed by ContextCleaner when the plan is dropped.
+    duplicated ArrowEvalPython in the LSH plan), so bands is
+    materialized lazily, once for both branches: the same "write
+    signatures/bands to a scratch table" step a production dedup
+    pipeline performs anyway.
     """
     member = (F.struct("doc_id", payload_col) if payload_col
               else F.struct("doc_id"))
-    bands = bands.localCheckpoint(eager=False)
+    bands = materialize(bands)
     stats = (bands.groupBy("band_id", "band_key")
              .agg(F.count("*").alias("__sz"),
                   F.min("doc_id").alias("__keep_id"))
@@ -313,7 +313,7 @@ def _lsh_verified(sig: DataFrame, payload: str, score, threshold: float,
     # of the signature kernel. The payload never rides the band
     # checkpoint or the bucket shuffle (r7, guide §8 decide-small/
     # attach-once: bands carrying the signature were ~30x the bytes).
-    sig = sig.localCheckpoint(eager=False)
+    sig = materialize(sig)
     pairs = _candidate_pairs(minhash_bands(sig.select("doc_id", "minhash")),
                              None)
     side = sig.select("doc_id", payload)
@@ -533,24 +533,19 @@ def connected_components(edges: DataFrame,
 
     Returns (doc_id, cluster_id) ordered by doc_id.
     """
-    # symmetric neighbor list, materialized once — every iteration reuses
-    # it (at scale: write to a temp table / cache; here .cache())
-    sym = (edges.union(edges.select(F.col("b_id").alias("a_id"),
-                                    F.col("a_id").alias("b_id")))
-           .withColumnRenamed("a_id", "src")
-           .withColumnRenamed("b_id", "dst")
-           .cache())
+    # symmetric neighbor list, materialized once — every round reads it
+    sym = materialize(
+        edges.union(edges.select(F.col("b_id").alias("a_id"),
+                                 F.col("a_id").alias("b_id")))
+        .withColumnRenamed("a_id", "src")
+        .withColumnRenamed("b_id", "dst"))
     labels = (sym.select(F.col("src").alias("doc_id")).distinct()
               .withColumn("cluster_id", F.col("doc_id")))
     changed = 0
     for _ in range(max_iters):
         # min label among self and neighbors; the changed flag rides the
-        # SAME join (r7): the old shape re-joined new vs old labels in a
-        # separate count job every round — with shallow dup components
-        # (2-4 rounds typical) that convergence check was half the
-        # loop's jobs and a full extra shuffle join per round. Now the
-        # checkpointed round output carries __chg and the check is one
-        # narrow agg over in-memory blocks.
+        # SAME join (r7), so the convergence check is one narrow agg over
+        # the materialized round, not a second shuffle join per round
         neighbor_min = (sym.join(labels,
                                  sym.dst == labels.doc_id)
                         .groupBy("src")
@@ -564,18 +559,15 @@ def connected_components(edges: DataFrame,
                                .alias("cluster_id"),
                               (F.coalesce("nmin", "cluster_id")
                                < F.col("cluster_id")).alias("__chg")))
-        # LAZY checkpoint + the changed-count agg as its first action:
-        # one job both materializes the round (lineage cut) and answers
-        # the convergence question — 1 job/round where r6 ran 2 (the
-        # eager checkpoint, then a new-vs-old shuffle join + count)
-        new_labels = new_labels.localCheckpoint(eager=False)
+        # lazy: the changed-count agg is the job that materializes the
+        # round, so a round costs one job
+        new_labels = materialize(new_labels)
         changed = (new_labels
                    .agg(F.sum(F.col("__chg").cast("long")).alias("c"))
                    .collect()[0]["c"]) or 0
         labels = new_labels.drop("__chg")
         if changed == 0:
             break
-    sym.unpersist()
     if changed != 0:
         # a silent non-fixpoint would return WRONG cluster ids (labels
         # still propagating through a >max_iters-diameter chain) — fail

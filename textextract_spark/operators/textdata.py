@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import memo, source
+from ..session import materialize
 from .spark_text import code_points, md5_bucket, split_ws, words
 
 
@@ -424,7 +425,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
     # a size()>0 filter that re-evaluates the inlined tokenizer /
     # bigram transform a second time per row (guide §7.2)
     #
-    # uni and bi are lazily localCheckpoint'ed (r7): Catalyst does not
+    # uni and bi are materialized lazily (r7): Catalyst does not
     # share logical subtrees across references, and each count table is
     # referenced TWICE — once by its total (tot1/tot2 are separate
     # aggregates) and once by the join/filter path — so without the cut
@@ -433,10 +434,9 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
     # checkpointed tables are vocabulary-bounded (distinct words /
     # distinct adjacent pairs), not corpus-sized — the standard
     # "materialize the model table" step.
-    uni = (dw.select(F.explode_outer("__w").alias("w"))
-           .filter(F.col("w").isNotNull())
-           .groupBy("w").agg(F.count("*").alias("cw"))
-           .localCheckpoint(eager=False))
+    uni = materialize(dw.select(F.explode_outer("__w").alias("w"))
+                      .filter(F.col("w").isNotNull())
+                      .groupBy("w").agg(F.count("*").alias("cw")))
     tot1 = uni.agg(F.sum("cw").alias("__t1"))
     pairs = (dw.filter(F.size("__w") >= 2)
              .select(F.explode_outer(F.expr(
@@ -446,8 +446,8 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
                  .alias("__b"))
              .filter(F.col("__b").isNotNull())
              .select("__b.w1", "__b.w2"))
-    bi = (pairs.groupBy("w1", "w2").agg(F.count("*").alias("n_pair"))
-          .localCheckpoint(eager=False))
+    bi = materialize(
+        pairs.groupBy("w1", "w2").agg(F.count("*").alias("n_pair")))
     tot2 = bi.agg(F.sum("n_pair").alias("__t2"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("cw").alias("n_w1"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("cw").alias("n_w2"))
@@ -628,22 +628,21 @@ def train_bpe_merges(docs: DataFrame, n_merges: int = 48,
          space-joined symbols string, with zero-width lookarounds so
          back-to-back occurrences ("a a a") merge greedy-left exactly
          like the bpe_segment kernel scan.
-    localCheckpoint every `checkpoint_every` rounds flattens the stacked
+    materializing every `checkpoint_every` rounds flattens the stacked
     regexp_replace lineage (otherwise round N re-evaluates N nested
     replaces and the expression tree outgrows codegen).
 
     Stops early when the best pair's corpus count drops below min_freq.
     Returns the learned merge list in rank order.
     """
-    words = (_word_freqs(docs, text_col)
-             .select(
-                 # " a b c " — sentinel spaces so one fixed-width
-                 # lookbehind/lookahead pair covers word edges
-                 F.concat(F.lit(" "),
-                          F.regexp_replace("w", "(.)", "$1 "))
-                  .alias("syms"),
-                 "freq")
-             .localCheckpoint(eager=True))
+    words = materialize(
+        _word_freqs(docs, text_col).select(
+            # " a b c " — sentinel spaces so one fixed-width
+            # lookbehind/lookahead pair covers word edges
+            F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 "))
+             .alias("syms"),
+            "freq"),
+        eager=True)
     # explicit partition sizing for the loop state: the distinct-word
     # table inherits the corpus agg's shuffle partitioning, but the loop
     # runs ~n_merges tiny jobs over it, so per-round scheduler overhead
@@ -652,10 +651,10 @@ def train_bpe_merges(docs: DataFrame, n_merges: int = 48,
     # task overhead; 1 partition, ~4 s) — at 10^8 distinct words this
     # still spreads to thousands of partitions.
     n_words = words.count()
-    parts = max(1, min(words.rdd.getNumPartitions(),
-                       n_words // 50_000 + 1))
-    if parts < words.rdd.getNumPartitions():
-        words = words.coalesce(parts).localCheckpoint(eager=True)
+    have = words.rdd.getNumPartitions()
+    parts = max(1, min(have, n_words // 50_000 + 1))
+    if parts < have:
+        words = materialize(words.coalesce(parts), eager=True)
     merges: list[tuple[str, str]] = []
     for rnd in range(n_merges):
         arr = F.split(F.trim(F.col("syms")), " ")
@@ -681,7 +680,7 @@ def train_bpe_merges(docs: DataFrame, n_merges: int = 48,
             "syms", F.regexp_replace("syms", F.lit(pat),
                                      F.lit(_repl_quote(a + b))))
         if (rnd + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=True)
+            words = materialize(words, eager=True)
     return merges
 
 
@@ -1090,7 +1089,7 @@ def duplicated_span_stats(docs: DataFrame, k: int = SPAN_K,
     aggregation. Same groupBy+join-not-window reasoning as
     duplicate_line_removal.
 
-    r7: the window table is lazily localCheckpoint'ed — it feeds both
+    r7: the window table is materialized lazily — it feeds both
     the stats aggregation and the join probe side, and without the cut
     Catalyst evaluated the whole substring+hash explode TWICE (no
     subtree sharing across diamond branches); the key switched from a
@@ -1113,14 +1112,14 @@ def duplicated_span_stats(docs: DataFrame, k: int = SPAN_K,
     t = F.col("text")
     offs = F.sequence(F.lit(0),
                       F.floor((F.length(t) - k) / stride).cast("int"))
-    wins = (docs.filter(F.length(t) >= k)
-            .select("doc_id", t.alias("__t"),
-                    F.explode(F.transform(
-                        offs, lambda i: i * stride)).alias("off"))
-            .select("doc_id", "off",
-                    F.xxhash64(F.substring(F.col("__t"), F.col("off") + 1,
-                                           F.lit(k))).alias("__h"))
-            .localCheckpoint(eager=False))
+    wins = materialize(
+        docs.filter(F.length(t) >= k)
+        .select("doc_id", t.alias("__t"),
+                F.explode(F.transform(
+                    offs, lambda i: i * stride)).alias("off"))
+        .select("doc_id", "off",
+                F.xxhash64(F.substring(F.col("__t"), F.col("off") + 1,
+                                       F.lit(k))).alias("__h")))
     # two-field lexicographic winner, NOT a packed doc_id*K+off key:
     # `off` is a CHAR offset and >1 MB pages are real in web crawls, so
     # any fixed pack base aliases across docs and can crown the wrong
@@ -1421,10 +1420,10 @@ def char_lm_train(ref: DataFrame) -> tuple:
                 lambda a, b: F.concat(a, b))).alias("bg"))
 
     ref_bg = bigrams(_lm_pad(ref))
-    # ONE training job (localCheckpoint) feeding the three tiny model
-    # projections below — without it each collect re-runs the ref pass
-    bg_counts = (ref_bg.groupBy("bg").agg(F.count("*").alias("bc"))
-                 .localCheckpoint(eager=True))
+    # ONE training job feeding the three tiny model projections
+    # below — without it each collect re-runs the ref pass
+    bg_counts = materialize(
+        ref_bg.groupBy("bg").agg(F.count("*").alias("bc")), eager=True)
     c1_counts = (bg_counts
                  .groupBy(F.substring("bg", 1, 1).alias("c1"))
                  .agg(F.sum("bc").alias("uc")))

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.source import source
+from ..session import materialize
 from .spark_text import words
 
 TRACKING_PREFIX = "utm_"  # the industry-standard tracking-param family
@@ -322,18 +323,17 @@ def pagerank_hosts(edges: DataFrame, n_iter: int = PAGERANK_ITERS,
     before the round-4 sync point. Returns (host, rank) with rank =
     round(micro-units / 1e6, 4).
     """
-    # materialize the HOST-LEVEL edge table once (r7, guide §5
-    # localCheckpoint): the rank recurrence references `wedges`/`nodes`
-    # in every unrolled iteration, and Catalyst does not share logical
-    # subtrees across those references — without the checkpoint the
-    # whole upstream (page synthesis + href regex explode + host agg)
-    # re-ran ~6x per query (measured 2.0s -> 1.6s at 50k docs,
-    # local[32]; the at-scale saving grows with corpus size while the
-    # checkpoint stays host-sized). The edge table is host-granular
-    # (tiny at any corpus
+    # materialize the HOST-LEVEL edge table once (r7, guide §5): the
+    # rank recurrence references `wedges`/`nodes` in every unrolled
+    # iteration, and Catalyst does not share logical subtrees across
+    # those references — without the checkpoint the whole upstream
+    # (page synthesis + href regex explode + host agg) re-ran ~6x per
+    # query (measured 2.0s -> 1.6s at 50k docs, local[32]; the at-scale
+    # saving grows with corpus size while the checkpoint stays
+    # host-sized). The edge table is host-granular (tiny at any corpus
     # size), exactly the "write the graph to a scratch table before
     # iterating" step a production PageRank performs anyway.
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges)
     out = edges.groupBy("src_host").agg(F.sum("n_links").alias("__out"))
     wedges = (edges.join(out, "src_host")
               .select("src_host", "dst_host", "n_links", "__out"))

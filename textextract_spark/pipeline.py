@@ -43,29 +43,7 @@ from pyspark.sql.types import (
 from .core.extract import (
     HTML_MARKERS, MAX_PAYLOAD_BYTES, SNIFF_BYTES, extract_document)
 from .io.table import ManifestTable
-
-SPAN_TYPE = ArrayType(StructType([
-    StructField("tag", StringType()),
-    StructField("start", LongType()),
-    StructField("end", LongType()),
-]))
-
-META_TYPE = StructType([
-    StructField("ms", DoubleType()),
-    StructField("in_bytes", LongType()),
-    StructField("fmt", StringType()),
-])
-
-EXTRACTED_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("warc_ts", TimestampType()),
-    StructField("part_key", IntegerType()),
-    StructField("lang", StringType()),
-    StructField("text", StringType()),
-    StructField("spans", SPAN_TYPE),
-    StructField("status", StringType()),
-    StructField("meta", META_TYPE),
-])
+from .session import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -424,10 +402,10 @@ def _neardup_stage(extracted: DataFrame):
     # near-dup leg references it from FOUR branches (minhash bands,
     # shingle join-back x2, the demotion join), the later stages from
     # more, and Catalyst does not share subplans — without the
-    # checkpoint the full extraction re-ran per branch (measured 36 s
-    # vs ~8 s at sf0.1). connected_components checkpoints its rounds,
-    # so the url set it yields is materialized too.
-    decided = curation_decisions(extracted).localCheckpoint(eager=False)
+    # cut the full extraction re-ran per branch (measured 36 s vs ~8 s
+    # at sf0.1). connected_components materializes its rounds, so the
+    # url set it yields is materialized too.
+    decided = materialize(curation_decisions(extracted))
     keeps = _keeps(decided)
     labels = connected_components(
         exact_jaccard_pairs(keeps, NEARDUP_THRESHOLD).select("a_id", "b_id"))

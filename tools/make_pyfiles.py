@@ -2,13 +2,18 @@
 north_rule deploy mode):
 
     python tools/make_pyfiles.py [dist/textextract_spark.zip]
-    spark-submit --py-files dist/textextract_spark.zip \
-        --deploy-mode cluster <driver.py> --pages ... --out ...
+    spark-submit --master <url> --conf spark.checkpoint.dir=<shared dir> \
+        --py-files dist/textextract_spark.zip driver.py --pages ... --out ...
 
-where <driver.py> is a copy of textextract_spark/__main__.py's main()
-(executors resolve every ``textextract_spark.*`` import from the zip —
-the package is pure Python, so zipimport serves it directly; pytest
-proves the bundle imports and extracts from the archive alone).
+where driver.py is ``from textextract_spark.__main__ import main; main()``
+(the driver and the executors resolve every ``textextract_spark.*``
+import from the zip — the package is pure Python, so zipimport serves
+it directly; tests/test_cluster.py runs the bundle on local-cluster
+masters). The master spark-submit sets stands; ``spark.checkpoint.dir``
+must be reachable from the driver and every executor, because
+``session.materialize`` checkpoints there under any non-local master.
+The local-only settings (tmpfs scratch, shuffle compression off, 12g
+driver heap) apply only outside spark-submit.
 
 The archive is DETERMINISTIC (sorted walk, fixed timestamps, .py only):
 rebuilding from the same tree is byte-identical, so cluster deploys can
@@ -50,5 +55,6 @@ if __name__ == "__main__":
     path = build(out)
     size = os.path.getsize(path)
     print(f"{path} ({size} bytes)")
-    print(f"spark-submit --py-files {path} --deploy-mode cluster "
-          "driver.py --pages <input> --out <table>")
+    print("spark-submit --master <url> "
+          "--conf spark.checkpoint.dir=<shared dir> "
+          f"--py-files {path} driver.py --pages <input> --out <table>")

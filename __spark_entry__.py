@@ -638,7 +638,7 @@ def _queries_by_section() -> dict[
         #   (same trainer/report as kmeans_clusters, doc vector source)
         "embed_dedup_docs": learned.embed_dedup_docs,       # oracled:
         #   SemDeDup end-to-end on documents: within-cluster pairs
-        #   under an EXACT INTEGER cosine>=0.95 test + Hash-Min CC
+        #   under an EXACT INTEGER cosine>=0.95 test + connected components
         "lr_train_weights": learned.lr_train_weights,       # oracled:
         #   logistic-regression TRAINING as Spark aggregations (3
         #   fixed-point GD rounds), unrolled-CTE twin in SQL
@@ -716,7 +716,7 @@ def _queries_by_section() -> dict[
         "minhash_recall": _minhash_recall,                  # oracled:
         #   derived metric — minhash candidates vs DuckDB exact pairs
         "neardup_clusters": sketch.neardup_clusters,        # oracled:
-        #   Hash-Min connected components vs recursive-CTE closure
+        #   connected components vs recursive-CTE closure
         "simhash_neardup": sketch.simhash_neardup,          # rows-only:
         #   engine-specific xxhash64 bit votes (pytest pigeonhole +
         #   saturation oracles; hamming-0 behavior oracled below)

@@ -52,3 +52,30 @@ def crash_after_first_chunk(monkeypatch):
             m.setattr(ManifestTable, "append", failing)
             yield
     return crash
+
+
+@pytest.fixture(scope="session")
+def drifting_chain():
+    """A page that drifts on every crawl: page i is a 100-word window
+    shifted 10 words past page i-1's, in 70 pages. Consecutive pages
+    share 81% of their 3-word shingles, pages 3 apart 53%, 4 apart 42%,
+    so the near-dup graph is one long chain. Returns (texts, hops):
+    ``hops(threshold)`` is the pure-Python distance from page 0 to the
+    farthest page over exact shingle-Jaccard edges >= threshold."""
+    words = [chr(97 + i // 676) + chr(97 + i // 26 % 26) + chr(97 + i % 26)
+             for i in range(790)]
+    texts = [" ".join(words[10 * i:10 * i + 100]) for i in range(70)]
+    grams = [{" ".join(t.split()[j:j + 3]) for j in range(98)}
+             for t in texts]
+
+    def hops(threshold: float) -> int:
+        seen, frontier, level = {0}, {0}, 0
+        while frontier:
+            frontier = {b for a in frontier for b in range(len(texts))
+                        if b not in seen and len(grams[a] & grams[b])
+                        >= threshold * len(grams[a] | grams[b])}
+            seen |= frontier
+            level += bool(frontier)
+        assert len(seen) == len(texts)  # one component
+        return level
+    return texts, hops

@@ -323,11 +323,12 @@ def test_overcap_bucket_sampled_not_dropped(spark):
     assert all(r.hamming == 0 for r in pairs)
 
 
-def test_neardup_clusters_transitive_chain(spark, tmp_path_factory):
+def test_neardup_clusters_transitive_chain(spark, tmp_path_factory,
+                                           drifting_chain):
     """Cluster formation must be TRANSITIVE: a chain A~A'~A'' where A vs
-    A'' is below the pair threshold still forms ONE cluster (component
-    diameter 2 -> needs more than one Hash-Min propagation round), with
-    cluster_id = the min doc id."""
+    A'' is below the pair threshold still forms ONE cluster, with
+    cluster_id = the min doc id. The second input is a drifting page
+    whose chain reaches its last page 23 hops from the min id."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -344,21 +345,79 @@ def test_neardup_clusters_transitive_chain(spark, tmp_path_factory):
     for i in range(10):
         texts.append(" ".join(rng.choice(pool) + str(1000 + 50 * i + j)
                               for j in range(50)))
-    d = tmp_path_factory.mktemp("chaindocs")
-    pq.write_table(pa.table({
-        "doc_id": list(range(len(texts))),
-        "text": texts,
-        "lang": ["en"] * len(texts)}), str(d / "documents.parquet"))
-
-    got = {r.doc_id: r.cluster_id
-           for r in neardup_clusters(spark, str(d), threshold=0.5).collect()}
     # direct pairs sanity: 0~1 and 1~2 above, 0~2 below the threshold
     exact01 = _jaccard(_shingles(texts[0]), _shingles(texts[1]))
     exact12 = _jaccard(_shingles(texts[1]), _shingles(texts[2]))
     exact02 = _jaccard(_shingles(texts[0]), _shingles(texts[2]))
     assert exact01 >= 0.5 and exact12 >= 0.5 and exact02 < 0.5, \
         (exact01, exact12, exact02)
-    assert got == {0: 0, 1: 0, 2: 0}
+    drift, hops = drifting_chain
+    assert hops(0.5) > 20
+    for texts, want in [(texts, {0: 0, 1: 0, 2: 0}),
+                        (drift, dict.fromkeys(range(len(drift)), 0))]:
+        d = tmp_path_factory.mktemp("chaindocs")
+        pq.write_table(pa.table({
+            "doc_id": list(range(len(texts))),
+            "text": texts,
+            "lang": ["en"] * len(texts)}), str(d / "documents.parquet"))
+        got = {r.doc_id: r.cluster_id for r in
+               neardup_clusters(spark, str(d), threshold=0.5).collect()}
+        assert got == want
+
+
+def test_connected_components_matches_union_find(spark, monkeypatch):
+    """connected_components equals a pure-Python union-find on chains
+    of 200 and 1,000 nodes (ids sorted along the chain and shuffled), a
+    1,000-leaf star and a random sparse graph, in ONE string-id edge
+    frame of disjoint id ranges (one range numbered without padding, so
+    string order is not number order; self-pairs are no edges), and
+    needs at most 20 rounds (~2 log2 1000) for it."""
+    from textextract_spark.operators import sketch
+
+    rng = random.Random(7)
+    edges = []
+
+    def chain(ids):
+        edges.extend(zip(ids, ids[1:]))
+
+    for n, tag in [(200, "a"), (1000, "b")]:
+        ids = [f"{tag}{i:04d}" for i in range(n)]
+        chain(ids)
+        rng.shuffle(ids)
+        chain([f"s{i}" for i in ids])
+    edges += [("c0500", f"c{i:04d}") for i in range(1001) if i != 500]
+    edges += [(f"r{rng.randrange(800)}", f"r{rng.randrange(800)}")
+              for _ in range(600)]
+    edges.append(("q0", "q0"))  # a self-pair only: in no output row
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+
+    calls = []
+    real = sketch.materialize
+
+    def counted(df, **kwargs):
+        calls.append(df)
+        # one materialize per round, after the one that cuts the input
+        # edges; a 21st round fails here instead of running on
+        assert len(calls) - 1 <= 20, len(calls)
+        return real(df, **kwargs)
+
+    monkeypatch.setattr(sketch, "materialize", counted)
+    got = sketch.connected_components(
+        spark.createDataFrame(edges, "a_id string, b_id string")).collect()
+    assert [r.doc_id for r in got] == sorted(want)
+    assert {r.doc_id: r.cluster_id for r in got} == want
 
 
 def test_pyxxh64_matches_spark(spark):

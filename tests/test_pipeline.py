@@ -675,13 +675,16 @@ def test_curation_full_decisions(spark):
         u: r.decision for u, r in got.items() if u != "u://e"}
 
 
-def test_curation_neardup_decisions(spark):
+def test_curation_neardup_decisions(spark, drifting_chain):
     """curation_decisions_neardup on planted cases: exact copies fall in
     stage 1 (drop:dup), one-word-appended near copies fall in stage 2
     (drop:neardup), a CHAIN of near copies collapses into one cluster
     with a single min-url keeper, and distinct/short/failed docs keep
-    their stage-1 decisions."""
-    from textextract_spark.pipeline import curation_decisions_neardup
+    their stage-1 decisions. A page that drifts on every crawl forms a
+    chain whose last copy is 35 hops from its min url; it too collapses
+    onto that one keeper."""
+    from textextract_spark.pipeline import (NEARDUP_THRESHOLD,
+                                            curation_decisions_neardup)
 
     A = ("alpha bravo charlie delta echo foxtrot golf hotel india "
          "juliet kilo lima mike november oscar papa quebec romeo")
@@ -696,6 +699,9 @@ def test_curation_neardup_decisions(spark):
         ("u://e", "ok", "short"),                     # quality gate
         ("u://f", "error:boom", ""),                  # extraction fail
     ]
+    drift, hops = drifting_chain
+    assert hops(NEARDUP_THRESHOLD) > 20
+    rows += [(f"u://drift/{i:02d}", "ok", t) for i, t in enumerate(drift)]
     ex = spark.createDataFrame(rows, "url string, status string, "
                                "text string")
     got = {r.url: r.decision
@@ -706,7 +712,9 @@ def test_curation_neardup_decisions(spark):
                    "u://g": "drop:neardup",
                    "u://d": "keep",
                    "u://e": "drop:quality",
-                   "u://f": "drop:extract"}
+                   "u://f": "drop:extract",
+                   **{f"u://drift/{i:02d}": "drop:neardup" if i else "keep"
+                      for i in range(len(drift))}}
 
 
 def test_pyfiles_bundle_deterministic_and_importable(tmp_path):

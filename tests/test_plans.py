@@ -609,3 +609,28 @@ def test_one_near_duplicate_path():
         if isinstance(a, ast.Constant) and isinstance(a.value, str)
         and len(a.value) > 1 and a.value.startswith("/")]
     assert literal_paths == []
+
+
+def test_components_have_no_round_limit():
+    """Structural guard: connected_components takes only the edges and
+    neardup_clusters no round option, nothing in sketch.py raises
+    RuntimeError, and each component round materializes exactly
+    once."""
+    import ast
+    import pathlib
+    sketch = (pathlib.Path(__file__).resolve().parents[1]
+              / "textextract_spark" / "operators" / "sketch.py")
+    tree = ast.parse(sketch.read_text())
+    fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    assert [a.arg for a in fns["connected_components"].args.args] == [
+        "edges"]
+    assert [a.arg for a in fns["neardup_clusters"].args.args] == [
+        "spark", "sf_dir", "threshold"]
+    assert not [n for n in ast.walk(tree) if isinstance(n, ast.Raise)
+                and "RuntimeError" in ast.dump(n)]
+    loops = [n for n in ast.walk(fns["connected_components"])
+             if isinstance(n, (ast.For, ast.While))]
+    assert len(loops) == 1
+    assert sum(isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+               and n.func.id == "materialize"
+               for n in ast.walk(loops[0])) == 1

@@ -24,8 +24,8 @@ Scale shape (10^12 docs): token->bucket hashing is a stateless map; the
 distributions / gradients are map-side-combinable bucket aggregations
 (bucket cardinality is a constant, so the reduce side is trivially
 small); model state (B weights + intercept) rides broadcast joins; the
-per-iteration driver loop carries NO data (the Hash-Min CC / PageRank
-rule). Label and feature tables are materialized once —
+per-iteration driver loop carries NO data (the connected-components /
+PageRank rule). Label and feature tables are materialized once —
 at production scale they would be committed tables — so the unrolled
 iteration plan never recomputes the token pass per round.
 """
@@ -663,7 +663,7 @@ def embed_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as published: cluster the embeddings, then compare pairs
     WITHIN each cluster): text -> exact-int embeddings -> k-means
     assignment -> within-cluster pairs passing the exact integer
-    cosine >= 0.95 test -> Hash-Min connected components -> keep =
+    cosine >= 0.95 test -> connected components -> keep =
     the component's min doc_id. Returns one row per doc: (doc_id,
     cluster, comp, keep).
 
@@ -672,7 +672,7 @@ def embed_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is a self-join ON THE CLUSTER KEY ONLY — SemDeDup's own
     design bounds the quadratic blowup by growing k with the corpus
     (clusters stay ~constant-sized, DataComp runs k ~ 10^5); the CC
-    loop is the aggregate-only Hash-Min driver iteration. The join
+    loop collects one aggregate per round. The join
     carries (id, 16 ints) — payloads never ride it."""
     from .sketch import connected_components
 

@@ -1175,7 +1175,7 @@ ORACLES: dict[str, str] = {
     # SemDeDup decision twin: the same planted all-pairs cosine graph as
     # ann_lsh_pairs, closed transitively with a recursive CTE; keep =
     # (vec_id = component min) — equality proves BOTH the pair stage and
-    # the Hash-Min component iteration
+    # the component rounds
     "embedding_dedup": """
         WITH RECURSIVE all_v AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -1282,9 +1282,9 @@ ORACLES["minhash_recall"] = _SHINGLE_CTE.format(
     """
 
 # connected components over the same pair graph (the cluster-formation
-# step): the Spark side is iterative Hash-Min label propagation; the twin
+# step): the Spark side is large-star/small-star rounds; the twin
 # computes the transitive closure with a recursive CTE and takes the min
-# id per component — equality proves the iteration converged to the true
+# id per component — equality proves the rounds reached the true
 # components
 ORACLES["neardup_clusters"] = _SHINGLE_CTE.format(
     recursive="RECURSIVE", thr="0.5") + """

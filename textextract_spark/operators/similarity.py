@@ -202,14 +202,14 @@ def embedding_dedup(spark: SparkSession, sf_dir: str,
     """SemDeDup-style embedding near-dup DECISION (Abbas et al., 2023:
     semantic dedup = cluster embeddings, drop within-cluster pairs above
     a cosine threshold): LSH-bucketed candidate pairs at cosine >=
-    min_cosine -> Hash-Min connected components -> per-vector keep flag
+    min_cosine -> connected components -> per-vector keep flag
     (keep = the component's min vec_id, the canonical representative).
 
     Composition of two already-scale-shaped stages: the pair stage is
     ann_lsh_planted (capped buckets, no self-join — planted duplicates
     keep the driver row non-vacuous exactly like the ann_lsh_pairs
     oracle), the component stage is sketch.connected_components
-    (O(diameter) rounds, aggregate-only driver loop). Output is one row
+    (one collected aggregate per round). Output is one row
     per vector that appears in any near-dup pair; vectors with no pair
     are trivially kept and omitted (they'd dominate the output with no
     information).

@@ -511,83 +511,76 @@ def simhash_neardup(spark: SparkSession, sf_dir: str,
     return simhash_pairs(with_simhash(docs), max_hamming)
 
 
-def connected_components(edges: DataFrame,
-                         max_iters: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components over an (a_id, b_id) pair graph: the step
     that turns pairwise matches into dedup DECISIONS — every node in a
     component gets cluster_id = min(id) of its component (the canonical
     keeper), so `keep = (doc_id == cluster_id)` is the final winner
-    predicate. Shared by the text near-dup path (neardup_clusters) and
-    the embedding SemDeDup path (similarity.embedding_dedup).
+    predicate. Shared by the text near-dup path (neardup_clusters), the
+    curation journey and the embedding SemDeDup paths.
 
-    Algorithm: Hash-Min label propagation (the standard Spark CC shape —
-    Rastogi et al., "Finding Connected Components in Map-Reduce"):
-    iterate label[v] = min(label[v], min(label[neighbors])) until a
-    fixpoint. Each round is one shuffle join + hash agg; rounds needed =
-    O(component diameter), and near-dup components are shallow (dup
-    clusters, not long chains), so this converges in a handful of rounds
-    at any corpus size. The driver-side loop checks ONLY a changed-row
-    count per round (an aggregate, not collected data). Restricted to
-    nodes that appear in at least one pair — singletons are trivially
-    their own cluster and would dominate the output for no information.
+    Algorithm: large-star/small-star alternation (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) over the
+    directed edges src = greatest(a, b) -> dst = least(a, b). Large-star
+    re-points each edge's src at the smallest of its dst and the dst's
+    targets; small-star re-points a src and its other targets at its
+    smallest target. Both keep every component and only lower targets,
+    and they end in a star forest: one star per component, centred on
+    its min id, each leaf's one edge naming its label and each centre
+    labelling itself. The rounds grow with log(component size) in
+    practice, not with the diameter (a 1,000-node chain takes ~10).
+
+    A round is two aggregate + key-equality-join steps (hot keys meet
+    aggregations and joins only, never windows) and a distinct,
+    materialized once; its one collected aggregate asks whether the
+    output is a star forest, the fixpoint that a further round would
+    return unchanged. Ids may be of any orderable type (the curation
+    path passes urls). Restricted to nodes that appear in a pair of
+    distinct ids — singletons are trivially their own cluster and would
+    dominate the output for no information.
 
     Returns (doc_id, cluster_id) ordered by doc_id.
     """
-    # symmetric neighbor list, materialized once — every round reads it
-    sym = materialize(
-        edges.union(edges.select(F.col("b_id").alias("a_id"),
-                                 F.col("a_id").alias("b_id")))
-        .withColumnRenamed("a_id", "src")
-        .withColumnRenamed("b_id", "dst"))
-    labels = (sym.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("cluster_id", F.col("doc_id")))
-    changed = 0
-    for _ in range(max_iters):
-        # min label among self and neighbors; the changed flag rides the
-        # SAME join (r7), so the convergence check is one narrow agg over
-        # the materialized round, not a second shuffle join per round
-        neighbor_min = (sym.join(labels,
-                                 sym.dst == labels.doc_id)
-                        .groupBy("src")
-                        .agg(F.min("cluster_id").alias("nmin")))
-        new_labels = (labels.join(neighbor_min,
-                                  labels.doc_id == neighbor_min.src,
-                                  "left")
-                      .select("doc_id",
-                              F.least("cluster_id",
-                                      F.coalesce("nmin", "cluster_id"))
-                               .alias("cluster_id"),
-                              (F.coalesce("nmin", "cluster_id")
-                               < F.col("cluster_id")).alias("__chg")))
-        # lazy: the changed-count agg is the job that materializes the
-        # round, so a round costs one job
-        new_labels = materialize(new_labels)
-        changed = (new_labels
-                   .agg(F.sum(F.col("__chg").cast("long")).alias("c"))
-                   .collect()[0]["c"]) or 0
-        labels = new_labels.drop("__chg")
-        if changed == 0:
+    # every round reads its edges twice (an aggregate and a join), and
+    # Catalyst shares no subplans: cut the pair upstream off once. A
+    # self-pair is no edge, and a star forest has no self-loop to end on
+    e = materialize(edges.select(F.greatest("a_id", "b_id").alias("src"),
+                                 F.least("a_id", "b_id").alias("dst"))
+                    .where(F.col("src") != F.col("dst")))
+    while True:
+        # large-star: src -> the smallest of dst and dst's own targets
+        low = e.groupBy("src").agg(F.min("dst").alias("m"))
+        large = (e.join(low.withColumnRenamed("src", "dst"), "dst", "left")
+                 .select("src", F.coalesce("m", "dst").alias("dst")))
+        # small-star: src and its other targets -> its smallest target
+        low = large.groupBy("src").agg(F.min("dst").alias("m"))
+        small = (large.join(low, "src")
+                 .select(F.when(F.col("dst") == F.col("m"), F.col("src"))
+                          .otherwise(F.col("dst")).alias("src"),
+                         F.col("m").alias("dst")))
+        e = materialize(small.distinct())
+        # a node with an out-edge and a second edge breaks the star shape
+        ends = e.select(F.inline(F.array(
+            F.struct(F.col("src").alias("n"), F.lit(True).alias("out")),
+            F.struct(F.col("dst").alias("n"), F.lit(False).alias("out")))))
+        if not (ends.groupBy("n")
+                .agg((F.max("out") & (F.count("*") > 1)).alias("x"))
+                .agg(F.max("x")).collect()[0][0]):
             break
-    if changed != 0:
-        # a silent non-fixpoint would return WRONG cluster ids (labels
-        # still propagating through a >max_iters-diameter chain) — fail
-        # loudly instead; callers with genuinely deep graphs raise
-        # max_iters (rounds needed = O(component diameter))
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} "
-            f"rounds ({changed} labels still changing); component "
-            f"diameter exceeds max_iters — raise max_iters")
-    return labels.orderBy("doc_id")
+    return (e.select(F.inline(F.array(
+                F.struct(F.col("src").alias("doc_id"),
+                         F.col("dst").alias("cluster_id")),
+                F.struct(F.col("dst").alias("doc_id"),
+                         F.col("dst").alias("cluster_id")))))
+            .distinct().orderBy("doc_id"))
 
 
 def neardup_clusters(spark: SparkSession, sf_dir: str,
-                     threshold: float = 0.5,
-                     max_iters: int = 20) -> DataFrame:
+                     threshold: float = 0.5) -> DataFrame:
     """Near-dup cluster formation over the verified text pair graph:
-    exact_jaccard_pairs edges -> Hash-Min connected components (see
-    connected_components for the algorithm and scale shape). The edges
-    stay unordered: ngram_jaccard_pairs' output sort would survive the
-    components' cached union as a range exchange plus a sort."""
+    exact_jaccard_pairs edges -> connected_components. The edges stay
+    unordered: ngram_jaccard_pairs' output sort would ride into the
+    component rounds as a range exchange plus a sort."""
     docs = source(spark, sf_dir, "documents", spread=False)
     edges = exact_jaccard_pairs(docs, threshold).select("a_id", "b_id")
-    return connected_components(edges, max_iters=max_iters)
+    return connected_components(edges)

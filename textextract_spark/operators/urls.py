@@ -308,10 +308,10 @@ def pagerank_hosts(edges: DataFrame, n_iter: int = PAGERANK_ITERS,
     Scale shape: each iteration is ONE key-equality join (ranks are a
     2-column table — tiny next to the edge list; AQE broadcasts it when
     it fits) plus one map-side-combinable groupBy(dst). The driver loop
-    carries no data (the Hash-Min CC lesson); at production iteration
-    counts, checkpoint every ~5 rounds to truncate lineage — at the
-    fixed analytics depth here (n_iter=3, unrolled in the SQL twin too)
-    the plan stays shallow without it.
+    carries no data (the connected-components lesson); at production
+    iteration counts, checkpoint every ~5 rounds to truncate lineage — at
+    the fixed analytics depth here (n_iter=3, unrolled in the SQL twin
+    too) the plan stays shallow without it.
 
     Ranks iterate in exact int64 MICRO-UNITS (r6, the lr_train /
     k-means schedule): per round each edge contributes

@@ -417,9 +417,9 @@ def _neardup_stage(extracted: DataFrame):
 def curation_decisions_neardup(extracted: DataFrame) -> DataFrame:
     """The curation journey v2: curation_decisions PLUS a NEAR-duplicate
     stage over the surviving keeps — LSH candidates -> exact
-    n-gram-jaccard verify (>= NEARDUP_THRESHOLD) -> Hash-Min connected
-    components -> within each cluster only the min-url keeper stays
-    'keep', the rest become 'drop:neardup'. One verdict per url.
+    n-gram-jaccard verify (>= NEARDUP_THRESHOLD) -> connected components
+    -> within each cluster only the min-url keeper stays 'keep', the
+    rest become 'drop:neardup'. One verdict per url.
 
     The near-dup leg runs ONLY on keep survivors through the capped
     sketch machinery (payload-free banding, sampled buckets,

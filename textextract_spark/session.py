@@ -95,11 +95,13 @@ def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """``df`` with its lineage cut, for a subplan read more than once
     (Catalyst shares no subtree across references) or iterated on.
 
-    Under ``local[...]``, ``localCheckpoint``. Under any other master a
-    lost executor would take local blocks along, so a reliable
-    ``checkpoint`` into ``spark.checkpoint.dir``. ContextCleaner
-    reclaims either once the frame is dropped. ``eager`` is Spark's."""
+    Under ``local[...]``, ``localCheckpoint`` (``eager`` is Spark's).
+    Under any other master a lost executor would take local blocks
+    along, so a reliable ``checkpoint`` into ``spark.checkpoint.dir``,
+    always eager: its one job computes and writes the frame, where a
+    lazy one is written by a second job that recomputes the plan.
+    ContextCleaner reclaims either once the frame is dropped."""
     master = df.sparkSession.sparkContext.master
     if master == "local" or master.startswith("local["):
         return df.localCheckpoint(eager)
-    return df.checkpoint(eager)
+    return df.checkpoint(eager=True)

@@ -34,11 +34,13 @@ from textextract_spark.pipeline import extract_pages
 
 
 def _num_parts(spark: SparkSession) -> int:
-    """Extraction partition count for the driver rows: the session's
+    """part_key bucket count for the driver rows: the session's
     defaultParallelism (floored at the historical 16) instead of a
     constant tuned below the local core count — r7, guide §2 "make
-    partitioning scale-adaptive". part_key never reaches these rows'
-    output columns, so the value is a pure execution knob here.
+    partitioning scale-adaptive" — so the payload exchange, which runs
+    min(num_parts, defaultParallelism) tasks, fills every slot. part_key
+    never reaches these rows' output columns, so the value is a pure
+    execution knob here.
     entry() keeps the pinned 16: its flagship output digest (which
     includes part_key) is tracked across rounds."""
     return max(16, spark.sparkContext.defaultParallelism)
@@ -84,7 +86,7 @@ def _chrome_pages(rows: DataFrame) -> DataFrame:
 
 def _extract(spark: SparkSession, pages: DataFrame, **kw) -> DataFrame:
     """The extraction step of the driver rows (entry keeps its pinned
-    16 partitions)."""
+    16 part_keys)."""
     return extract_pages(pages, num_parts=_num_parts(spark), n_salts=4,
                          **kw)
 

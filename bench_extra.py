@@ -5,11 +5,23 @@ touching the frozen driver-facing bench.py.
 Usage:
     python bench_extra.py time  [sf_dir] [q1 q2 ...]   # noop timings
     python bench_extra.py plans [sf_dir] [out_dir] [q1 q2 ...]
+    python bench_extra.py cpu   [calls] [seed]         # CPU split
 
 `time` prints one JSON line {"queries": {name: best_sec}, "sf": ...}
 with best-of-N (default 2, $BENCH_EXTRA_REPS) after one untimed warm
 rep per query. `plans` writes <out_dir>/<query>.txt with the formatted
 physical plan. Jobs are labelled via setJobDescription (guide §1.5).
+
+`cpu` runs an html_crawl-shaped ``run_pipeline(num_parts=16,
+chunks=2)`` over ``datagen.generate_pages(1600, seed)`` (default seed 3)
+on ``local[nproc]``: one untimed warm-up call, then ``calls`` (default
+3) timed calls, each printing one JSON line of wall time and CPU
+seconds: the driver, the JVM by thread group (task threads, C1/C2
+compiler, GC, other) and the summed Python workers, plus the Python
+task count. CPU comes from this process tree's /proc/<pid>/stat and
+/proc/<pid>/task/*/stat; a JVM thread that exits during a call counts
+as "other". The task count is the completed tasks of the call's stages
+that run a Python operator (from Spark's status store).
 """
 
 from __future__ import annotations
@@ -27,8 +39,144 @@ def _spark(cores: str):
     return get_spark(app_name="textextract-bench-extra", cores=cores)
 
 
+_TICK = os.sysconf("SC_CLK_TCK")
+_JVM_GROUPS = (("task", ("Executor task l",)),
+               ("jit", ("C1 CompilerThre", "C2 CompilerThre")),
+               ("gc", ("GC Thread", "G1 ")))
+
+
+def _stat(path: str) -> tuple[str, list[str]]:
+    """(comm, fields after comm) of one /proc stat file."""
+    with open(path) as f:
+        st = f.read()
+    r = st.rindex(")")
+    return st[st.index("(") + 1:r], st[r + 2:].split()
+
+
+def _cpu_s(fields: list[str], children: bool = False) -> float:
+    """utime + stime (+ reaped children's cutime + cstime), seconds."""
+    n = 4 if children else 2
+    return sum(int(v) for v in fields[11:11 + n]) / _TICK
+
+
+def _cpu_snapshot() -> dict:
+    """CPU seconds of this process tree: the driver, the JVM per thread
+    group, and every Python process below the JVM (daemon and workers,
+    with the workers it has reaped)."""
+    kids: dict[int, list[int]] = {}
+    comm: dict[int, str] = {}
+    fields: dict[int, list[str]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            comm[int(d)], fields[int(d)] = _stat(f"/proc/{d}/stat")
+        except OSError:
+            continue
+        kids.setdefault(int(fields[int(d)][1]), []).append(int(d))
+    me = os.getpid()
+    jvm = next(p for p in kids.get(me, []) if comm[p] == "java")
+    snap = {"driver": _cpu_s(fields[me]), "jvm": _cpu_s(fields[jvm]),
+            "python": 0.0, "threads": {}}
+    todo = list(kids.get(jvm, []))
+    while todo:
+        p = todo.pop()
+        todo.extend(kids.get(p, []))
+        if comm[p].startswith("python"):
+            snap["python"] += _cpu_s(fields[p], children=True)
+    for t in os.listdir(f"/proc/{jvm}/task"):
+        try:
+            name, f = _stat(f"/proc/{jvm}/task/{t}/stat")
+        except OSError:
+            continue
+        snap["threads"][t] = (name, _cpu_s(f))
+    return snap
+
+
+def _cpu_delta(a: dict, b: dict) -> dict:
+    groups = dict.fromkeys([g for g, _ in _JVM_GROUPS], 0.0)
+    for tid, (name, cpu) in b["threads"].items():
+        for g, prefixes in _JVM_GROUPS:
+            if name.startswith(prefixes):
+                groups[g] += cpu - a["threads"].get(tid, (name, 0.0))[1]
+                break
+    jvm = b["jvm"] - a["jvm"]
+    groups["other"] = jvm - sum(groups.values())
+    return {"driver_cpu_s": round(b["driver"] - a["driver"], 2),
+            "jvm_cpu_s": round(jvm, 2),
+            "jvm_cpu_s_by_group": {g: round(v, 2)
+                                   for g, v in groups.items()},
+            "python_cpu_s": round(b["python"] - a["python"], 2)}
+
+
+def _python_tasks(spark, after_stage: int) -> tuple[int, int]:
+    """(completed tasks of the stages after ``after_stage`` that run a
+    Python operator, the last stage id)."""
+    app = spark.sparkContext._jsc.sc().statusStore()
+    gw = spark.sparkContext._gateway
+    stages = app.stageList(None, False, False,
+                           gw.new_array(gw.jvm.double, 0), None)
+    tasks, last = 0, after_stage
+    for i in range(stages.size()):
+        s = stages.apply(i)
+        last = max(last, s.stageId())
+        if s.stageId() <= after_stage:
+            continue
+        todo, names = [app.operationGraphForStage(s.stageId())
+                       .rootCluster()], []
+        while todo:
+            c = todo.pop()
+            names.append(c.name())
+            ch = c.childClusters()
+            todo.extend(ch.apply(j) for j in range(ch.size()))
+        if any("Python" in n or "InPandas" in n or "InArrow" in n
+               for n in names):
+            tasks += s.numCompleteTasks()
+    return tasks, last
+
+
+def cpu(calls: int, seed: int) -> None:
+    import shutil
+    import tempfile
+
+    from textextract_spark.datagen import write_pages_parquet
+    from textextract_spark.pipeline import run_pipeline
+
+    root = os.path.dirname(os.path.abspath(__file__))
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)
+    work = tempfile.mkdtemp(prefix="bench-extra-cpu-")
+    pages = os.path.join(work, "pages.parquet")
+    write_pages_parquet(pages, 1600, seed=seed)
+    spark = _spark(len(os.sched_getaffinity(0)))
+    try:
+        last_stage = -1
+        for i in range(calls + 1):
+            out = os.path.join(work, f"out{i}")
+            before = _cpu_snapshot()
+            t0 = time.perf_counter()
+            run_pipeline(spark, pages, out, num_parts=16, chunks=2,
+                         run_id=f"cpu-{i}")
+            wall = time.perf_counter() - t0
+            row = _cpu_delta(before, _cpu_snapshot())
+            row["python_tasks"], last_stage = _python_tasks(spark,
+                                                            last_stage)
+            shutil.rmtree(out)
+            if i:  # call 0 is the untimed warm-up
+                print(json.dumps({"call": i, "seed": seed,
+                                  "wall_s": round(wall, 2), **row}),
+                      flush=True)
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
+    if mode == "cpu":
+        cpu(int(sys.argv[2]) if len(sys.argv) > 2 else 3,
+            int(sys.argv[3]) if len(sys.argv) > 3 else 3)
+        return
     sf_dir = (sys.argv[2] if len(sys.argv) > 2
               else os.environ.get("SPARK_GRAFT_SF_DIR",
                                   "/root/testdata/sf0.1"))

@@ -46,7 +46,10 @@ def main() -> None:
     ap.add_argument("--eval-path", default=None,
                     help="parquet of benchmark eval docs (text column) "
                          "for the decontamination stage of --curate")
-    ap.add_argument("--num-parts", type=int, default=64)
+    ap.add_argument("--num-parts", type=int, default=64,
+                    help="url-hash commit/lineage buckets (resume "
+                         "unit); the payload exchange runs "
+                         "min(num_parts, default parallelism) tasks")
     ap.add_argument("--n-salts", type=int, default=8)
     ap.add_argument("--chunks", type=int, default=4)
     ap.add_argument("--cores", default=None,

@@ -13,7 +13,10 @@ Design notes (north_rule):
     pmod(xxhash64(url), num_parts)`` is the checkpoint/lineage unit;
     ``salt`` (an independent url hash) splits each part_key across
     n_salts shuffle targets so a hot bucket cannot serialize a stage
-    (SURVEY.md §4 skew row).
+    (SURVEY.md §4 skew row). The payload exchange hashes (part_key,
+    salt) into min(num_parts, defaultParallelism) tasks: each chunk
+    extracts in one wave with at most one Python task per slot, since
+    every Python task pays a fixed worker set-up cost whatever its size.
   * Deterministic output: extracted ``text``/``spans``/``status`` are pure
     functions of (html bytes); only ``meta.ms`` (timing) varies run-to-run
     and it is excluded from identity checks.
@@ -76,16 +79,17 @@ def with_part_columns(df: DataFrame, num_parts: int = 64,
                       n_salts: int = 8) -> DataFrame:
     """Derive the url-hash part_key and salt columns (no physical
     repartition; extract_pages repartitions on both after its oversize
-    gate).
+    gate, into min(num_parts, defaultParallelism) tasks).
 
     part_key is the checkpoint/lineage unit (stable across cluster
     sizes); salt is an independent second url hash that splits each
     part_key across n_salts shuffle targets, so one hot bucket (small
     num_parts, or a host whose urls collide into one part_key) cannot
-    serialize a stage (SURVEY.md §7 hard part (b)). Both are functions
-    of url ONLY, so every crawl version of a url lands in the same task
-    (which is what makes the extractor's per-task exact-duplicate guard
-    in ``_extract_batches`` exact). On Iceberg this is hidden
+    serialize a stage (SURVEY.md §7 hard part (b)). Neither sets the
+    task count. Both are functions of url ONLY, so every crawl version
+    of a url lands in the same task (which is what makes the
+    extractor's per-task exact-duplicate guard in ``_extract_batches``
+    exact). On Iceberg this is hidden
     partitioning ``bucket(num_parts, url)``."""
     return (df.withColumn(
             "part_key",
@@ -134,8 +138,9 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # winner key, so the semi join keeps every copy. Every crawl of a url
     # lands in THIS task (part_key and salt are functions of url only), so
     # a per-task seen-set is an exact one-row-per-url dedup with no extra
-    # shuffle. Memory: tasks are sized by maxPartitionBytes (~128MB-1GB of
-    # payload); at ~34KB/doc that is <=~30k urls => a few MB of set.
+    # shuffle. Memory: a task holds its chunk's payload bytes / slots
+    # (one wave per chunk), so ``chunks`` is the lever for task size; at
+    # ~34KB/doc a 1GB task is ~30k urls => a few MB of set.
     seen_urls: set = set()
     for pdf in batches:
         mask = pdf["url"].isin(seen_urls) | pdf["url"].duplicated()
@@ -287,8 +292,13 @@ def extract_pages(pages: DataFrame, num_parts: int = 64,
             .withColumn("too_large", too_large)
             .withColumn("html", F.when(~too_large, F.col("html"))))
     # url-only keys: every crawl version of a url shares one task, which
-    # keeps the per-task duplicate guard exact (see with_part_columns)
-    df = df.repartition(num_parts, "part_key", "salt")
+    # keeps the per-task duplicate guard exact (see with_part_columns).
+    # The task count follows the slots, not num_parts: one wave per
+    # chunk, at most one Python task per slot. Each Python task pays a
+    # fixed worker set-up (importlib.invalidate_caches() over the pyspark
+    # zip alone is ~0.1 CPU-s) however few docs it carries.
+    tasks = min(num_parts, pages.sparkSession.sparkContext.defaultParallelism)
+    df = df.repartition(tasks, "part_key", "salt")
     # ship ONLY what the UDF reads — the raw crawl `text` column and the
     # salt never cross the JVM->Python boundary; `fmt` IS read: the
     # plan-level format gate drives UDF dispatch (north_rule), the

@@ -124,15 +124,18 @@ def main() -> None:
     spark.stop()
 
     giant_tail_ms = round(with_g["task_ms_max"] - base["task_ms_median"], 1)
+    combos = num_parts * n_salts
     out = f"""# BENCH/SKEW — task balance under adversarial skew
 
 Corpus: {meta['docs']} docs, ONE hot host carrying {meta['hot_docs']}
 ({100 * meta['hot_docs'] // meta['docs']}%) of them, {meta['giants']}
 near-cap ~6MB giant documents, {meta['over_cap']} over-cap (>8MB)
 documents. Pipeline: extract_pages(num_parts={num_parts},
-n_salts={n_salts}), compute time = sum of per-document extractor ms per
-task (excludes scan/shuffle I/O, which the giant payloads dominate far
-less than parse cost).
+n_salts={n_salts}) on local[8]: the payload exchange runs
+min(num_parts, defaultParallelism) = {base['tasks']} tasks, one per slot.
+Compute time = sum of per-document extractor ms per task (excludes
+scan/shuffle I/O, which the giant payloads dominate far less than parse
+cost).
 
 | metric | hot host only | + giants |
 |---|---|---|
@@ -147,10 +150,11 @@ less than parse cost).
 Reading: the hot host does NOT skew the partitioning — part_key (the
 checkpoint/commit unit) stays balanced because both part_key and salt
 hash the URL, not the host, so host heat spreads uniformly. The residual
-per-task spread is hash-clumping of (part_key, salt) combos into tasks,
-which amortizes across task waves (tasks >> cores). Giant documents add
-a bounded per-DOCUMENT tail (~{giant_tail_ms} ms over the median task
-here): no partitioning can split one document, so the mitigations are
+per-task spread is hash-clumping of the {combos} (part_key, salt) combos
+into tasks; each task averages {combos // base['tasks']} of them, so the
+clumping evens out within a task. Giant documents add a bounded
+per-DOCUMENT tail (~{giant_tail_ms} ms over the median task here): no
+partitioning can split one document, so the mitigations are
 the MAX_PAYLOAD_BYTES oversize gate (over-cap docs above never enter the
 shuffle or the Arrow boundary) and, at cluster scale, speculative
 execution. Regression-tested bounds: tests/test_pipeline.py::

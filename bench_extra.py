@@ -6,6 +6,7 @@ Usage:
     python bench_extra.py time  [sf_dir] [q1 q2 ...]   # noop timings
     python bench_extra.py plans [sf_dir] [out_dir] [q1 q2 ...]
     python bench_extra.py cpu   [calls] [seed]         # CPU split
+    python bench_extra.py bytes <table_dir>            # bytes by column
 
 `time` prints one JSON line {"queries": {name: best_sec}, "sf": ...}
 with best-of-N (default 2, $BENCH_EXTRA_REPS) after one untimed warm
@@ -21,7 +22,14 @@ compiler, GC, other) and the summed Python workers, plus the Python
 task count. CPU comes from this process tree's /proc/<pid>/stat and
 /proc/<pid>/task/*/stat; a JVM thread that exits during a call counts
 as "other". The task count is the completed tasks of the call's stages
-that run a Python operator (from Spark's status store).
+that run a Python operator (from Spark's status store). ``jit_compile_ms``
+is the JVM's total JIT compilation time spent during the call (the
+CompilationMXBean, read through py4j).
+
+`bytes` prints one JSON line for a ManifestTable directory: for each
+column of its live snapshots, the compressed and uncompressed bytes and
+the codecs, summed over every column chunk of every parquet footer
+(pyarrow only, no Spark), plus the table's rows, files and totals.
 """
 
 from __future__ import annotations
@@ -149,16 +157,19 @@ def cpu(calls: int, seed: int) -> None:
     pages = os.path.join(work, "pages.parquet")
     write_pages_parquet(pages, 1600, seed=seed)
     spark = _spark(len(os.sched_getaffinity(0)))
+    jit = (spark._jvm.java.lang.management.ManagementFactory
+           .getCompilationMXBean())
     try:
         last_stage = -1
         for i in range(calls + 1):
             out = os.path.join(work, f"out{i}")
-            before = _cpu_snapshot()
+            before, jit0 = _cpu_snapshot(), jit.getTotalCompilationTime()
             t0 = time.perf_counter()
             run_pipeline(spark, pages, out, num_parts=16, chunks=2,
                          run_id=f"cpu-{i}")
             wall = time.perf_counter() - t0
             row = _cpu_delta(before, _cpu_snapshot())
+            row["jit_compile_ms"] = jit.getTotalCompilationTime() - jit0
             row["python_tasks"], last_stage = _python_tasks(spark,
                                                             last_stage)
             shutil.rmtree(out)
@@ -171,8 +182,47 @@ def cpu(calls: int, seed: int) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def column_bytes(table_dir: str) -> dict:
+    """Compressed/uncompressed bytes and codecs per column of a
+    ManifestTable's live snapshots, from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    from textextract_spark.io.table import ManifestTable
+
+    if not os.path.isdir(table_dir):
+        raise SystemExit(f"no table directory {table_dir}")
+    cols: dict[str, dict] = {}
+    rows = files = 0
+    for snap in ManifestTable(table_dir).snapshot_dirs():
+        for base, _, names in os.walk(snap):
+            for name in names:
+                if not name.endswith(".parquet"):
+                    continue
+                md = pq.ParquetFile(os.path.join(base, name)).metadata
+                rows, files = rows + md.num_rows, files + 1
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    for c in range(rg.num_columns):
+                        ch = rg.column(c)
+                        col = cols.setdefault(ch.path_in_schema, {
+                            "compressed": 0, "uncompressed": 0,
+                            "codecs": set()})
+                        col["compressed"] += ch.total_compressed_size
+                        col["uncompressed"] += ch.total_uncompressed_size
+                        col["codecs"].add(ch.compression)
+    for col in cols.values():
+        col["codecs"] = sorted(col["codecs"])
+    return {"table": table_dir, "rows": rows, "files": files,
+            "compressed": sum(c["compressed"] for c in cols.values()),
+            "uncompressed": sum(c["uncompressed"] for c in cols.values()),
+            "columns": cols}
+
+
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
+    if mode == "bytes":
+        print(json.dumps(column_bytes(sys.argv[2])))
+        return
     if mode == "cpu":
         cpu(int(sys.argv[2]) if len(sys.argv) > 2 else 3,
             int(sys.argv[3]) if len(sys.argv) > 3 else 3)

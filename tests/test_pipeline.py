@@ -552,6 +552,77 @@ def test_compact_replace_partitions_bucket_aware(spark, tmp_path):
         mixed.compact(spark)
 
 
+def test_every_write_path_commits_zstd(spark, tmp_path):
+    """Every snapshot is zstd parquet, whichever write path committed it
+    (every column chunk's footer says so), and its rows read back as
+    written. A table that still holds a snappy snapshot, written the
+    way earlier versions wrote, reads and compacts with every row of
+    both snapshots."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from textextract_spark.io.table import ManifestTable
+
+    def docs(lo, hi):
+        return spark.createDataFrame(
+            [(f"u://{i}", "word " * i, [(0, i), (i, 2 * i)], i % 4)
+             for i in range(lo, hi)],
+            "url string, text string, "
+            "spans array<struct<start:int,end:int>>, b int")
+
+    def rows(df):
+        return sorted(tuple(r) for r in
+                      df.select("url", "text", "spans", "b").collect())
+
+    def codecs(tbl, sid):
+        files = glob.glob(os.path.join(tbl.path, f"snap-{sid}", "**",
+                                       "*.parquet"), recursive=True)
+        assert files, sid
+        out = set()
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            out |= {md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)}
+        return out
+
+    tbl = ManifestTable(str(tmp_path / "appended"))
+    sid = tbl.append(docs(0, 50).repartition(3), part_keys=[0])
+    assert codecs(tbl, sid) == {"ZSTD"}
+    assert rows(tbl.read(spark)) == rows(docs(0, 50))
+    tbl.append(docs(50, 80), part_keys=[1])
+    sid = tbl.compact(spark, target_files=2)              # append history
+    assert codecs(tbl, sid) == {"ZSTD"}
+    assert rows(tbl.read(spark)) == rows(docs(0, 80))
+    sid = tbl.overwrite(docs(100, 130))
+    assert codecs(tbl, sid) == {"ZSTD"}
+    assert rows(tbl.read(spark)) == rows(docs(100, 130))
+
+    keyed = ManifestTable(str(tmp_path / "keyed"))
+    sid = keyed.replace_partitions(docs(0, 40), "b", [0, 1, 2, 3])
+    assert codecs(keyed, sid) == {"ZSTD"}
+    new = docs(40, 60).filter(F.col("b") < 2)
+    sid = keyed.replace_partitions(new, "b", [0, 1])
+    assert codecs(keyed, sid) == {"ZSTD"}
+    want = rows(docs(0, 40).filter(F.col("b") >= 2).unionByName(new))
+    assert rows(keyed.read_keyed(spark, "b")) == want
+    sid = keyed.compact(spark, target_files=2)            # bucket-aware
+    assert codecs(keyed, sid) == {"ZSTD"}
+    assert rows(keyed.read_keyed(spark, "b")) == want
+
+    mixed = ManifestTable(str(tmp_path / "mixed"))
+    old = mixed._commit(docs(0, 30).write.mode("overwrite").parquet,
+                        part_keys=[0])
+    assert codecs(mixed, old) == {"SNAPPY"}
+    mixed.append(docs(30, 60), part_keys=[1])
+    assert rows(mixed.read(spark)) == rows(docs(0, 60))
+    sid = mixed.compact(spark, target_files=2)
+    assert codecs(mixed, sid) == {"ZSTD"}
+    assert rows(mixed.read(spark)) == rows(docs(0, 60))
+    assert mixed.committed_part_keys() == {0, 1}
+
+
 def test_resume_after_compaction(spark, corpus_dir, golden):
     """Maintenance between ingest waves: compacting the chunked output
     tables must not change a byte of data and must keep the resume

@@ -522,8 +522,11 @@ def test_one_set_of_spark_text_primitives():
 
 def test_one_commit_path():
     """Structural guard: every snapshot write publishes through
-    ManifestTable._commit, run_pipeline writes lineage in one place, and
-    both stream functions share one epoch sink."""
+    ManifestTable._commit, the package builds its one DataFrameWriter in
+    io/table.py's _writer (so no write path falls back to Spark's snappy
+    default), run_pipeline writes lineage in one place, and both stream
+    functions share one epoch sink."""
+    import ast
     import pathlib
     pkg = pathlib.Path(__file__).resolve().parents[1] / "textextract_spark"
 
@@ -531,6 +534,22 @@ def test_one_commit_path():
         text = (pkg / rel).read_text()
         return len(re.findall(r"(?<!def )\b" + pattern, text))
 
+    # a `.write` that is read, not called (`df.write`, not `gz.write(b)`)
+    def writer_reads(node):
+        called = {id(n.func) for n in ast.walk(node)
+                  if isinstance(n, ast.Call)}
+        return sum(isinstance(n, ast.Attribute) and n.attr == "write"
+                   and id(n) not in called for n in ast.walk(node))
+
+    writers = {}
+    for path in sorted(pkg.rglob("*.py")):
+        n = writer_reads(ast.parse(path.read_text()))
+        if n:
+            writers[str(path.relative_to(pkg))] = n
+    assert writers == {"io/table.py": 1}, writers
+    table = ast.parse((pkg / "io/table.py").read_text())
+    assert [f.name for f in table.body if isinstance(f, ast.FunctionDef)
+            and writer_reads(f)] == ["_writer"]
     assert calls("io/table.py", r"self\._publish\(") == 1
     assert calls("pipeline.py", r"lineage_metrics\(") == 1
     assert calls("pipeline.py", r"metrics_tbl\.append\(") == 1

@@ -20,6 +20,14 @@ manifests emulate the three Iceberg behaviors the pipeline depends on:
     covers; ``committed_part_keys()`` drives the rerun filter
     (``WHERE part_key NOT IN committed`` — SURVEY.md §4).
 
+Every snapshot is written by one writer, ``_writer``, as zstd parquet at
+the codec's default level. The codec is a table property, as Iceberg's
+``write.parquet.compression-codec`` (zstd by default since Iceberg 1.4),
+not a session conf, so every table committed here (``extracted``,
+``metrics``, ``curated``, the stream sink) gets it. Parquet records the
+codec per column chunk, so snappy snapshots committed by earlier versions
+stay readable next to zstd ones: read, resume and compact work over both.
+
 On a real cluster this module is replaced by
 ``df.writeTo("db.extracted").append()`` + an Iceberg checkpoints table;
 the pipeline only touches the 4 read/write methods, so the swap is local.
@@ -41,6 +49,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 _VERSION_RE = re.compile(r"_manifest-v(\d{8})\.json$")
+
+
+def _writer(df: DataFrame, partition_col: str | None = None):
+    """The one snapshot writer (codec: see the module docstring): the
+    ``write(dir)`` step ``_commit`` runs, partitioned by
+    ``partition_col`` if given."""
+    writer = df.write.mode("overwrite").option("compression", "zstd")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    return writer.parquet
 
 
 class CommitConflictError(RuntimeError):
@@ -142,8 +160,7 @@ class ManifestTable:
     def append(self, df: DataFrame, part_keys: list[int] | None = None,
                run_id: str | None = None) -> str:
         """Write df as a new snapshot; returns the snapshot id."""
-        return self._commit(df.write.mode("overwrite").parquet,
-                            part_keys=sorted(part_keys or []),
+        return self._commit(_writer(df), part_keys=sorted(part_keys or []),
                             run_id=run_id)
 
     def overwrite(self, df: DataFrame) -> str:
@@ -154,8 +171,7 @@ class ManifestTable:
         visible state (old snapshot dirs remain for time travel,
         unreferenced).
         """
-        return self._commit(df.write.mode("overwrite").parquet,
-                            replace=True)
+        return self._commit(_writer(df), replace=True)
 
     def replace_partitions(self, df: DataFrame, bucket_col: str,
                            buckets: list[int],
@@ -166,8 +182,7 @@ class ManifestTable:
         physically partitioned by bucket_col so readers prune to live
         bucket directories."""
         return self._commit(
-            df.write.mode("overwrite").partitionBy(bucket_col).parquet,
-            run_id=run_id,
+            _writer(df, bucket_col), run_id=run_id,
             replaces={bucket_col: sorted(int(b) for b in buckets)})
 
     def compact(self, spark: SparkSession, target_files: int = 8,
@@ -221,8 +236,7 @@ class ManifestTable:
                                        target_files, run_id)
         dirs = [os.path.join(self.path, s["dir"]) for s in snaps]
         return self._commit(
-            spark.read.parquet(*dirs).coalesce(target_files)
-            .write.mode("overwrite").parquet,
+            _writer(spark.read.parquet(*dirs).coalesce(target_files)),
             replace=True, base=base,
             part_keys=sorted({k for s in snaps for k in s["part_keys"]}),
             run_id=run_id,
@@ -244,8 +258,7 @@ class ManifestTable:
                           for b in s["replaces"][bucket_col]})
         live = self.read_keyed(spark, bucket_col)
         if live is not None:
-            write = (live.coalesce(target_files).write.mode("overwrite")
-                     .partitionBy(bucket_col).parquet)
+            write = _writer(live.coalesce(target_files), bucket_col)
         else:  # every owned bucket is empty: commit an empty snapshot
             write = functools.partial(os.makedirs, exist_ok=True)
         return self._commit(

@@ -7,6 +7,7 @@ Usage:
     python bench_extra.py plans [sf_dir] [out_dir] [q1 q2 ...]
     python bench_extra.py cpu   [calls] [seed]         # CPU split
     python bench_extra.py bytes <table_dir>            # bytes by column
+    python bench_extra.py charlm [sf_dir]              # char-LM split
 
 `time` prints one JSON line {"queries": {name: best_sec}, "sf": ...}
 with best-of-N (default 2, $BENCH_EXTRA_REPS) after one untimed warm
@@ -25,6 +26,16 @@ as "other". The task count is the completed tasks of the call's stages
 that run a Python operator (from Spark's status store). ``jit_compile_ms``
 is the JVM's total JIT compilation time spent during the call (the
 CompilationMXBean, read through py4j).
+
+`charlm` splits the char_lm_ppl driver row's two stages on the
+``documents`` table of ``sf_dir`` (default $SPARK_GRAFT_SF_DIR, else
+sf0.1) on ``local[$SPARK_GRAFT_CPUS or nproc]``. It prints one JSON
+line: the best-of-N (default 3, $BENCH_EXTRA_REPS) seconds and job
+count of ``char_lm_train`` on the lang='en' reference slice, called
+directly so the model memo is bypassed; the best-of-N seconds of
+score-only ``char_lm_perplexity(docs, ref, model=...)`` over every
+doc, run to a noop sink; and the reference doc and character counts.
+Each stage gets one untimed warm rep first.
 
 `bytes` prints one JSON line for a ManifestTable directory: for each
 column of its live snapshots, the compressed and uncompressed bytes and
@@ -182,6 +193,48 @@ def cpu(calls: int, seed: int) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def charlm(sf_dir: str, reps: int) -> None:
+    from pyspark.sql import functions as F
+
+    from textextract_spark.io.source import source
+    from textextract_spark.operators.textdata import (
+        PPL_REF_LANG, char_lm_perplexity, char_lm_train)
+
+    spark = _spark(os.environ.get("SPARK_GRAFT_CPUS",
+                                  str(len(os.sched_getaffinity(0)))))
+    sc = spark.sparkContext
+    docs = source(spark, sf_dir, "documents", spread=True).select(
+        "doc_id", "text", "lang")
+    ref = docs.filter(F.col("lang") == PPL_REF_LANG).select("text")
+    ref_docs, ref_chars = ref.select(
+        F.count("*"), F.sum(F.length("text"))).first()
+
+    def best(label, fn):
+        """(best seconds, jobs of the best rep) over reps timed calls
+        after one untimed warm call."""
+        runs = []
+        for r in range(reps + 1):
+            sc.setJobGroup(f"{label}:{r}", label)
+            t0 = time.perf_counter()
+            fn()
+            runs.append((time.perf_counter() - t0,
+                         len(sc.statusTracker().getJobIdsForGroup(
+                             f"{label}:{r}"))))
+        return min(runs[1:])
+
+    train_s, train_jobs = best("charlm-train", lambda: char_lm_train(ref))
+    model = char_lm_train(ref)
+    score_s, _ = best("charlm-score", lambda: char_lm_perplexity(
+        docs.select("doc_id", "text"), ref, model=model)
+        .write.mode("overwrite").format("noop").save())
+    print(json.dumps({"sf": sf_dir, "ref_docs": ref_docs,
+                      "ref_chars": ref_chars, "scored_docs": docs.count(),
+                      "train_s": round(train_s, 3),
+                      "train_jobs": train_jobs,
+                      "score_s": round(score_s, 3), "reps": reps}))
+    spark.stop()
+
+
 def column_bytes(table_dir: str) -> dict:
     """Compressed/uncompressed bytes and codecs per column of a
     ManifestTable's live snapshots, from the parquet footers."""
@@ -230,6 +283,9 @@ def main() -> None:
     sf_dir = (sys.argv[2] if len(sys.argv) > 2
               else os.environ.get("SPARK_GRAFT_SF_DIR",
                                   "/root/testdata/sf0.1"))
+    if mode == "charlm":
+        charlm(sf_dir, int(os.environ.get("BENCH_EXTRA_REPS", "3")))
+        return
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     import __spark_entry__ as entry_mod
     qmap = entry_mod.queries()

@@ -2452,6 +2452,110 @@ def test_char_lm_score_string_ids(spark):
     assert all(r["n_bigrams"] > 0 for r in rows.values())
 
 
+def _char_lm_train_explode(ref):
+    """Reference char-LM trainer: the per-character explode + hash agg
+    that char_lm_train replaced. One Spark row per reference bigram
+    string (Spark's split-by-char), counted and collected through the
+    same quantized log-prob expression."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from textextract_spark.operators.spark_text import code_points
+    from textextract_spark.operators.textdata import _lm_pad
+
+    chars = F.array_remove(F.split(F.col("__pad"), ""), "")
+    n = F.size(chars)
+    bg_counts = (_lm_pad(ref)
+                 .select(F.explode(F.zip_with(
+                     F.slice(chars, 1, n - 1), F.slice(chars, 2, n - 1),
+                     lambda a, b: F.concat(a, b))).alias("bg"))
+                 .groupBy("bg").agg(F.count("*").alias("bc")))
+    c1_counts = (bg_counts.groupBy(F.substring("bg", 1, 1).alias("c1"))
+                 .agg(F.sum("bc").alias("uc")))
+    v = bg_counts.select(F.countDistinct(F.substring("bg", 2, 1))
+                         .alias("v"))
+
+    def lpu(bc, uc):
+        return (F.round(F.log2((bc + 1) / (uc + F.col("v")))
+                        * 1_000_000, 0).cast("long").alias("lpu"))
+
+    zero = F.lit(0).cast("long")
+    pairs = {r["bg"]: r["lpu"] for r in (
+        bg_counts.withColumn("c1", F.substring("bg", 1, 1))
+        .join(c1_counts, "c1").crossJoin(v)
+        .select("bg", lpu(F.col("bc"), F.col("uc"))).collect())}
+    c1s = {r["c1"]: r["lpu"] for r in c1_counts.crossJoin(v).select(
+        "c1", lpu(zero, F.col("uc"))).collect()}
+    g_lpu = v.select(lpu(zero, zero)).first()["lpu"]
+
+    def table(keys, vals):
+        keys = np.array(keys, dtype=np.int64)
+        order = np.argsort(keys)
+        return keys[order], np.array(vals, dtype=np.int64)[order]
+
+    def pair_key(bg):
+        c1, c2 = code_points(bg).tolist()
+        return c1 << 21 | c2
+
+    pk, pv = table([pair_key(bg) for bg in pairs], list(pairs.values()))
+    c1k, c1v = table([ord(c) for c in c1s], list(c1s.values()))
+    return pk, pv, c1k, c1v, g_lpu
+
+
+def test_char_lm_train_matches_explode_reference(spark, sf_dir):
+    """char_lm_train counts bigrams in an Arrow kernel; all five model
+    outputs must equal the per-character explode reference's, bit for
+    bit, on the fixture's en docs, long extracted pages (mostly
+    non-ASCII), and astral/emoji, CJK, 'İ' (lowercases to two code
+    points), 'ǅ', combining marks, one-char and whitespace-only texts
+    mixed into Arrow batches with ASCII docs."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from textextract_spark.datagen import generate_pages, golden_rows
+    from textextract_spark.io.source import source
+    from textextract_spark.operators.textdata import char_lm_train
+
+    pages = golden_rows(generate_pages(40, seed=3))
+    odd = ["a", "Z", "é", "😀", " ", "   ", "\t\n ", "\u3000",
+           "İstanbul İİ", "ǅemal ǅ ǆ Ǆ", "e\u0301 a\u0308\u0323 n\u0303",
+           "\u0301", "𝐚𝐛𝐜 𝐚𝐛 😀😀 🏳️‍🌈 👍🏽",
+           "東京は日本の首都です。東京タワー", "mixed ASCII then 中文 and 😀",
+           "plain ascii text between the odd ones"]
+    frames = {
+        "sf_en": source(spark, sf_dir, "documents", spread=True)
+        .filter(F.col("lang") == "en").select("text"),
+        "pages": spark.createDataFrame(
+            [(p["text"],) for p in pages.values() if p["text"]],
+            "text string"),
+        "odd": spark.createDataFrame([(t,) for t in odd] * 3,
+                                     "text string").repartition(2),
+    }
+    for name, ref in frames.items():
+        got = char_lm_train(ref)
+        want = _char_lm_train_explode(ref)
+        assert len(got[0]) > 0, name
+        for i in range(4):
+            assert got[i].dtype == np.int64, (name, i)
+            assert np.array_equal(got[i], want[i]), (name, i)
+        assert got[4] == want[4] and isinstance(got[4], int), name
+
+
+def test_char_lm_train_empty_reference(spark):
+    """An empty (or all-empty-text) reference trains an empty model
+    with g_lpu 0 instead of dividing by V = 0 (Spark's ANSI mode raises
+    DIVIDE_BY_ZERO), and scoring against it still returns rows."""
+    from textextract_spark.operators.textdata import (
+        char_lm_perplexity, char_lm_train)
+
+    ref = spark.createDataFrame([("",), (None,)], "text string")
+    pk, pv, c1k, c1v, g_lpu = char_lm_train(ref)
+    assert (len(pk), len(pv), len(c1k), len(c1v), g_lpu) == (0, 0, 0, 0, 0)
+    docs = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
+    rows = char_lm_perplexity(docs, ref).collect()
+    assert [(r.doc_id, r.n_bigrams) for r in rows] == [(1, 3)]
+
+
 def test_media_memo_dedups_decode_work(monkeypatch):
     """The r7 dedup-before-decode memos must call the codec once per
     DISTINCT source per task and still emit one correct row per input

@@ -705,6 +705,35 @@ def test_run_pipeline_curate(spark, corpus_dir, golden):
     assert len(res2["curated"].snapshots()) == 1
 
 
+def test_run_pipeline_curate_nothing_kept(spark, tmp_path):
+    """A crawl of empty-body pages leaves no keep, so the perplexity
+    model trains on an empty reference. The curate run must still
+    commit one drop:extract row per page instead of dividing by the
+    model's zero vocabulary (Spark's ANSI mode raises DIVIDE_BY_ZERO)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from textextract_spark.datagen import PAGES_SCHEMA
+    from textextract_spark.pipeline import run_pipeline
+
+    urls = [f"https://empty.example/p/{i}" for i in range(6)]
+    pq.write_table(pa.table({
+        "url": urls,
+        "warc_ts": [dt.datetime(2024, 1, 1)] * 6,
+        "html": [b"<html><head></head><body></body></html>"] * 6,
+        "text": [""] * 6,
+        "lang": ["en"] * 6,
+    }, schema=PAGES_SCHEMA), str(tmp_path / "pages.parquet"))
+    res = run_pipeline(spark, str(tmp_path / "pages.parquet"),
+                       str(tmp_path / "out"), num_parts=4, chunks=1,
+                       run_id="e1", curate=True)
+    cur = {r.url: (r.decision, r.ppl_bucket, r.split)
+           for r in res["curated"].read(spark).collect()}
+    assert cur == {u: ("drop:extract", "-", "-") for u in urls}
+
+
 def test_curation_full_decisions(spark):
     """curation_decisions_full on planted cases: the neardup stages
     keep their verdicts, a keep sharing an exact 8-gram with the eval

@@ -309,6 +309,38 @@ def test_char_lm_ppl_model_rides_closure(spark, sf_dir):
     assert "Window" not in p and "SortMergeJoin" not in p
 
 
+def test_char_lm_train_counts_in_arrow(spark, sf_dir):
+    """The perplexity filter's TRAIN stage counts reference bigrams in
+    an Arrow kernel and sums the counts in one aggregation: every
+    execution it runs is free of Generate (the per-character explode
+    it replaced) and one of them is a MapInArrow feeding a
+    HashAggregate."""
+    from pyspark.sql import functions as F
+
+    from textextract_spark.io.source import source
+    from textextract_spark.operators import textdata
+
+    ss = spark._jsparkSession.sharedState().statusStore()
+
+    def plans():
+        lst = ss.executionsList()
+        return {lst.apply(i).executionId():
+                lst.apply(i).physicalPlanDescription()
+                for i in range(lst.size())}
+
+    before = set(plans())
+    ref = (source(spark, sf_dir, "documents", spread=True)
+           .filter(F.col("lang") == textdata.PPL_REF_LANG).select("text"))
+    assert len(textdata.char_lm_train(ref)[0])
+    ran = [p for i, p in plans().items() if i not in before]
+    assert ran, "training ran no SQL execution"
+    for p in ran:
+        assert "Generate" not in p, f"reference explode crept back:\n{p}"
+    assert any("MapInArrow" in p and "HashAggregate" in p
+               and p.index("HashAggregate") < p.index("MapInArrow")
+               for p in ran), "\n\n".join(ran)
+
+
 def test_bm25_plan_shape(spark, sf_dir):
     """BM25: term stats and corpus stats ride broadcast joins; the
     query-term filter sits BELOW the (doc_id, w) exchange so the

@@ -1385,50 +1385,89 @@ def _lm_pad(df: DataFrame) -> DataFrame:
                                           F.lit(" "))))
 
 
+def _pad_code_points(arr) -> tuple:
+    """(code points, per-doc lengths) of an Arrow string column of
+    ``__pad`` values, concatenated over the batch (the shared first step
+    of the char-LM train and score kernels). An all-ASCII batch is read
+    zero-copy from the UTF-8 data buffer, whose bytes ARE its code
+    points; otherwise each non-ASCII doc decodes through
+    spark_text.code_points, Spark's split-by-char semantics."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(arr)
+    bufs = arr.buffers()
+    off_dt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=off_dt)[
+        arr.offset: arr.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[offs[0]:offs[-1]]
+    offs = offs - offs[0]
+    # per-doc max byte (pads are >= 3 bytes, so reduceat segments are
+    # never empty)
+    seg_max = np.maximum.reduceat(data, offs[:-1])
+    if seg_max.max() < 128:
+        return data, offs[1:] - offs[:-1]
+    parts = [data[offs[i]:offs[i + 1]] if seg_max[i] < 128
+             else code_points(data[offs[i]:offs[i + 1]].tobytes()
+                              .decode("utf-8"))
+             for i in range(n)]
+    lens = np.fromiter((len(p) for p in parts), dtype=np.int64, count=n)
+    return np.concatenate(parts), lens  # uint32
+
+
+def _bigram_keys(cat, lens) -> tuple:
+    """(keys, mask) of every adjacent code-point pair in ``cat``: the
+    int64 key c1 << 21 | c2 (code points are < 2^21) and False on the
+    pairs that straddle two documents."""
+    import numpy as np
+
+    keys = cat[:-1].astype(np.int64) << 21 | cat[1:].astype(np.int64)
+    mask = np.ones(len(keys), dtype=bool)
+    mask[np.cumsum(lens)[:-1] - 1] = False
+    return keys, mask
+
+
 def char_lm_train(ref: DataFrame) -> tuple:
     """TRAIN stage of the CCNet-style perplexity filter, split from
-    scoring (r7): one explode + hash agg over the reference slice whose
-    output is vocabulary-bounded (observed distinct bigrams) — the
-    classic train-once/broadcast model build, the same build/query
-    split as similarity.label_centroids. Returns the numpy lookup
-    tables (pk, pv, c1k, c1v, g_lpu) that ride the scoring kernel's
-    closure: sorted int64 code-point pair keys (c1 << 21 | c2) ->
-    micro-unit log-probs, first-char fallback table, and the global
-    unseen-first-char default.
+    scoring (r7): an Arrow kernel counts each batch's code-point bigrams
+    (c1 << 21 | c2 keys, the scoring kernel's own) and one hash agg
+    sums them. The output is vocabulary-bounded (observed distinct
+    bigrams) — the classic train-once/broadcast model build, the same
+    build/query split as similarity.label_centroids. Returns the numpy
+    lookup tables (pk, pv, c1k, c1v, g_lpu) that ride the scoring
+    kernel's closure: sorted int64 code-point pair keys -> micro-unit
+    log-probs, first-char fallback table, and the global unseen-first-
+    char default. An empty reference gives empty tables and g_lpu 0.
 
     Every quantized log-prob is produced by the SAME Spark expression
     tree the r6 join emitted — the model is computed in Spark and
     collected, never re-derived in Python — so values are bit-equal
     cross-engine.
 
-    (r7 note: an Arrow/numpy bigram-histogram train pass was tried —
-    one batch-wide np.unique over code-point pair keys — and measured
-    SLOWER than this codegen explode+agg (3.4s vs 3.0s at 50k docs),
-    because the ref slice then crosses the Python boundary twice;
-    reverted, evidence kept here.)
+    Counting in the kernel replaced a per-character explode (one Spark
+    row per reference character through an interpreted zip_with) and
+    its lineage cut. On 4 cores, a warm train over 149 extracted
+    seed-3 pages (4.0M chars) went from 1.9-3.7 s and 10 jobs to
+    0.74-1.30 s and 3 jobs; `bench_extra.py charlm` (best of 6, twice)
+    read 0.92-0.93 -> 0.67-0.78 s at sf0.01 (218 ref docs) and
+    0.94 -> 0.76-0.80 s at sf0.1 (2,059), 10 jobs -> 4. (r7 had
+    measured a batch-wide np.unique train slower than the explode,
+    3.4 s vs 3.0 s at 50k docs on 32 cores, when its text crossed
+    into Python twice.)
     """
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import Window
 
-    def bigrams(df, keep=()):
-        chars = F.array_remove(F.split(F.col("__pad"), ""), "")
-        n = F.size(chars)
-        return df.select(
-            *keep,
-            F.explode(F.zip_with(
-                F.slice(chars, 1, n - 1),
-                F.slice(chars, 2, n - 1),
-                lambda a, b: F.concat(a, b))).alias("bg"))
-
-    ref_bg = bigrams(_lm_pad(ref))
-    # ONE training job feeding the three tiny model projections
-    # below — without it each collect re-runs the ref pass
-    bg_counts = materialize(
-        ref_bg.groupBy("bg").agg(F.count("*").alias("bc")), eager=True)
-    c1_counts = (bg_counts
-                 .groupBy(F.substring("bg", 1, 1).alias("c1"))
-                 .agg(F.sum("bc").alias("uc")))
-    v = bg_counts.select(
-        F.countDistinct(F.substring("bg", 2, 1)).alias("v"))
+    def count_kernel(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            keys, mask = _bigram_keys(*_pad_code_points(b.column(0)))
+            keys, cnt = np.unique(keys[mask], return_counts=True)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(keys, type=pa.int64()),
+                 pa.array(cnt, type=pa.int64())], names=["key", "cnt"])
 
     # per-bigram log-probs quantized to int64 MICRO-UNITS (r6 — the
     # dsir_doc_weights / lr_train pattern; integer sums are summation-
@@ -1437,51 +1476,40 @@ def char_lm_train(ref: DataFrame) -> tuple:
     # (bc, uc non-null), unseen bigram under a seen first char
     # (bc NULL -> coalesce 0), unseen first char (bc, uc both NULL).
     def lpu(bc, uc):
-        return (F.round(F.log2((bc + 1) / (uc + F.col("v")))
-                        * 1_000_000, 0).cast("long").alias("lpu"))
+        return F.round(F.log2((bc + 1) / (uc + F.col("v")))
+                       * 1_000_000, 0).cast("long")
 
-    pair_rows = (bg_counts
-                 .withColumn("c1", F.substring("bg", 1, 1))
-                 .join(c1_counts, "c1")
-                 .crossJoin(F.broadcast(v))
-                 .select("bg", lpu(F.col("bc"), F.col("uc"))))
+    # ONE query: V = distinct second chars and uc = sum(bc) per first
+    # char are windows over the vocabulary-bounded counts, so the
+    # counting pass runs once and no subplan is re-read. V's window
+    # puts every counted bigram in one partition, which the uc window
+    # then needs no exchange for. Every row carries the three
+    # projections; an empty reference has no row, so nothing divides
+    # by V = 0.
     zero = F.lit(0).cast("long")
-    c1_rows = (c1_counts.crossJoin(F.broadcast(v))
-               .select("c1", lpu(zero, F.col("uc"))))
-    g_row = v.select(lpu(zero, zero))
+    rows = (_lm_pad(ref).select("__pad")
+            .mapInArrow(count_kernel, schema="key long, cnt long")
+            .groupBy("key").agg(F.sum("cnt").alias("bc"))
+            .withColumn("v", F.size(F.collect_set(
+                F.col("key").bitwiseAND((1 << 21) - 1))
+                .over(Window.partitionBy())).cast("long"))
+            .withColumn("c1", F.shiftright("key", 21))
+            .withColumn("uc", F.sum("bc").over(Window.partitionBy("c1")))
+            .select("key", lpu(F.col("bc"), F.col("uc")), "c1",
+                    lpu(zero, F.col("uc")), lpu(zero, zero))
+            .collect())
 
-    # collect the vocabulary-bounded model (driver-held state, the
-    # MLlib shape) in ONE job and build the numpy lookup tables
-    model_rows = (
-        pair_rows.select(F.lit(0).alias("k"), F.col("bg").alias("key"),
-                         "lpu")
-        .unionByName(c1_rows.select(F.lit(1).alias("k"),
-                                    F.col("c1").alias("key"), "lpu"))
-        .unionByName(g_row.select(F.lit(2).alias("k"),
-                                  F.lit("").alias("key"), "lpu"))
-        .collect())
-    pair_map = {r["key"]: r["lpu"] for r in model_rows if r["k"] == 0}
-    c1_map = {r["key"]: r["lpu"] for r in model_rows if r["k"] == 1}
-    g_lpu = next((r["lpu"] for r in model_rows if r["k"] == 2), None)
-    if g_lpu is None:  # empty reference corpus: nothing will be scored
-        g_lpu = 0
+    # the vocabulary-bounded model is driver-held state (the MLlib
+    # shape) in sorted numpy lookup tables
+    def table(pairs):
+        keys = np.fromiter((k for k, _ in pairs), np.int64, len(pairs))
+        vals = np.fromiter((v for _, v in pairs), np.int64, len(pairs))
+        order = np.argsort(keys)
+        return keys[order], vals[order]
 
-    pk = np.empty(len(pair_map), dtype=np.int64)
-    pv = np.empty(len(pair_map), dtype=np.int64)
-    for i, (bg, val) in enumerate(pair_map.items()):
-        c1, c2 = code_points(bg).tolist()
-        pk[i] = c1 << 21 | c2
-        pv[i] = val
-    order = np.argsort(pk)
-    pk, pv = pk[order], pv[order]
-    c1k = np.empty(len(c1_map), dtype=np.int64)
-    c1v = np.empty(len(c1_map), dtype=np.int64)
-    for i, (c1, val) in enumerate(c1_map.items()):
-        c1k[i] = ord(c1)
-        c1v[i] = val
-    order = np.argsort(c1k)
-    c1k, c1v = c1k[order], c1v[order]
-    return pk, pv, c1k, c1v, int(g_lpu)
+    pk, pv = table([(r[0], r[1]) for r in rows])
+    c1k, c1v = table(list({r[2]: r[3] for r in rows}.items()))
+    return pk, pv, c1k, c1v, rows[0][4] if rows else 0
 
 
 def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
@@ -1494,14 +1522,15 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
     quality-partitioning pass a pretraining pipeline runs before
     mixture sampling.
 
-    Scale shape (10^12 docs): the TRAIN stage is one explode + hash agg
-    over the reference slice, but its OUTPUT is vocabulary-bounded
-    (observed distinct bigrams, <= V^2 rows) — a classic broadcast
-    model. Since r7 the model rides the SCORING UDF's closure (the
-    lang_trigram / lr_train broadcast shape) instead of two broadcast
-    joins over an exploded per-character row stream: the score pass is
-    ONE stateless Arrow-batched stage emitting (n_bigrams, sum_lpu) per
-    doc — zero shuffle, no explode of the corpus at all. Measured at
+    Scale shape (10^12 docs): the TRAIN stage is one Arrow counting
+    pass + hash agg over the reference slice (char_lm_train), and its
+    OUTPUT is vocabulary-bounded (observed distinct bigrams, <= V^2
+    rows) — a classic broadcast model. Since r7 the model rides the
+    SCORING UDF's closure (the lang_trigram / lr_train broadcast
+    shape) instead of two broadcast joins over an exploded
+    per-character row stream: the score pass is ONE stateless
+    Arrow-batched stage emitting (n_bigrams, sum_lpu) per doc — zero
+    shuffle, no explode of the corpus at all. Measured at
     sf1.0/local[32]: 6.8 s (join form, spread) -> ~1.5 s. The per-doc
     log-prob lookup is a numpy searchsorted over the sorted bigram-key
     table (O(len * log V) per doc, memory = observed bigrams only).
@@ -1530,8 +1559,6 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
         model = char_lm_train(ref)
     pk, pv, c1k, c1v, g_lpu = model
 
-    def key64(a, b):
-        return a.astype(np.int64) << 21 | b.astype(np.int64)
     def table_vals(keys, mask, tk, tv):
         """(values, hit-mask) of the sorted-key table lookup, 0 and
         False wherever mask is off or the key is absent — exact int64
@@ -1579,43 +1606,15 @@ def char_lm_perplexity(docs: DataFrame, ref: DataFrame,
                      pa.array([], type=pa.int64())],
                     schema=out_schema)
                 continue
-            arr = b.column(1)
-            bufs = arr.buffers()
-            off_dt = (np.int64 if pa.types.is_large_string(arr.type)
-                      else np.int32)
-            offs = np.frombuffer(bufs[1], dtype=off_dt)[
-                arr.offset: arr.offset + n + 1].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8)[
-                offs[0]:offs[-1]]
-            offs = offs - offs[0]
-            # per-doc max byte: ASCII docs' UTF-8 bytes equal their
-            # code points, no decode needed (pads are >= 3 bytes, so
-            # reduceat segments are never empty)
-            seg_max = np.maximum.reduceat(data, offs[:-1])
-            if seg_max.max() < 128:
-                cat = data
-                lens = offs[1:] - offs[:-1]
-            else:
-                parts = []
-                for i in range(n):
-                    seg = data[offs[i]:offs[i + 1]]
-                    parts.append(
-                        seg if seg_max[i] < 128
-                        else code_points(seg.tobytes().decode("utf-8")))
-                lens = np.fromiter((len(p) for p in parts),
-                                   dtype=np.int64, count=n)
-                cat = np.concatenate(parts)  # uint32
-            keys = key64(cat[:-1], cat[1:])
-            ends = np.cumsum(lens)
-            mask = np.ones(len(keys), dtype=bool)
-            mask[ends[:-1] - 1] = False  # pairs straddling documents
+            cat, lens = _pad_code_points(b.column(1))
+            keys, mask = _bigram_keys(cat, lens)
             vals, hit = table_vals(keys, mask, pk, pv)
             miss = mask & ~hit
             c1_vals, c1_hit = table_vals(cat[:-1].astype(np.int64),
                                          miss, c1k, c1v)
             vals = (vals + c1_vals
                     + np.where(miss & ~c1_hit, np.int64(g_lpu), 0))
-            starts = np.concatenate(([0], ends[:-1]))
+            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
             totals = np.add.reduceat(vals, starts)
             yield pa.RecordBatch.from_arrays(
                 [b.column(0),
